@@ -76,7 +76,7 @@ object Main {
           else graft.parse.Segmenter.sentencesWithMentions(p)
         }.toDF()
       }
-      println(s"[graft] mentions: ${mentions.count()}")
+      println(s"[graft] mentions: ${cp.rows("01_mentions")}")
     }
     var aliases: DataFrame = null
     if (stages("aliases")) {
@@ -88,7 +88,7 @@ object Main {
           .flatMap(p => p.aliasTarget.map(t => (p.uri, t)))
           .toDF("src", "dst")
       }
-      println(s"[graft] alias edges: ${aliases.count()}")
+      println(s"[graft] alias edges: ${cp.rows("02_aliases")}")
     }
     var canon: DataFrame = null
     if (stages("closure")) {
@@ -98,7 +98,7 @@ object Main {
         Redirects.transitiveClosureDoubling(
           if (aliases != null) aliases else spark.read.parquet(s"$outDir/stages/02_aliases"))
       }
-      println(s"[graft] canonical aliases: ${canon.count()}")
+      println(s"[graft] canonical aliases: ${cp.rows("03_closure")}")
     }
     if (stages("ner")) {
       // full ner-corpus chain (reference 01->03) as an operational
@@ -113,11 +113,11 @@ object Main {
         "http://graft.dev/ontology/Component")).toDF("subject", "object")
       val typeNames = Seq(("http://graft.dev/ontology/Component", "component"))
         .toDF("typeUri", "typeName")
-      val annotated = cp.runStage("05_ner_corpus") {
+      cp.runStage("05_ner_corpus") {
         NerCorpus.run(typedFiles, dict, entityTypes, typeNames,
           onParse = _ => parsedCounter.add(1))
       }
-      println(s"[graft] ner annotated sentences: ${annotated.count()}")
+      println(s"[graft] ner annotated sentences: ${cp.rows("05_ner_corpus")}")
     }
     if (stages("triples")) {
       val m = if (mentions != null) mentions
@@ -149,7 +149,7 @@ object Main {
       if (opts.get("bucket-triples").contains("true"))
         TripleMaterialize.writeBucketed(
           triples.select(col("subj"), col("pred"), col("obj")), "graft_triples_bucketed")
-      println(s"[graft] triples: ${triples.count()}")
+      println(s"[graft] triples: ${cp.rows("04_triples")}")
     }
     if (stages("priors")) {
       // entity-importance stage: PageRank over the materialized triple
@@ -157,11 +157,11 @@ object Main {
       // (its top ranks ARE the hot-key list for Skew.saltedJoin) and
       // most-common-sense disambiguation
       val t = spark.read.parquet(s"$outDir/triples")
-      val pr = cp.runStage("06_priors") {
+      cp.runStage("06_priors") {
         TopicGraph.pageRank(t.select(col("subj").as("src"), col("obj").as("dst")))
           .select(col("node").as("entity"), col("rank").as("pagerank"))
       }
-      println(s"[graft] priors: ${pr.count()} ranked entities")
+      println(s"[graft] priors: ${cp.rows("06_priors")} ranked entities")
     }
     if (stages("dedup")) {
       // curation stage: the corpus's persistent SIGNATURE INDEX (sign
@@ -190,7 +190,7 @@ object Main {
               .otherwise(0).as("keep"))
       }
       val kept = keep.filter(col("keep") === 1).count()
-      println(s"[graft] dedup: ${keep.count()} docs, $kept kept")
+      println(s"[graft] dedup: ${cp.rows("08_keep_list")} docs, $kept kept")
     }
     println(s"[graft] metrics: ${metrics.report()}")
     spark.stop()

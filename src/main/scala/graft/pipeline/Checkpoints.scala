@@ -1,7 +1,9 @@
 package graft.pipeline
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 /**
@@ -15,9 +17,10 @@ import java.nio.file.{Files, Paths}
  * recomputing everything"). Here every stage writes a partitioned
  * parquet snapshot (Iceberg `writeTo(...).append()` + snapshot-id on a
  * cluster — identical call shape) plus a _MANIFEST with row count and
- * per-partition lineage; `runStage` skips stages whose snapshot is
- * already committed, so a killed pipeline resumes from the last
- * complete stage.
+ * lineage (rows per written file); `runStage` skips stages whose
+ * snapshot is already committed, so a killed pipeline resumes from the
+ * last complete stage. Both come from the footers of the files just
+ * written, so a commit runs no Spark job beyond the write's own.
  */
 final class Checkpoints(spark: SparkSession, baseDir: String) {
 
@@ -36,13 +39,33 @@ final class Checkpoints(spark: SparkSession, baseDir: String) {
       m.startsWith("{") && m.trim.endsWith("}") && m.contains("\"rows\"")
     }
 
+  /** The `"rows":…,"files":…,"lineage":[…]` fields of a manifest for a
+    * just-written snapshot directory: rows per data file, read from the
+    * parquet footers on the driver (no Spark job), and their total. */
+  private def rowRecord(dir: String): String = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(dir)
+    val files = path.getFileSystem(conf).listStatus(path).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+      .map { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try st.getPath.getName -> reader.getRecordCount finally reader.close()
+      }
+    val lineage = files.map { case (f, n) => s"""{"file":"$f","rows":$n}""" }
+    s""""rows":${files.map(_._2).sum},"files":${files.length},""" +
+      s""""lineage":[${lineage.mkString(",")}]"""
+  }
+
   /**
    * Run a stage: if committed, reload the snapshot (no recompute); else
-   * compute, write, record per-partition counts, commit the manifest
+   * compute, write, record rows per written file, commit the manifest
    * last via temp-file + atomic rename (`Files.move(..., ATOMIC_MOVE)`)
    * — a crash mid-commit leaves either no manifest or a complete one,
    * never a truncated record that `isCommitted` would trust (Iceberg
-   * snapshots give the same guarantee transactionally).
+   * snapshots give the same guarantee transactionally). The snapshot is
+   * read back with the computed schema, so the commit infers nothing.
    */
   def runStage(name: String)(compute: => DataFrame): DataFrame = {
     if (isCommitted(name)) {
@@ -50,24 +73,19 @@ final class Checkpoints(spark: SparkSession, baseDir: String) {
     } else {
       val df = compute
       df.write.mode("overwrite").parquet(stageDir(name))
-      val persisted = spark.read.parquet(stageDir(name))
-      // per-partition lineage: rows per spark partition of the snapshot
-      val counts = persisted
-        .groupBy(spark_partition_id().as("partition"))
-        .agg(count(lit(1)).as("rows"))
-        .collect()
-        .map(r => s"""{"partition":${r.getInt(0)},"rows":${r.getLong(1)}}""")
-      val total = counts.length
-      val rows = persisted.count()
-      Files.createDirectories(Paths.get(stageDir(name)))
       val tmp = Paths.get(s"${stageDir(name)}/_MANIFEST.tmp")
-      Files.writeString(tmp,
-        s"""{"stage":"$name","rows":$rows,"partitions":$total,
-           |"lineage":[${counts.mkString(",")}]}""".stripMargin)
+      Files.writeString(tmp, s"""{"stage":"$name",${rowRecord(stageDir(name))}}""")
       Files.move(tmp, manifest(name),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      persisted
+      spark.read.schema(df.schema).parquet(stageDir(name))
     }
+  }
+
+  /** Row count of a committed stage, from its manifest (no Spark job). */
+  def rows(name: String): Long = {
+    require(isCommitted(name), s"checkpoint stage '$name' is not committed")
+    val m = Files.readString(manifest(name))
+    """"rows":(\d+)""".r.findFirstMatchIn(m).get.group(1).toLong
   }
 
   /** Names of committed stages (resume inspection). */
@@ -183,10 +201,9 @@ final class Checkpoints(spark: SparkSession, baseDir: String) {
     }
     val df = compute
     df.write.mode("overwrite").parquet(versionDir(name, v))
-    val persisted = spark.read.parquet(versionDir(name, v))
-    val rows = persisted.count()
     val tmp = Paths.get(s"${versionDir(name, v)}/_VMANIFEST.tmp")
-    Files.writeString(tmp, s"""{"stage":"$name","version":$v,"rows":$rows}""")
+    Files.writeString(tmp,
+      s"""{"stage":"$name","version":$v,${rowRecord(versionDir(name, v))}}""")
     Files.move(tmp, vManifest(name, v),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     swingHead(name, v)

@@ -184,8 +184,9 @@ object Redirects {
    * every pointer has jumped 2^k hops, so `maxRounds` rounds resolve
    * chains up to 2^maxRounds long with O(|V| log depth) total join work
    * where the per-hop loop does O(|V| · depth). Cycle members never
-   * reach a terminal and are dropped by the final anti-join — the same
-   * output contract as [[transitiveClosure]] (equivalence tested).
+   * reach a terminal and are dropped — the same output contract as
+   * [[transitiveClosure]] (equivalence tested). Every round is one
+   * [[Loop.materialize]], so the self-join plan stays flat.
    */
   def transitiveClosureDoubling(edges: DataFrame, maxRounds: Int = 16,
       localThreshold: Long = 2000000L): DataFrame = {
@@ -200,44 +201,47 @@ object Redirects {
         case None => ()
       }
     }
-    var f = e.select(col("src"), col("dst").as("cur")).persist(lvl)
-    var prev: DataFrame = f
+    // f: one row per pointer, (src, cur, done) with done = cur is a
+    // terminal (no outgoing edge). A done row never moves again, so
+    // each round jumps only the live rows, and the round's
+    // materialized row count IS its moved-row count — no extra action.
+    val (f0, _) = Loop.materialize(
+      e.join(e.select(col("src").as("dst"), lit(false).as("done")).distinct(),
+          Seq("dst"), "left_outer")
+        .select(col("src"), col("dst").as("cur"), coalesce(col("done"), lit(true)).as("done")))
+    val parts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val checkpoints = scala.collection.mutable.ArrayBuffer(f0)
+    var f = f0
+    var live = f0.filter(!col("done"))
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
-      val jumped = f.as("a")
-        .join(f.as("b"), col("a.cur") === col("b.src"), "left_outer")
-        .select(col("a.src").as("src"),
-          coalesce(col("b.cur"), col("a.cur")).as("cur"),
-          col("b.cur").isNotNull.as("_moved"))
-        .persist(lvl)
+      // every live row's cur is an alias source, so the inner join finds
+      // its 2^round-hop target; the result inherits that target's flag
+      val (jumped, moved) = Loop.materialize(live.as("a")
+        .join(f.as("b"), col("a.cur") === col("b.src"))
+        .select(col("a.src").as("src"), col("b.cur").as("cur"), col("b.done").as("done")))
+      checkpoints += jumped
+      // f stays a flat union of round checkpoints: settled rows of the
+      // earlier rounds plus this round's jumped rows. A broadcast join
+      // streams f, its bigger side, so without the coalesce every round
+      // would double the partition count of the next
+      f = f.filter(col("done")).unionByName(jumped).coalesce(parts)
+      live = jumped.filter(!col("done"))
+      round += 1
       // converged when nothing moved. Rows inside a cycle move forever,
       // so a cyclic graph runs all maxRounds — bounded, and each round
       // is one |V|-row self-join (cheap at alias-graph sizes); their
-      // rows are dropped by the final anti-join regardless.
-      val moved = jumped.filter(col("_moved")).count()
-      // the previous level's cache is superseded the moment `jumped` is
-      // materialized — unpersist it so a long-running session doesn't
-      // accumulate one cached RDD per round
-      if (prev ne null) prev.unpersist(false)
-      prev = jumped
-      f = jumped.drop("_moved")
-      // lazy: the next round's moved-count (or the final anti-join's
-      // checkpoint) materializes it — saves one job per lineage cut
-      if (round % 4 == 3) f = f.localCheckpoint(eager = false)
-      round += 1
+      // rows never settle and are dropped below regardless.
       converged = moved == 0
     }
-    // settled: jump target has no outgoing edge (terminal); cycle
-    // members still point at an alias source and are dropped. The
-    // result is eagerly checkpointed (it is alias-graph-sized, orders
-    // of magnitude under the corpus) so every loop cache can be freed
+    // settled: jump target is a terminal; cycle members and chains
+    // longer than 2^maxRounds are dropped. The (alias-graph-sized)
+    // result is materialized so every round checkpoint can be freed
     // here instead of leaking until the caller drops the result.
-    val out = f.join(e.select(col("src").as("cur")).distinct(), Seq("cur"), "left_anti")
-      .select(col("src"), col("cur").as("root"))
-      .distinct()
-      .localCheckpoint(true)
-    if (prev ne null) prev.unpersist(false)
+    val (out, _) = Loop.materialize(
+      f.filter(col("done")).select(col("src"), col("cur").as("root")).distinct())
+    checkpoints.foreach(Loop.release)
     e.unpersist(false)
     out
   }

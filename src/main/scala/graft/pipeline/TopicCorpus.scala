@@ -90,10 +90,10 @@ object TopicCorpus {
       abstracts: DataFrame, roots: DataFrame, outDir: String): Map[String, Long] = {
     val cp = new Checkpoints(spark, s"$outDir/stages")
     val topics = cp.runStage("01_degrees") { nonTrivialTopics(edges) }
-    val grounded = cp.runStage("02_grounded") {
+    cp.runStage("02_grounded") {
       groundedTopics(topics, grounding, abstracts)
     }
-    val ancestry = cp.runStage("05_ancestry") {
+    cp.runStage("05_ancestry") {
       TopicGraph.groundedAncestry(edges, roots, maxDepth = 5)
     }
     val corpus = cp.runStage("06_abstracts") {
@@ -109,10 +109,10 @@ object TopicCorpus {
       pred = "http://graft.dev/ontology#corpus")
       .write.mode("overwrite").text(s"$outDir/topics_nt")
     val counters = Map(
-      "topics" -> topics.count(),
-      "grounded" -> grounded.count(),
-      "ancestry" -> ancestry.count(),
-      "corpus" -> corpus.count())
+      "topics" -> cp.rows("01_degrees"),
+      "grounded" -> cp.rows("02_grounded"),
+      "ancestry" -> cp.rows("05_ancestry"),
+      "corpus" -> cp.rows("06_abstracts"))
     corpus.unpersist(false) // both sinks written; don't leak into the session
     counters
   }

@@ -36,9 +36,10 @@ object TopicGraph {
   /**
    * Bounded BFS ancestry with path accumulation and cycle filtering —
    * the unrolled 5-level chain of topic-corpus/05_build_grounded_ancestry
-   * .pig:48-135, expressed as a driver loop (one shuffle join per level,
-   * localCheckpoint per level to cut lineage, exactly Pig's
-   * one-job-per-level). Output: (node, root, depth, path) for every
+   * .pig:48-135, expressed as a driver loop (one join per level, one
+   * [[Loop.materialize]] per level to cut lineage, exactly Pig's
+   * one-job-per-level; an empty level stops the walk early). Output:
+   * (node, root, depth, path) for every
    * node reachable DOWN from `roots` within `maxDepth` hops, path =
    * '/'-joined root..node, loops removed by NoLoopInPath semantics
    * (last element vs prefix).
@@ -57,8 +58,8 @@ object TopicGraph {
   def groundedAncestry(edges: DataFrame, roots: DataFrame, maxDepth: Int = 5,
       dedupFrontier: Boolean = true): DataFrame = {
     // edges: (src=narrower/child, dst=broader/parent); walk parent->child
-    val down = edges.select(col("dst").as("parent"), col("src").as("child"))
-      .distinct().localCheckpoint(true)
+    val (down, _) = Loop.materialize(
+      edges.select(col("dst").as("parent"), col("src").as("child")).distinct())
     var frontier = roots.select(
       col("root").as("node"),
       col("root"),
@@ -66,7 +67,9 @@ object TopicGraph {
       col("root").as("path"))
     var acc = frontier
     var depth = 0
-    while (depth < maxDepth) {
+    var reached = 1L
+    // an empty level ends the walk: every deeper level would be empty too
+    while (depth < maxDepth && reached > 0) {
       val stepped = frontier.as("f")
         .join(down.as("e"), col("f.node") === col("e.parent"), "inner")
         .select(
@@ -79,12 +82,13 @@ object TopicGraph {
         .filter(!array_contains(
           slice(split(col("path"), "/"), lit(1), size(split(col("path"), "/")) - 1),
           element_at(split(col("path"), "/"), -1)))
-      val next = (if (dedupFrontier) {
+      val (next, n) = Loop.materialize(if (dedupFrontier) {
         // keep one (lexicographically-first) path per (node, root)
         stepped.groupBy(col("node"), col("root"), col("depth"))
           .agg(min(col("path")).as("path"))
           .select(col("node"), col("root"), col("depth"), col("path"))
-      } else stepped).localCheckpoint(true)
+      } else stepped)
+      reached = n
       acc = acc.unionByName(next)
       frontier = next
       depth += 1
@@ -426,15 +430,17 @@ object TopicGraph {
    * at 1.0 every iteration (asserted in PipelineSpec).
    *
    * Scale shape (100 TB corpus, billions of edges):
-   *  - `edgesDeg` (edges ⋈ out-degree) is computed ONCE and persisted;
+   *  - `edgesDeg` (edges ⋈ out-degree) is computed ONCE and materialized;
    *    every iteration reuses it, so the loop costs exactly one
    *    rank-side shuffle per iteration (the dst aggregation).
    *  - the dangling-rank total folds in via a BROADCAST 1-row
    *    aggregate (crossJoin(broadcast(...))) — no driver collect
    *    inside the loop.
-   *  - per-iteration persist + unpersist-previous; `localCheckpoint`
-   *    every 4 iterations truncates the plan (same discipline as
-   *    `connectedComponents`; cluster runs snapshot via
+   *  - every iteration is one [[Loop.materialize]]: the rank relation
+   *    comes back as a flat checkpoint with its exact row count, so
+   *    the next iteration's plan does not nest the previous one and
+   *    the planner sizes its joins from real statistics; the superseded
+   *    ranks are released at once (cluster runs snapshot via
    *    `Checkpoints.runStage`).
    *  - entity graphs are tiny next to the corpus that produced them,
    *    so below `localThreshold` edges the loop is a driver problem
@@ -484,22 +490,19 @@ object TopicGraph {
       // mass then comes from a filter+sum over the rank relation itself
       // (a V-vs-V anti-join per iteration otherwise — at billions of
       // nodes that join is the loop's whole shuffle budget)
-      val nodes = e.select(col("src").as("node"))
+      val (nodes, nNodes) = Loop.materialize(e.select(col("src").as("node"))
         .unionByName(e.select(col("dst").as("node")))
         .distinct()
         .join(e.select(col("src").as("node")).distinct()
           .withColumn("hasOut", lit(true)), Seq("node"), "left_outer")
-        .select(col("node"), coalesce(col("hasOut"), lit(false)).as("hasOut"))
-        .persist(lvl)
-      val n = nodes.count().toDouble
+        .select(col("node"), coalesce(col("hasOut"), lit(false)).as("hasOut")))
+      val n = nNodes.toDouble
       val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       // constant across iterations: each edge tagged with its source's
-      // out-degree, hash-partitioned on src by the groupBy above
-      val edgesDeg = e.join(outdeg.withColumnRenamed("node", "src"), Seq("src"))
-        .persist(lvl)
-      edgesDeg.count()
-      var ranks = nodes.withColumn("rank", lit(1.0 / n)).persist(lvl)
-      ranks.count()
+      // out-degree
+      val (edgesDeg, _) = Loop.materialize(
+        e.join(outdeg.withColumnRenamed("node", "src"), Seq("src")))
+      var ranks = nodes.withColumn("rank", lit(1.0 / n))
       var it = 0
       while (it < iters) {
         val contrib = edgesDeg
@@ -510,24 +513,19 @@ object TopicGraph {
         // aggregate rides broadcast, never the driver
         val dang = ranks.filter(!col("hasOut"))
           .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
-        val stepped = nodes
+        val (stepped, _) = Loop.materialize(nodes
           .join(contrib, Seq("node"), "left_outer")
           .crossJoin(broadcast(dang))
           .select(col("node"), col("hasOut"),
             (lit((1 - damping) / n) + lit(damping) *
-              (coalesce(col("in_sum"), lit(0.0)) + col("dang") / n)).as("rank"))
-          .persist(lvl)
+              (coalesce(col("in_sum"), lit(0.0)) + col("dang") / n)).as("rank")))
+        if (it > 0) Loop.release(ranks)
+        ranks = stepped
         it += 1
-        // lazy checkpoint: the count() below materializes it — one job
-        val next = if (it % 4 == 0) stepped.localCheckpoint(eager = false) else stepped
-        next.count()
-        ranks.unpersist(false)
-        ranks = if (next ne stepped) { stepped.unpersist(false); next } else next
       }
-      val out = ranks.select(col("node"), col("rank")).localCheckpoint(true)
-      ranks.unpersist(false)
-      edgesDeg.unpersist(false)
-      nodes.unpersist(false)
+      val out = ranks.select(col("node"), col("rank"))
+      Loop.release(edgesDeg)
+      if (iters > 0) Loop.release(nodes) // else the output still reads it
       e.unpersist(false)
       out
     } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
@@ -646,7 +644,7 @@ object TopicGraph {
    * Same scale discipline as [[pageRank]]: edges tagged ONCE with
    * source out-degree, per-iteration dangling mass from a filter+sum
    * over the rank relation (never a V-vs-V anti-join), 1-row
-   * aggregates ride broadcast, every-4th-iteration localCheckpoint,
+   * aggregates ride broadcast, one [[Loop.materialize]] per iteration,
    * driver fast path below `localThreshold` edges with the distributed
    * loop spec-pinned value-equal. Deliberately NOT folded into
    * [[pageRank]] (uniform = seeds-everywhere mathematically) because
@@ -677,22 +675,19 @@ object TopicGraph {
         .distinct()
         .join(e.select(col("src").as("node")).distinct()
           .withColumn("hasOut", lit(true)), Seq("node"), "left_outer")
-      val nodes = nodes0
+      val (nodes, _) = Loop.materialize(nodes0
         .join(sd.withColumn("isSeed", lit(true)), Seq("node"), "left_outer")
         .select(col("node"), coalesce(col("hasOut"), lit(false)).as("hasOut"),
-          coalesce(col("isSeed"), lit(false)).as("isSeed"))
-        .persist(lvl)
+          coalesce(col("isSeed"), lit(false)).as("isSeed")))
       val nSeeds = nodes.filter(col("isSeed")).count()
       require(nSeeds > 0, "personalizedPageRank: no seed is a graph node")
       // per-node restart mass m: 1/|S| on seeds, 0 elsewhere — the one
       // constant the whole loop re-reads
       val m = when(col("isSeed"), lit(1.0 / nSeeds)).otherwise(lit(0.0))
       val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      val edgesDeg = e.join(outdeg.withColumnRenamed("node", "src"), Seq("src"))
-        .persist(lvl)
-      edgesDeg.count()
-      var ranks = nodes.withColumn("rank", m).persist(lvl)
-      ranks.count()
+      val (edgesDeg, _) = Loop.materialize(
+        e.join(outdeg.withColumnRenamed("node", "src"), Seq("src")))
+      var ranks = nodes.withColumn("rank", m)
       var it = 0
       while (it < iters) {
         val contrib = edgesDeg
@@ -701,24 +696,19 @@ object TopicGraph {
           .groupBy(col("node")).agg(sum(col("c")).as("in_sum"))
         val dang = ranks.filter(!col("hasOut"))
           .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
-        val stepped = nodes
+        val (stepped, _) = Loop.materialize(nodes
           .join(contrib, Seq("node"), "left_outer")
           .crossJoin(broadcast(dang))
           .select(col("node"), col("hasOut"), col("isSeed"),
             (lit(1 - damping) * m + lit(damping) *
-              (coalesce(col("in_sum"), lit(0.0)) + col("dang") * m)).as("rank"))
-          .persist(lvl)
+              (coalesce(col("in_sum"), lit(0.0)) + col("dang") * m)).as("rank")))
+        if (it > 0) Loop.release(ranks)
+        ranks = stepped
         it += 1
-        // lazy checkpoint: the count() below materializes it — one job
-        val next = if (it % 4 == 0) stepped.localCheckpoint(eager = false) else stepped
-        next.count()
-        ranks.unpersist(false)
-        ranks = if (next ne stepped) { stepped.unpersist(false); next } else next
       }
-      val out = ranks.select(col("node"), col("rank")).localCheckpoint(true)
-      ranks.unpersist(false)
-      edgesDeg.unpersist(false)
-      nodes.unpersist(false)
+      val out = ranks.select(col("node"), col("rank"))
+      Loop.release(edgesDeg)
+      if (iters > 0) Loop.release(nodes) // else the output still reads it
       e.unpersist(false)
       out
     } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
@@ -778,9 +768,10 @@ object TopicGraph {
    * Frontier iteration: layer k+1 = (frontier ⋈ edges) minus visited —
    * first touch IS the shortest hop count, so the anti-join against
    * the visited set doubles as the min. Rounds = seed eccentricity;
-   * every round's frontier is localCheckpoint'd (iterative-plan
-   * discipline) and the per-round shuffle carries (node, dist) ids
-   * only. Cycles terminate naturally (a revisit is anti-joined away).
+   * every round's frontier is one [[Loop.materialize]] (flat plan,
+   * exact statistics: the planner picks broadcast or shuffle joins)
+   * and the per-round shuffle carries (node, dist) ids only. Cycles
+   * terminate naturally (a revisit is anti-joined away).
    * Driver fast path below `localThreshold` edges (BFS at small
    * scale is pure scheduling latency), distributed loop spec-pinned
    * value-equal.
@@ -800,51 +791,28 @@ object TopicGraph {
       e.unpersist(false)
       return out
     }
-    // Broadcast gate in ROWS, known EXACTLY each round from the layer
-    // counts (no estimator guesswork): frontier/visited rows are
-    // (id, int) pairs, so 4M rows is ~64 MB framed — far under the
-    // broadcast cap, and the same judgment AQE would make if the
-    // checkpointed relations carried statistics (they do not: a
-    // LogicalRDD defaults to sizeInBytes = MAX, which is why the
-    // planner never found these broadcasts itself).
-    val bcastRows = 4000000L
-    var dist = sd.select(col("node"), lit(0).as("dist")).localCheckpoint(true)
+    var (dist, frontierCount) = Loop.materialize(sd.select(col("node"), lit(0).as("dist")))
     var frontier = dist
-    var frontierCount = dist.count()
-    var distCount = frontierCount
     var layer = 0
     var layersSinceCompact = 0
     while (frontierCount > 0) {
       layer += 1
-      // Per-round plan, small-frontier regime (the common one: BFS
-      // frontiers are a sliver of V on a high-diameter graph): the
-      // frontier BROADCASTS into the expansion join, so the persisted
-      // edge relation is probed in place — never shuffled, never
-      // sorted; the visited set broadcasts into the anti-join, which
-      // then runs map-side BEFORE the distinct so duplicate hits die
-      // before the round's one exchange. Measured on the forced-
-      // distributed 10x leg (1M edges, ecc≈200): the old plan
-      // sort-merge-joined the full edge relation EVERY round — ~2.4
-      // s/round, 533 s total; this shape is one cached-edge scan +
-      // one tiny exchange per round. Above `bcastRows` the round
-      // falls back to the shuffle plan (distinct first, then the
-      // anti-join shuffles each candidate once) — the 100 TB shape
-      // when a frontier outgrows a broadcast.
-      val expanded =
-        (if (frontierCount <= bcastRows) broadcast(frontier) else frontier)
-          .join(e, frontier("node") === e("src"))
-          .select(col("dst").as("node"))
-      val next =
-        (if (distCount <= bcastRows)
-          expanded.join(broadcast(dist), Seq("node"), "left_anti").distinct()
-        else
-          expanded.distinct().join(dist, Seq("node"), "left_anti"))
-          .select(col("node"), lit(layer).as("dist"))
-          .localCheckpoint(eager = false) // LAZY: the count() below is
-      // the materializing action — one job per layer where the eager
-      // checkpoint + count pair cost two identical passes
-      frontierCount = next.count()
-      distCount += frontierCount
+      // Each layer is one materialization whose counts the planner
+      // reads as exact statistics: while the frontier and the visited
+      // set are small (the common case: BFS frontiers are a sliver of
+      // V on a high-diameter graph) both broadcast, so the persisted
+      // edge relation is probed in place (never shuffled, never
+      // sorted) and the anti-join runs map-side BEFORE the distinct,
+      // leaving one tiny exchange per round. Measured on the forced-
+      // distributed 10x leg (1M edges, ecc≈200): a sort-merge join of
+      // the full edge relation every round cost ~2.4 s/round, 533 s
+      // total. A frontier too big to broadcast gets the shuffle plan.
+      val (next, n) = Loop.materialize(frontier
+        .join(e, frontier("node") === e("src"))
+        .select(col("dst").as("node"))
+        .join(dist, Seq("node"), "left_anti").distinct()
+        .select(col("node"), lit(layer).as("dist")))
+      frontierCount = n
       dist = dist.unionByName(next)
       frontier = next
       // COMPACT the visited set every 8 layers: the anti-join above
@@ -856,7 +824,7 @@ object TopicGraph {
       // BFS trade a long-path graph actually wants.
       layersSinceCompact += 1
       if (layersSinceCompact == 8 && frontierCount > 0) {
-        dist = dist.localCheckpoint(true)
+        dist = Loop.materialize(dist)._1
         layersSinceCompact = 0
       }
     }
@@ -1664,15 +1632,17 @@ object TopicGraph {
             (coalesce(col("as_"), lit(0.0)) / col("at")).as("auth"))
           .localCheckpoint(true)
         it += 1
-        auth.unpersist(false)
-        if (hub != null) hub.unpersist(false)
+        // both superseded checkpoints are read by nothing now: newHub
+        // was stored inside the job that built `stepped`
+        Loop.release(auth)
+        if (hub != null) Loop.release(hub)
         hub = newHub
         auth = stepped
       }
       val out = hub.join(auth, Seq("node"))
         .select(col("node"), col("hub"), col("auth")).localCheckpoint(true)
-      hub.unpersist(false)
-      auth.unpersist(false)
+      Loop.release(hub)
+      Loop.release(auth)
       nodes.unpersist(false)
       e.unpersist(false)
       out

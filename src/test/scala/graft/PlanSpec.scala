@@ -373,4 +373,52 @@ class PlanSpec extends AnyFunSuite {
     assert(deser == 1, s"expected 1 DeserializeToObject, got $deser:\n$p")
     assert(mapEl == 0, s"counting MapElements crept back into the stage:\n$p")
   }
+
+  /** Executed-plan string lengths of the queries `body` runs. The
+    * listener hears of them asynchronously, in order, so a marked query
+    * run last flushes it. */
+  private def planLengths(body: => Unit): Seq[Int] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val marker = "plan_guard_flush"
+    val lengths = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit = {
+        val p = qe.executedPlan.toString
+        if (p.contains(marker)) flushed.countDown() else lengths.add(p.length)
+      }
+      def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.range(1).toDF(marker).collect()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    assert(!lengths.isEmpty)
+    lengths.toArray(Array.empty[Integer]).map(_.intValue).toSeq
+  }
+
+  test("distributed graph loops keep a flat plan: 5 rounds stay under 50k plan chars") {
+    import graft.pipeline.{Redirects, TopicGraph}
+    import spark.implicits._
+    val limit = 50000
+    // a two-level fan-out graph, so every iteration shuffles real rows
+    val edges = (0 until 40).flatMap(i => Seq((s"n$i", s"n${(i + 1) % 40}"),
+      (s"n$i", s"h${i % 5}"))).toDF("src", "dst")
+    val pr = planLengths(
+      TopicGraph.pageRank(edges, iters = 5, localThreshold = 0).collect())
+    assert(pr.max < limit, s"pageRank plan chars per query: $pr")
+    // a 6-node chain: 5 layers reach its end
+    val chain = (0 until 5).map(i => (s"c$i", s"c${i + 1}")).toDF("src", "dst")
+    val bfs = planLengths(TopicGraph.hopDistance(chain, Seq("c0").toDF("node"),
+      localThreshold = 0).collect())
+    assert(bfs.max < limit, s"hopDistance plan chars per query: $bfs")
+    // a 100-long chain: 5 doubling rounds leave it unresolved, all run
+    val deep = (0 until 100).map(i => (s"d$i", s"d${i + 1}")).toDF("src", "dst")
+    val dbl = planLengths(Redirects.transitiveClosureDoubling(deep, maxRounds = 5,
+      localThreshold = 0).collect())
+    assert(dbl.max < limit, s"transitiveClosureDoubling plan chars per query: $dbl")
+  }
 }

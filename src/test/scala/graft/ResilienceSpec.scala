@@ -124,6 +124,58 @@ class ResilienceSpec extends AnyFunSuite {
     assert(manifest.contains("\"lineage\""))
   }
 
+  test("manifest rows equal count() and the lineage sum; an empty stage records rows: 0") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-rows").toString
+    val cp = new Checkpoints(spark, dir)
+    def manifest(stage: String) = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$dir/$stage/_MANIFEST"))
+    def field(m: String, f: String) =
+      ("\"" + f + "\":(\\d+)").r.findAllMatchIn(m).map(_.group(1).toLong).toSeq
+    val full = cp.runStage("full") {
+      spark.range(0, 1000, 1, 4).filter(col("id") % 3 =!= 0).withColumn("v", col("id") * 2)
+    }
+    val m = manifest("full")
+    val rows = field(m, "rows")
+    // the first "rows" is the stage total, the rest are per-file lineage
+    assert(rows.head == full.count() && rows.head == 666L)
+    assert(rows.tail.nonEmpty && rows.tail.sum == rows.head, m)
+    assert(cp.rows("full") == 666L)
+    val empty = cp.runStage("empty") { spark.range(0, 10).filter(col("id") < 0).toDF() }
+    assert(manifest("empty").contains("\"rows\":0") && cp.rows("empty") == 0L)
+    assert(empty.count() == 0L && empty.columns.toSeq == Seq("id"))
+  }
+
+  test("a stage commit starts no Spark job after the write's own jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-jobs").toString
+    def stage = spark.range(0, 2000, 1, 4).withColumn("k", col("id") % 7)
+      .groupBy("k").agg(count(lit(1)).as("n"))
+    /** Jobs started by `body`; a marked no-op job flushes the listener. */
+    def jobsDuring(body: => Unit): Int = {
+      val jobs = new AtomicInteger(0)
+      val flushed = new java.util.concurrent.CountDownLatch(1)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("graft.flush") != null)) flushed.countDown()
+          else jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      try {
+        body
+        sc.setLocalProperty("graft.flush", "1")
+        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.flush", null)
+        assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      } finally sc.removeSparkListener(listener)
+      jobs.get()
+    }
+    val writeOnly = jobsDuring(stage.write.mode("overwrite").parquet(s"$dir/plain"))
+    val committed = jobsDuring(new Checkpoints(spark, dir).runStage("s")(stage))
+    assert(writeOnly > 0 && committed == writeOnly,
+      s"commit ran $committed jobs, the write alone $writeOnly")
+    assert(new Checkpoints(spark, dir).rows("s") == 7L)
+  }
+
   test("a truncated manifest reads as uncommitted and the stage recomputes") {
     // a crash mid-commit (or a non-atomic copy from an older writer)
     // must never let resume trust a garbage lineage record
