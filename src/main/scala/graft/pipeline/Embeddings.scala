@@ -148,7 +148,7 @@ object Embeddings {
     var eOut = init("o")
 
     // ---- synchronous full-batch epochs ----
-    for (_ <- 1 to epochs) {
+    for (epoch <- 1 to epochs) {
       val dots = triples
         .join(eIn.select(col("node").as("c"), col("k"), col("v").as("vc")),
           Seq("c"))
@@ -176,13 +176,13 @@ object Embeddings {
           // intermediate exact (the sourceKl discipline)
           .agg(sum(col("gm").cast("decimal(38,0)") * col("vo")).as("s"))
       }
-      // LAZY epoch tables (plans truncated all the same): their result
-      // stages are computed — and persisted — inside the NEXT epoch's
-      // eager g job, dropping the two per-epoch persist jobs, and the
-      // FINAL epoch's out-table — which nothing consumes (only eIn is
-      // returned) — never runs its apply/persist pass at all (its
-      // gradFor shuffle stages still execute at plan-construction time
-      // under AQE; the join+clamp+store of the full table does not).
+      // LAZY epoch tables (plans truncated all the same): under AQE
+      // their shuffle stages run when the table is built, and only their
+      // result stages are computed — and persisted — inside the NEXT
+      // epoch's eager g job, dropping the two per-epoch persist jobs.
+      // The FINAL epoch's out-table is not built at all: nothing
+      // consumes it (only eIn is returned), and building it would still
+      // run its gradient join and aggregate shuffles.
       def applyGrad(e: DataFrame, grad: DataFrame): DataFrame =
         e.join(grad, Seq("node", "k"), "left_outer")
           .select(col("node"), col("k"),
@@ -192,9 +192,8 @@ object Embeddings {
               .as("v"))
           .localCheckpoint(eager = false)
       val newIn = applyGrad(eIn, gradFor("in"))
-      val newOut = applyGrad(eOut, gradFor("out"))
+      if (epoch < epochs) eOut = applyGrad(eOut, gradFor("out")) // reads the old eIn
       eIn = newIn
-      eOut = newOut
     }
     eIn.select(col("node"), col("k"), col("v").as("v_fp"))
   }

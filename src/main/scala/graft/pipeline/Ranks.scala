@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
  * ADAPTIVE: below `singlePartThreshold` rows the one-task window IS
  * the right plan (the relation fits one task by construction and the
  * two-phase machinery costs a checkpoint + a driver read), so the
- * helper counts the (checkpointed) input once and picks — the same
+ * helper counts the input once, in the job that materializes it, and picks — the same
  * judgment as the graph loops' `localThreshold` driver fast paths,
  * with the distributed path spec-pinned value-equal.
  */
@@ -51,16 +51,15 @@ private[graft] object Ranks {
   def withPrefixSumCounted(df: DataFrame, orderCol: String, weight: Column,
       out: String, singlePartThreshold: Long = 4000000L): (DataFrame, Long) = {
     import org.apache.spark.sql.expressions.Window
-    val ck = df.localCheckpoint(eager = false)
-    val n = ck.count() // materializes the checkpoint — one job
+    val (ck, n, _) = Loop.materialize(df)
     val res = if (n <= singlePartThreshold) {
       val w = Window.orderBy(col(orderCol).asc)
         .rowsBetween(Window.unboundedPreceding, -1)
       ck.withColumn(out, coalesce(sum(weight).over(w), lit(0L)))
     } else {
-      val p = ck.repartitionByRange(col(orderCol))
-        .withColumn("_pp_pid", spark_partition_id())
-        .localCheckpoint(true)
+      val (p, _, _) = Loop.materialize(ck.repartitionByRange(col(orderCol))
+        .withColumn("_pp_pid", spark_partition_id()))
+      Loop.release(ck)
       val partTotals = p.groupBy(col("_pp_pid"))
         .agg(sum(weight).as("_pp_w"))
         .collect()

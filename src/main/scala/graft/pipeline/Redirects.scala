@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /**
@@ -11,16 +11,19 @@ import org.apache.spark.sql.functions._
  * the north rule from the reference's one-hop resolution (§2.10.2) to
  * an iterative self-join transitive closure with cycle guard.
  *
- * Scale notes: each iteration is one shuffle join on `dst`; the frontier
- * is persisted and materialized by the fixpoint `count` (on a cluster:
- * an Iceberg snapshot checkpoint) to cut lineage — without it the plan
- * doubles per iteration and the driver chokes on plan size long before
- * data is the problem. persist+count is ONE job per level where
- * eager-localCheckpoint+isEmpty was two; at small alias-graph sizes the
- * closure is scheduling-latency-bound, not data-bound, so job count is
- * the cost that matters. The edge list (alias graph) is orders of
- * magnitude smaller than the corpus, so on a cluster the final
- * application of the closure to the corpus is a broadcast join.
+ * Scale notes: every round of the distributed loops is one
+ * [[Loop.materialize]] — one job that cuts the lineage (without it the
+ * plan doubles per round and the driver chokes on plan size long
+ * before data is the problem) and returns the round's exact row count,
+ * which is the loop's convergence test, so no round pays a second
+ * action; at small alias-graph sizes the closure is
+ * scheduling-latency-bound, not data-bound, so job count is the cost
+ * that matters. The closures keep their rounds until their
+ * materialized result is stored and then free them all; cycleMembers
+ * frees each round as soon as the next one is stored. The edge list
+ * (alias graph) is orders of magnitude smaller than the corpus, so on
+ * a cluster the final application of the closure to the corpus is a
+ * broadcast join.
  */
 object Redirects {
 
@@ -46,8 +49,7 @@ object Redirects {
    */
   def transitiveClosure(edges: DataFrame, maxDepth: Int = 16,
       localThreshold: Long = 2000000L): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (e, nEdges, _) = Loop.materialize(edges.select(col("src"), col("dst")).distinct())
     // Adaptive fast path: alias graphs are orders of magnitude smaller
     // than the corpus; below the threshold, a FUNCTIONAL graph (at most
     // one successor per node — what single-#ALIAS-declaration corpora
@@ -56,63 +58,38 @@ object Redirects {
     // a node's reachable-terminal set depends on the path taken), so
     // non-functional graphs fall through to the distributed loop. Same
     // output contract incl. the maxDepth cap (equivalence tested).
-    if (e.count() <= localThreshold) {
+    if (nEdges <= localThreshold) {
       resolveLocalFunctional(e, maxDepth.toLong) match {
         case Some(out) =>
-          e.unpersist(false) // collected; the local result reads no cache
+          Loop.release(e) // collected; the local result reads no checkpoint
           return out
         case None => () // non-functional: fall through to the loop
       }
     }
-    // seed: every edge, path = [src] (nodes already visited)
-    var frontier = e.select(col("src"), col("dst"), array(col("src")).as("path"))
-    val cachedLevels = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var settled: DataFrame = null
-    var depth = 0
-    var done = false
-    while (depth < maxDepth && !done) {
-      val step = frontier.as("f")
-        .join(e.as("n"), col("f.dst") === col("n.src"), "left_outer")
-        .select(
-          col("f.src").as("src"),
-          col("f.dst").as("cur"),
-          col("n.dst").as("next"),
-          col("f.path").as("path"))
-      // settled: cur is not an alias source -> cur is the root
-      val newSettled = step.filter(col("next").isNull)
-        .select(col("src"), col("cur").as("root"))
-      settled = if (settled == null) newSettled else settled.unionByName(newSettled)
-      // continue: visit cur, drop cycles (cur already on the path)
-      val cached = step.filter(col("next").isNotNull)
-        .filter(!array_contains(col("path"), col("cur")))
-        .select(
-          col("src"),
-          col("next").as("dst"),
-          concat(col("path"), array(col("cur"))).as("path"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cachedLevels += cached
-      depth += 1
-      // persist stops recomputation but the logical plan still nests one
-      // level per iteration; truncate it with a real checkpoint every
-      // 4 levels so a deep closure can't grow an unplannable tree
-      // (checkpoint blocks are auto-freed by the ContextCleaner once
-      // unreferenced)
-      // lazy checkpoint: the fixpoint count below materializes it (one
-      // job on every depth, where the eager form cost two on each 4th)
-      frontier = if (depth % 4 == 0) cached.localCheckpoint(eager = false) else cached
-      done = frontier.count() == 0
+    // Round 0 is every edge, live: a row (src, cur, path) stands on cur
+    // with path = the nodes visited before it. Each round walks the
+    // previous round's live rows one hop: a row whose cur has no
+    // successor settles (path = NULL, cur = its root) and is written in
+    // that round only, and a row whose cur is already on its path is a
+    // cycle and is dropped. The first empty round ends the walk.
+    val rounds = scala.collection.mutable.ArrayBuffer(
+      e.select(col("src"), col("dst").as("cur"), array(col("src")).as("path")))
+    var rows = 1L
+    while (rounds.size <= maxDepth && rows > 0) {
+      val (next, n, _) = Loop.materialize(rounds.last.filter(col("path").isNotNull).as("f")
+        .join(e.as("n"), col("f.cur") === col("n.src"), "left_outer")
+        .filter(col("n.dst").isNull || !array_contains(col("f.path"), col("f.cur")))
+        .select(col("f.src").as("src"), coalesce(col("n.dst"), col("f.cur")).as("cur"),
+          when(col("n.dst").isNotNull, concat(col("f.path"), array(col("f.cur")))).as("path")))
+      rounds += next
+      rows = n
     }
-    // the settled plan reads every level's cache, so materialize the
-    // (alias-graph-sized) result ONCE, then release all loop caches —
-    // previously each level's persist leaked into the session for the
-    // app lifetime. Post-call persisted delta: one checkpointed result,
-    // independent of depth. (localCheckpoint blocks are executor-local,
-    // not fault-tolerant: a multi-hour cluster run should write the
-    // closure through a reliable stage snapshot instead —
-    // Checkpoints.runStage — and resume from it.)
-    val out = settled.distinct().localCheckpoint(true)
-    cachedLevels.foreach(_.unpersist(false))
-    e.unpersist(false)
+    // rows still live at the depth cap never settled and are dropped.
+    // The (alias-graph-sized) result is materialized so that every round
+    // can be freed here.
+    val (out, _, _) = Loop.materialize(rounds.map(_.filter(col("path").isNull))
+      .reduce(_ unionByName _).select(col("src"), col("cur").as("root")).distinct())
+    (e +: rounds.tail).foreach(Loop.release)
     out
   }
 
@@ -167,14 +144,9 @@ object Redirects {
         case _ => None
       }
     }
-    val spark = e.sparkSession
     val t = e.schema.fields(0).dataType
-    Some(spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        settled.toSeq.map { case (s, r) => org.apache.spark.sql.Row(s, r) }, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("src", t),
-        org.apache.spark.sql.types.StructField("root", t)))))
+    Some(TopicGraph.localFrame(e.sparkSession,
+      settled.toSeq.map { case (s, r) => Row(s, r) }, "src" -> t, "root" -> t))
   }
 
   /**
@@ -190,14 +162,13 @@ object Redirects {
    */
   def transitiveClosureDoubling(edges: DataFrame, maxRounds: Int = 16,
       localThreshold: Long = 2000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
+    val (e, nEdges, _) = Loop.materialize(edges.select(col("src"), col("dst")).distinct())
     // same adaptive driver fast path as transitiveClosure (alias graphs
     // are orders of magnitude under the corpus); hop cap = 2^maxRounds,
     // matching what `maxRounds` doubling rounds can resolve
-    if (e.count() <= localThreshold) {
+    if (nEdges <= localThreshold) {
       resolveLocalFunctional(e, 1L << math.min(maxRounds, 62)) match {
-        case Some(out) => e.unpersist(false); return out
+        case Some(out) => Loop.release(e); return out
         case None => ()
       }
     }
@@ -205,7 +176,7 @@ object Redirects {
     // terminal (no outgoing edge). A done row never moves again, so
     // each round jumps only the live rows, and the round's
     // materialized row count IS its moved-row count — no extra action.
-    val (f0, _) = Loop.materialize(
+    val (f0, _, _) = Loop.materialize(
       e.join(e.select(col("src").as("dst"), lit(false).as("done")).distinct(),
           Seq("dst"), "left_outer")
         .select(col("src"), col("dst").as("cur"), coalesce(col("done"), lit(true)).as("done")))
@@ -218,7 +189,7 @@ object Redirects {
     while (!converged && round < maxRounds) {
       // every live row's cur is an alias source, so the inner join finds
       // its 2^round-hop target; the result inherits that target's flag
-      val (jumped, moved) = Loop.materialize(live.as("a")
+      val (jumped, moved, _) = Loop.materialize(live.as("a")
         .join(f.as("b"), col("a.cur") === col("b.src"))
         .select(col("a.src").as("src"), col("b.cur").as("cur"), col("b.done").as("done")))
       checkpoints += jumped
@@ -239,10 +210,9 @@ object Redirects {
     // longer than 2^maxRounds are dropped. The (alias-graph-sized)
     // result is materialized so every round checkpoint can be freed
     // here instead of leaking until the caller drops the result.
-    val (out, _) = Loop.materialize(
+    val (out, _, _) = Loop.materialize(
       f.filter(col("done")).select(col("src"), col("cur").as("root")).distinct())
-    checkpoints.foreach(Loop.release)
-    e.unpersist(false)
+    (e +: checkpoints).foreach(Loop.release)
     out
   }
 
@@ -277,14 +247,9 @@ object Redirects {
    */
   def cycleMembers(edges: DataFrame,
       localThreshold: Long = 4000000L): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint(true)
-    // the driver twin compares collected values as boxed Any — an
-    // Integer src never equals a Long dst there, while the SQL join
-    // casts; demand one id type so the paths cannot silently diverge
-    require(e.schema.fields(0).dataType == e.schema.fields(1).dataType,
-      s"cycleMembers: src/dst types differ (${e.schema.fields(0).dataType} " +
-        s"vs ${e.schema.fields(1).dataType}); cast the edge columns to one id type")
-    val n = e.count()
+    val sel = edges.select(col("src"), col("dst"))
+    TopicGraph.requireOneIdType("cycleMembers", sel)
+    val (e, n, _) = Loop.materialize(sel.distinct())
     if (n > 0) {
       val maxOut = e.groupBy(col("src")).agg(count(lit(1)).as("c"))
         .agg(max(col("c"))).head().getLong(0)
@@ -295,7 +260,11 @@ object Redirects {
     // ⌈log₂n⌉ checkpointed self-joins are pure scheduling latency at
     // small n, and a functional graph's cycles fall out of one linear
     // color walk over the collected edge list
-    if (n <= localThreshold) return cycleMembersLocal(e)
+    if (n <= localThreshold) {
+      val out = cycleMembersLocal(e)
+      Loop.release(e)
+      return out
+    }
     var f = e
     var span = 1L
     var fCount = n
@@ -303,13 +272,13 @@ object Redirects {
       // strict span > |srcs| exit (see doc); the survivor count doubles
       // as the emptiness check and stops the common acyclic-forest case
       // after ~max-chain-length rounds instead of all ceil(log2 n) of
-      // them. LAZY checkpoint + count = ONE job per round (the eager
-      // checkpoint + limit(1) probe pair cost two); the checkpoint
-      // still cuts the plan every round — the self-join doubles it.
-      f = f.as("a").join(f.as("b"), col("a.dst") === col("b.src"))
-        .select(col("a.src").as("src"), col("b.dst").as("dst"))
-        .localCheckpoint(eager = false)
-      fCount = f.count()
+      // them. One materialization per round: it cuts the plan (the
+      // self-join doubles it) and its count is the survivor count.
+      val (next, c, _) = Loop.materialize(f.as("a").join(f.as("b"), col("a.dst") === col("b.src"))
+        .select(col("a.src").as("src"), col("b.dst").as("dst")))
+      Loop.release(f)
+      f = next
+      fCount = c
       span *= 2
     }
     f.select(col("dst").as("node")).distinct()
@@ -347,11 +316,6 @@ object Redirects {
         path.foreach(v => color(v) = 2)
       }
     }
-    val nodeType = e.schema.fields(1).dataType
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        onCycle.toSeq.map(org.apache.spark.sql.Row(_)), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType))))
+    TopicGraph.localFrame(spark, onCycle.toSeq.map(Row(_)), "node" -> e.schema.fields(1).dataType)
   }
 }

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 
 /**
  * Topic-graph computations — re-realization of examples/topic-corpus/
@@ -58,7 +59,7 @@ object TopicGraph {
   def groundedAncestry(edges: DataFrame, roots: DataFrame, maxDepth: Int = 5,
       dedupFrontier: Boolean = true): DataFrame = {
     // edges: (src=narrower/child, dst=broader/parent); walk parent->child
-    val (down, _) = Loop.materialize(
+    val (down, _, _) = Loop.materialize(
       edges.select(col("dst").as("parent"), col("src").as("child")).distinct())
     var frontier = roots.select(
       col("root").as("node"),
@@ -82,7 +83,7 @@ object TopicGraph {
         .filter(!array_contains(
           slice(split(col("path"), "/"), lit(1), size(split(col("path"), "/")) - 1),
           element_at(split(col("path"), "/"), -1)))
-      val (next, n) = Loop.materialize(if (dedupFrontier) {
+      val (next, n, _) = Loop.materialize(if (dedupFrontier) {
         // keep one (lexicographically-first) path per (node, root)
         stepped.groupBy(col("node"), col("root"), col("depth"))
           .agg(min(col("path")).as("path"))
@@ -112,30 +113,23 @@ object TopicGraph {
    */
   def connectedComponents(edges: DataFrame, maxIter: Int = 30,
       localThreshold: Long = 4000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges.select(col("src"), col("dst"))
+    val (sym, nEdges, _) = Loop.materialize(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist(lvl)
-    val nEdges = sym.count()
+      .distinct())
     // Adaptive: below the threshold the component graph is a DRIVER
     // problem — the distributed loop pays seconds of scheduling per
     // round for microseconds of union-find work (measured 16s for a
     // 3,209-edge graph vs 0.1s collected); dedup-component graphs are
     // tiny next to the corpus by construction. The contraction path
     // handles the genuinely large case (tested with localThreshold = 0).
-    if (nEdges <= localThreshold) {
-      val out = ccLocal(sym)
-      sym.unpersist(false)
-      return out
-    }
-    val out = ccContraction(sym, maxIter, nEdges)
-    sym.unpersist(false)
+    val out = if (nEdges <= localThreshold) ccLocal(sym) else ccContraction(sym, maxIter)
+    Loop.release(sym)
     out
   }
 
   /**
    * Alternating large-star/small-star rounds over the (already
-   * symmetrized, persisted) edge relation until the edge multiset is
+   * symmetrized, materialized) edge relation until the edge multiset is
    * stable, then read the labels off the final stars.
    *
    *  - large-star(u): every neighbor v > u rewires to
@@ -143,22 +137,15 @@ object TopicGraph {
    *  - small-star(u), over edges oriented max→min: every (smaller)
    *    neighbor AND u itself rewire to m(u) — halving pointer depth.
    *
-   * Convergence = identical (count, XOR of xxhash64(src,dst)) two
-   * rounds running: exact at a fixpoint, and a false positive needs a
-   * 64-bit hash collision across differing sets (~2⁻⁶⁴ — the check
-   * stays one tiny aggregate instead of a per-round anti-join; XOR,
-   * not sum, because ANSI mode makes a Σ of 2⁶³-scale hashes a runtime
-   * overflow). At the fixpoint
-   * E is a forest of stars (paper, Thm 3.1): every non-minimum node
-   * has exactly the edge (v, component-min), so labels = E itself plus
-   * (center, center) rows.
+   * Convergence = identical (count, fingerprint) two rounds running,
+   * both read off the round's own [[Loop.materialize]]: exact at a
+   * fixpoint, and a false positive needs a 64-bit hash collision
+   * across differing sets (~2⁻⁶⁴ — no per-round anti-join). At the
+   * fixpoint E is a forest of stars (paper, Thm 3.1): every
+   * non-minimum node has exactly the edge (v, component-min), so
+   * labels = E itself plus (center, center) rows.
    */
-  private[graft] def ccContraction(sym: DataFrame, maxIter: Int,
-      nEdges: Long): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sess = sym.sparkSession
-    val parts = math.max(1, math.min(
-      sess.sparkContext.defaultParallelism, (nEdges / 50000L).toInt))
+  private[graft] def ccContraction(sym: DataFrame, maxIter: Int): DataFrame = {
     // Exchange discipline inside the stars (guide §2.4 — share one
     // partitioning across operations keyed the same way): each star
     // repartitions its working relation ONCE by `src`; the min
@@ -194,70 +181,41 @@ object TopicGraph {
         .filter(col("src") =!= col("dst"))
         .distinct()
     }
-    // the loop's shuffles run at the graph's own parallelism (rounds
-    // are shuffle-latency-bound at dedup-graph sizes); session setting
-    // restored after — same discipline as the min-label loop
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
-      // node universe BEFORE dropping self-loops: a node whose only
-      // edge is (a, a) forms its own component and must appear in the
-      // output (as it does on the union-find and min-label paths), but
-      // the star rounds erase self-loops — restore such nodes at the end
-      val nodes = sym.select(col("src").as("node")).distinct()
-        .localCheckpoint(true)
-      var e = sym.filter(col("src") =!= col("dst"))
-      var eIsLoopOwned = false
-      var it = 0
-      var prevSig: (Long, Long) = null
-      var stable = false
-      while (!stable && it < maxIter) {
-        // checkpoint EVERY round: one round's plan references `e` four
-        // times (two stars × (neighbor union + min join)), so an
-        // unchecked plan multiplies ~16-25× per round — every-4-rounds
-        // lineage cuts (the min-label loop's cadence) left a plan tree
-        // whose explain string alone OOMed the driver. LAZY checkpoint:
-        // the signature aggregate right below is the materializing
-        // action, so each round is ONE job where eager-checkpoint+agg
-        // was two identical passes.
-        val next = smallStar(largeStar(e)).localCheckpoint(eager = false)
-        it += 1
-        val sigRow = next
-          .agg(count(lit(1)), expr("bit_xor(xxhash64(src, dst))")).head()
-        val sig = (sigRow.getLong(0),
-          if (sigRow.isNullAt(1)) 0L else sigRow.getLong(1))
-        stable = sig == prevSig
-        prevSig = sig
-        if (eIsLoopOwned) e.unpersist(false)
-        e = next
-        eIsLoopOwned = true
-      }
-      // read labels off the stars; the min-agg guarantees ONE row per
-      // node even if maxIter exhausted before a true fixpoint (then
-      // labels are best-effort minima rather than silently duplicated),
-      // and the anti-join restores isolated (self-loop-only) nodes
-      val star = e.select(col("src").as("node"), col("dst").as("label"))
-        .unionByName(e.select(col("dst").as("node"), col("dst").as("label")))
-        .groupBy(col("node")).agg(min(col("label")).as("label"))
-      val out = star
-        .unionByName(nodes.join(star.select(col("node")), Seq("node"), "left_anti")
-          .select(col("node"), col("node").as("label")))
-        .localCheckpoint(true)
-      if (eIsLoopOwned) e.unpersist(false)
-      out
-    } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // node universe BEFORE dropping self-loops: a node whose only
+    // edge is (a, a) forms its own component and must appear in the
+    // output (as it does on the union-find and min-label paths), but
+    // the star rounds erase self-loops — restore such nodes at the end
+    val (nodes, _, _) = Loop.materialize(sym.select(col("src").as("node")).distinct())
+    var e = sym.filter(col("src") =!= col("dst"))
+    var it = 0
+    var prevSig = (-1L, 0L)
+    var stable = false
+    while (!stable && it < maxIter) {
+      // one materialization EVERY round: one round's plan references `e`
+      // four times (two stars × (neighbor union + min join)), so an
+      // unchecked plan multiplies ~16-25× per round
+      val (next, n, fp) = Loop.materialize(smallStar(largeStar(e)))
+      if (it > 0) Loop.release(e) // round 0 reads sym, which the caller owns
+      it += 1
+      stable = (n, fp) == prevSig
+      prevSig = (n, fp)
+      e = next
+    }
+    // read labels off the stars; the min-agg guarantees ONE row per
+    // node even if maxIter exhausted before a true fixpoint (then
+    // labels are best-effort minima rather than silently duplicated),
+    // and the anti-join restores isolated (self-loop-only) nodes
+    val star = e.select(col("src").as("node"), col("dst").as("label"))
+      .unionByName(e.select(col("dst").as("node"), col("dst").as("label")))
+      .groupBy(col("node")).agg(min(col("label")).as("label"))
+    val (out, _, _) = Loop.materialize(star
+      .unionByName(nodes.join(star.select(col("node")), Seq("node"), "left_anti")
+        .select(col("node"), col("node").as("label"))))
+    if (it > 0) Loop.release(e)
+    Loop.release(nodes)
+    out
   }
 
-  /**
-   * Connected components by min-label propagation to a fixpoint: every
-   * node starts labeled with itself; each round takes the min of its
-   * own and its neighbors' labels (symmetrized edges) with pointer
-   * jumping. The pre-round-4 distributed default, kept as the
-   * cross-check twin for [[ccContraction]] (PipelineSpec asserts
-   * equality on chains, cliques, and random graphs): every round here
-   * joins the FULL original edge relation, where contraction's rounds
-   * shrink — the reason contraction is now the default.
-   */
   /**
    * INCREMENTAL connected components: fold a batch of NEW edges into a
    * committed (node, label) component index — the dedup-index
@@ -307,71 +265,51 @@ object TopicGraph {
       .select(col("node"), coalesce(col("nlab"), col("label")).as("label"))
   }
 
+  /**
+   * Connected components by min-label propagation to a fixpoint: every
+   * node starts labeled with itself; each round takes the min of its
+   * own and its neighbors' labels (symmetrized edges) with pointer
+   * jumping. The pre-round-4 distributed default, kept as the
+   * cross-check twin for [[ccContraction]] (PipelineSpec asserts
+   * equality on chains, cliques, and random graphs): every round here
+   * joins the FULL original edge relation, where contraction's rounds
+   * shrink — the reason contraction is now the default.
+   */
   private[graft] def connectedComponentsMinLabel(edges: DataFrame,
       maxIter: Int = 30): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    var sym = edges.select(col("src"), col("dst"))
+    // partitioned by src once: every round's neighbor join reuses it
+    val (sym, _, _) = Loop.materialize(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().persist(lvl)
-    val nEdges = sym.count()
-    val sess = edges.sparkSession
-    val parts = math.max(1, math.min(
-      sess.sparkContext.defaultParallelism, (nEdges / 50000L).toInt))
-    val symWide = sym
-    sym = sym.repartition(parts, col("src")).persist(lvl)
-    var labels = sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")).persist(lvl)
-    // every round is shuffle-LATENCY-bound, not data-bound, at dedup
-    // graph sizes: run the loop's shuffles at the graph's own
-    // parallelism and restore the session setting after (every round
-    // materializes inside the try, so no lazy plan escapes it)
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
-      var it = 0
-      var changed = true
-      while (changed && it < maxIter) {
-        val nbrMin = sym
-          .join(labels.withColumnRenamed("node", "src").withColumnRenamed("label", "nl"),
-            Seq("src"))
-          .select(col("dst").as("node"), col("nl").as("label"))
-        val propagated = labels.unionByName(nbrMin)
-          .groupBy(col("node")).agg(min(col("label")).as("label"))
-        // path compression (the pointer-jump half of star contraction):
-        // label := label(label). Propagation alone needs O(diameter)
-        // rounds — a 25-link near-dup chain cost 26; with compression
-        // the pointer depth halves every round, so convergence is
-        // O(log diameter) (measured 6 rounds for the same chain).
-        val cached = propagated.as("a")
-          .join(propagated.as("b"), col("a.label") === col("b.node"), "left_outer")
-          .select(col("a.node").as("node"),
-            coalesce(col("b.label"), col("a.label")).as("label"))
-          .persist(lvl)
-        it += 1
-        // lazy: the convergence count / count() below materializes it
-        val next = if (it % 4 == 0) cached.localCheckpoint(eager = false) else cached
-        // convergence check every 2nd round only (one join+count per
-        // check; at worst one extra cheap round past the fixpoint)
-        if (it % 2 == 0 || it >= maxIter) {
-          val nChanged = next
-            .join(labels.withColumnRenamed("label", "prev"), Seq("node"))
-            .filter(col("label") =!= col("prev")).count()
-          changed = nChanged > 0
-        } else next.count()
-        // superseded label cache: unpersist once the next level exists
-        labels.unpersist(false)
-        labels = if (next ne cached) { cached.unpersist(false); next } else next
-      }
-      // labels is |V(component graph)|-sized — orders under the corpus —
-      // so eagerly checkpoint the result and free every loop cache
-      // (cluster caveat as in Redirects: localCheckpoint is executor-
-      // local; long cluster runs snapshot via Checkpoints.runStage)
-      val out = labels.localCheckpoint(true)
-      labels.unpersist(false)
-      sym.unpersist(false)
-      symWide.unpersist(false)
-      out
-    } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
+      .repartition(col("src")).distinct())
+    var (labels, n, fp) = Loop.materialize(sym.select(col("src").as("node")).distinct()
+      .withColumn("label", col("node")))
+    var it = 0
+    var changed = true
+    while (changed && it < maxIter) {
+      val nbrMin = sym
+        .join(labels.withColumnRenamed("node", "src").withColumnRenamed("label", "nl"),
+          Seq("src"))
+        .select(col("dst").as("node"), col("nl").as("label"))
+      val propagated = labels.unionByName(nbrMin)
+        .groupBy(col("node")).agg(min(col("label")).as("label"))
+      // path compression (the pointer-jump half of star contraction):
+      // label := label(label). Propagation alone needs O(diameter)
+      // rounds — a 25-link near-dup chain cost 26; with compression
+      // the pointer depth halves every round, so convergence is
+      // O(log diameter) (measured 6 rounds for the same chain).
+      val (next, n2, fp2) = Loop.materialize(propagated.as("a")
+        .join(propagated.as("b"), col("a.label") === col("b.node"), "left_outer")
+        .select(col("a.node").as("node"),
+          coalesce(col("b.label"), col("a.label")).as("label")))
+      it += 1
+      // one row per node either way, so an unchanged (count,
+      // fingerprint) is an unchanged labeling
+      changed = (n2, fp2) != (n, fp)
+      Loop.release(labels)
+      labels = next; n = n2; fp = fp2
+    }
+    Loop.release(sym)
+    labels
   }
 
   /** Driver-side union-find (path compression + min-root labeling) over
@@ -408,12 +346,35 @@ object TopicGraph {
       }
     }
     val nodeType = sym.schema.fields(0).dataType
-    val out = nodes.map(n => org.apache.spark.sql.Row(n, minOfRoot(find(n))))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType),
-        org.apache.spark.sql.types.StructField("label", nodeType))))
+    localFrame(spark, nodes.map(n => Row(n, minOfRoot(find(n)))),
+      "node" -> nodeType, "label" -> nodeType)
+  }
+
+  /** The driver fast-path twins compare collected ids as boxed Any —
+    * an Integer src never equals a Long dst (or Long seed) there,
+    * while the distributed joins cast silently; one id type across
+    * src/dst (and seeds) keeps the spec-pinned-equal paths honest by
+    * refusing the divergence loudly. */
+  private[pipeline] def requireOneIdType(op: String, e: DataFrame,
+      seeds: Option[DataFrame] = None): Unit = {
+    val st = e.schema.fields(0).dataType
+    val dt = e.schema.fields(1).dataType
+    require(st == dt,
+      s"$op: src/dst types differ ($st vs $dt); cast the edge columns to one id type")
+    seeds.foreach { sd =>
+      val kt = sd.schema.fields(0).dataType
+      require(kt == st,
+        s"$op: seed type $kt differs from node type $st; cast the seeds")
+    }
+  }
+
+  /** A driver twin's result rows as a one-partition frame with the
+    * given (name, type) columns. */
+  private[pipeline] def localFrame(spark: SparkSession, rows: Seq[Row],
+      cols: (String, DataType)*): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+      StructType(cols.map { case (n, t) => StructField(n, t) }))
   }
 
   /**
@@ -451,84 +412,57 @@ object TopicGraph {
    * links, as in classic PageRank over a multigraph).
    * Output: (node, rank) with sum(rank) == 1.
    */
-  /** The driver fast-path twins compare collected ids as boxed Any —
-    * an Integer src never equals a Long dst (or Long seed) there,
-    * while the distributed joins cast silently; one id type across
-    * src/dst (and seeds) keeps the spec-pinned-equal paths honest by
-    * refusing the divergence loudly. */
-  private def requireOneIdType(op: String, e: DataFrame,
-      seeds: Option[DataFrame] = None): Unit = {
-    val st = e.schema.fields(0).dataType
-    val dt = e.schema.fields(1).dataType
-    require(st == dt,
-      s"$op: src/dst types differ ($st vs $dt); cast the edge columns to one id type")
-    seeds.foreach { sd =>
-      val kt = sd.schema.fields(0).dataType
-      require(kt == st,
-        s"$op: seed type $kt differs from node type $st; cast the seeds")
-    }
-  }
-
   def pageRank(edges: DataFrame, iters: Int = 5, damping: Double = 0.85,
       localThreshold: Long = 4000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sess = edges.sparkSession
-    val e = edges.select(col("src"), col("dst")).persist(lvl)
-    requireOneIdType("pageRank", e)
-    val nEdges = e.count()
+    val sel = edges.select(col("src"), col("dst"))
+    requireOneIdType("pageRank", sel)
+    val (e, nEdges, _) = Loop.materialize(sel)
     if (nEdges <= localThreshold) {
       val out = pageRankLocal(e, iters, damping)
-      e.unpersist(false)
+      Loop.release(e)
       return out
     }
-    val parts = math.max(1, math.min(
-      sess.sparkContext.defaultParallelism, (nEdges / 50000L).toInt))
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
-      // nodes tagged ONCE with has-outgoing: the per-iteration dangling
-      // mass then comes from a filter+sum over the rank relation itself
-      // (a V-vs-V anti-join per iteration otherwise — at billions of
-      // nodes that join is the loop's whole shuffle budget)
-      val (nodes, nNodes) = Loop.materialize(e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node")))
-        .distinct()
-        .join(e.select(col("src").as("node")).distinct()
-          .withColumn("hasOut", lit(true)), Seq("node"), "left_outer")
-        .select(col("node"), coalesce(col("hasOut"), lit(false)).as("hasOut")))
-      val n = nNodes.toDouble
-      val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      // constant across iterations: each edge tagged with its source's
-      // out-degree
-      val (edgesDeg, _) = Loop.materialize(
-        e.join(outdeg.withColumnRenamed("node", "src"), Seq("src")))
-      var ranks = nodes.withColumn("rank", lit(1.0 / n))
-      var it = 0
-      while (it < iters) {
-        val contrib = edgesDeg
-          .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
-          .select(col("dst").as("node"), (col("rank") / col("deg")).as("c"))
-          .groupBy(col("node")).agg(sum(col("c")).as("in_sum"))
-        // rank held by dangling nodes teleports uniformly; the 1-row
-        // aggregate rides broadcast, never the driver
-        val dang = ranks.filter(!col("hasOut"))
-          .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
-        val (stepped, _) = Loop.materialize(nodes
-          .join(contrib, Seq("node"), "left_outer")
-          .crossJoin(broadcast(dang))
-          .select(col("node"), col("hasOut"),
-            (lit((1 - damping) / n) + lit(damping) *
-              (coalesce(col("in_sum"), lit(0.0)) + col("dang") / n)).as("rank")))
-        if (it > 0) Loop.release(ranks)
-        ranks = stepped
-        it += 1
-      }
-      val out = ranks.select(col("node"), col("rank"))
-      Loop.release(edgesDeg)
-      if (iters > 0) Loop.release(nodes) // else the output still reads it
-      e.unpersist(false)
-      out
-    } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
+    // nodes tagged ONCE with has-outgoing: the per-iteration dangling
+    // mass then comes from a filter+sum over the rank relation itself
+    // (a V-vs-V anti-join per iteration otherwise — at billions of
+    // nodes that join is the loop's whole shuffle budget)
+    val (nodes, nNodes, _) = Loop.materialize(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node")))
+      .distinct()
+      .join(e.select(col("src").as("node")).distinct()
+        .withColumn("hasOut", lit(true)), Seq("node"), "left_outer")
+      .select(col("node"), coalesce(col("hasOut"), lit(false)).as("hasOut")))
+    val n = nNodes.toDouble
+    val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    // constant across iterations: each edge tagged with its source's
+    // out-degree
+    val (edgesDeg, _, _) = Loop.materialize(
+      e.join(outdeg.withColumnRenamed("node", "src"), Seq("src")))
+    Loop.release(e)
+    var ranks = nodes.withColumn("rank", lit(1.0 / n))
+    var it = 0
+    while (it < iters) {
+      val contrib = edgesDeg
+        .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
+        .select(col("dst").as("node"), (col("rank") / col("deg")).as("c"))
+        .groupBy(col("node")).agg(sum(col("c")).as("in_sum"))
+      // rank held by dangling nodes teleports uniformly; the 1-row
+      // aggregate rides broadcast, never the driver
+      val dang = ranks.filter(!col("hasOut"))
+        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
+      val (stepped, _, _) = Loop.materialize(nodes
+        .join(contrib, Seq("node"), "left_outer")
+        .crossJoin(broadcast(dang))
+        .select(col("node"), col("hasOut"),
+          (lit((1 - damping) / n) + lit(damping) *
+            (coalesce(col("in_sum"), lit(0.0)) + col("dang") / n)).as("rank")))
+      if (it > 0) Loop.release(ranks)
+      ranks = stepped
+      it += 1
+    }
+    Loop.release(edgesDeg)
+    if (iters > 0) Loop.release(nodes) // else the output still reads it
+    ranks.select(col("node"), col("rank"))
   }
 
   /**
@@ -617,14 +551,8 @@ object TopicGraph {
         nd -> ((1 - damping) / n + damping * (in(nd) + dang / n))).toMap
       it += 1
     }
-    val nodeType = e.schema.fields(0).dataType
-    val out = nodes.map(nd => org.apache.spark.sql.Row(nd, rank(nd)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType),
-        org.apache.spark.sql.types.StructField("rank",
-          org.apache.spark.sql.types.DoubleType))))
+    localFrame(spark, nodes.map(nd => Row(nd, rank(nd))),
+      "node" -> e.schema.fields(0).dataType, "rank" -> DoubleType)
   }
 
   /**
@@ -654,64 +582,55 @@ object TopicGraph {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iters: Int = 5, damping: Double = 0.85,
       localThreshold: Long = 4000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sess = edges.sparkSession
-    val e = edges.select(col("src"), col("dst")).persist(lvl)
+    val sel = edges.select(col("src"), col("dst"))
     val sd = seeds.select(seeds.columns.head).toDF("node").distinct()
-    requireOneIdType("personalizedPageRank", e, Some(sd))
-    val nEdges = e.count()
+    requireOneIdType("personalizedPageRank", sel, Some(sd))
+    val (e, nEdges, _) = Loop.materialize(sel)
     if (nEdges <= localThreshold) {
       val out = pprLocal(e, sd, iters, damping)
-      e.unpersist(false)
+      Loop.release(e)
       return out
     }
-    val parts = math.max(1, math.min(
-      sess.sparkContext.defaultParallelism, (nEdges / 50000L).toInt))
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
-      val nodes0 = e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node")))
-        .distinct()
-        .join(e.select(col("src").as("node")).distinct()
-          .withColumn("hasOut", lit(true)), Seq("node"), "left_outer")
-      val (nodes, _) = Loop.materialize(nodes0
-        .join(sd.withColumn("isSeed", lit(true)), Seq("node"), "left_outer")
-        .select(col("node"), coalesce(col("hasOut"), lit(false)).as("hasOut"),
-          coalesce(col("isSeed"), lit(false)).as("isSeed")))
-      val nSeeds = nodes.filter(col("isSeed")).count()
-      require(nSeeds > 0, "personalizedPageRank: no seed is a graph node")
-      // per-node restart mass m: 1/|S| on seeds, 0 elsewhere — the one
-      // constant the whole loop re-reads
-      val m = when(col("isSeed"), lit(1.0 / nSeeds)).otherwise(lit(0.0))
-      val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-      val (edgesDeg, _) = Loop.materialize(
-        e.join(outdeg.withColumnRenamed("node", "src"), Seq("src")))
-      var ranks = nodes.withColumn("rank", m)
-      var it = 0
-      while (it < iters) {
-        val contrib = edgesDeg
-          .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
-          .select(col("dst").as("node"), (col("rank") / col("deg")).as("c"))
-          .groupBy(col("node")).agg(sum(col("c")).as("in_sum"))
-        val dang = ranks.filter(!col("hasOut"))
-          .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
-        val (stepped, _) = Loop.materialize(nodes
-          .join(contrib, Seq("node"), "left_outer")
-          .crossJoin(broadcast(dang))
-          .select(col("node"), col("hasOut"), col("isSeed"),
-            (lit(1 - damping) * m + lit(damping) *
-              (coalesce(col("in_sum"), lit(0.0)) + col("dang") * m)).as("rank")))
-        if (it > 0) Loop.release(ranks)
-        ranks = stepped
-        it += 1
-      }
-      val out = ranks.select(col("node"), col("rank"))
-      Loop.release(edgesDeg)
-      if (iters > 0) Loop.release(nodes) // else the output still reads it
-      e.unpersist(false)
-      out
-    } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val nodes0 = e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node")))
+      .distinct()
+      .join(e.select(col("src").as("node")).distinct()
+        .withColumn("hasOut", lit(true)), Seq("node"), "left_outer")
+    val (nodes, _, _) = Loop.materialize(nodes0
+      .join(sd.withColumn("isSeed", lit(true)), Seq("node"), "left_outer")
+      .select(col("node"), coalesce(col("hasOut"), lit(false)).as("hasOut"),
+        coalesce(col("isSeed"), lit(false)).as("isSeed")))
+    val nSeeds = nodes.filter(col("isSeed")).count()
+    require(nSeeds > 0, "personalizedPageRank: no seed is a graph node")
+    // per-node restart mass m: 1/|S| on seeds, 0 elsewhere — the one
+    // constant the whole loop re-reads
+    val m = when(col("isSeed"), lit(1.0 / nSeeds)).otherwise(lit(0.0))
+    val outdeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    val (edgesDeg, _, _) = Loop.materialize(
+      e.join(outdeg.withColumnRenamed("node", "src"), Seq("src")))
+    Loop.release(e)
+    var ranks = nodes.withColumn("rank", m)
+    var it = 0
+    while (it < iters) {
+      val contrib = edgesDeg
+        .join(ranks.select(col("node").as("src"), col("rank")), Seq("src"))
+        .select(col("dst").as("node"), (col("rank") / col("deg")).as("c"))
+        .groupBy(col("node")).agg(sum(col("c")).as("in_sum"))
+      val dang = ranks.filter(!col("hasOut"))
+        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
+      val (stepped, _, _) = Loop.materialize(nodes
+        .join(contrib, Seq("node"), "left_outer")
+        .crossJoin(broadcast(dang))
+        .select(col("node"), col("hasOut"), col("isSeed"),
+          (lit(1 - damping) * m + lit(damping) *
+            (coalesce(col("in_sum"), lit(0.0)) + col("dang") * m)).as("rank")))
+      if (it > 0) Loop.release(ranks)
+      ranks = stepped
+      it += 1
+    }
+    Loop.release(edgesDeg)
+    if (iters > 0) Loop.release(nodes) // else the output still reads it
+    ranks.select(col("node"), col("rank"))
   }
 
   /** Driver-side PPR twin — same math, same schema as the distributed
@@ -747,14 +666,8 @@ object TopicGraph {
         nd -> ((1 - damping) * m(nd) + damping * (in(nd) + dang * m(nd)))).toMap
       it += 1
     }
-    val nodeType = e.schema.fields(0).dataType
-    val out = nodes.map(nd => org.apache.spark.sql.Row(nd, rank(nd)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType),
-        org.apache.spark.sql.types.StructField("rank",
-          org.apache.spark.sql.types.DoubleType))))
+    localFrame(spark, nodes.map(nd => Row(nd, rank(nd))),
+      "node" -> e.schema.fields(0).dataType, "rank" -> DoubleType)
   }
 
   /**
@@ -781,17 +694,16 @@ object TopicGraph {
    */
   def hopDistance(edges: DataFrame, seeds: DataFrame,
       localThreshold: Long = 4000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).persist(lvl)
+    val sel = edges.select(col("src"), col("dst"))
     val sd = seeds.select(seeds.columns.head).toDF("node").distinct()
-    requireOneIdType("hopDistance", e, Some(sd))
-    val nEdges = e.count()
+    requireOneIdType("hopDistance", sel, Some(sd))
+    val (e, nEdges, _) = Loop.materialize(sel)
     if (nEdges <= localThreshold) {
       val out = hopDistanceLocal(e, sd)
-      e.unpersist(false)
+      Loop.release(e)
       return out
     }
-    var (dist, frontierCount) = Loop.materialize(sd.select(col("node"), lit(0).as("dist")))
+    var (dist, frontierCount, _) = Loop.materialize(sd.select(col("node"), lit(0).as("dist")))
     var frontier = dist
     var layer = 0
     var layersSinceCompact = 0
@@ -800,14 +712,14 @@ object TopicGraph {
       // Each layer is one materialization whose counts the planner
       // reads as exact statistics: while the frontier and the visited
       // set are small (the common case: BFS frontiers are a sliver of
-      // V on a high-diameter graph) both broadcast, so the persisted
+      // V on a high-diameter graph) both broadcast, so the materialized
       // edge relation is probed in place (never shuffled, never
       // sorted) and the anti-join runs map-side BEFORE the distinct,
       // leaving one tiny exchange per round. Measured on the forced-
       // distributed 10x leg (1M edges, ecc≈200): a sort-merge join of
       // the full edge relation every round cost ~2.4 s/round, 533 s
       // total. A frontier too big to broadcast gets the shuffle plan.
-      val (next, n) = Loop.materialize(frontier
+      val (next, n, _) = Loop.materialize(frontier
         .join(e, frontier("node") === e("src"))
         .select(col("dst").as("node"))
         .join(dist, Seq("node"), "left_anti").distinct()
@@ -828,7 +740,8 @@ object TopicGraph {
         layersSinceCompact = 0
       }
     }
-    e.unpersist(false)
+    // the frontier checkpoints stay: `dist` is a union over them
+    Loop.release(e)
     dist
   }
 
@@ -849,7 +762,7 @@ object TopicGraph {
    * one (register ⋈ edge) join + a (node, bucket) max aggregation,
    * every relation ids+small-ints only, register file ≤ 64·V rows
    * however big the balls get. Registers only GROW (max-merge), so the
-   * relation size is monotone-bounded; each round localCheckpoint'd.
+   * relation size is monotone-bounded; the rounds run through [[Loop.iterate]].
    * The 1-row-per-node initial file means early rounds are sparse —
    * cost ramps with actual ball sizes, not V·64.
    *
@@ -874,24 +787,19 @@ object TopicGraph {
     * relation at graph scale. */
   def hyperBallRegisters(edges: DataFrame, radius: Int): DataFrame = {
     require(radius >= 0, s"radius must be >= 0, got $radius")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
-    e.count()
+    val (e, _, _) = Loop.materialize(edges.select(col("src"), col("dst")).distinct())
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
-    var regs = Sketches.hllRegisters(nodes, col("node").cast("string"),
-      Seq("node")).localCheckpoint(true)
-    var r = 0
-    while (r < radius) {
-      regs = regs
+    val (regs0, _, _) = Loop.materialize(
+      Sketches.hllRegisters(nodes, col("node").cast("string"), Seq("node")))
+    val rounds = Loop.iterate(regs0, radius) { (regs, _) =>
+      regs
         .unionByName(e.join(regs, regs("node") === e("dst"))
           .select(e("src").as("node"), col("bucket"), col("rho")))
         .groupBy(col("node"), col("bucket")).agg(max(col("rho")).as("rho"))
-        .localCheckpoint(true)
-      r += 1
     }
-    e.unpersist(false)
-    regs
+    (e +: rounds.init).foreach(Loop.release)
+    rounds.last
   }
 
   /**
@@ -908,31 +816,29 @@ object TopicGraph {
    */
   def hyperBallPackedRegisters(edges: DataFrame, radius: Int): DataFrame = {
     require(radius >= 0, s"radius must be >= 0, got $radius")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
-    e.count()
-    val nodes = e.select(col("src").as("node"))
+    val (e, _, regs0, propagate) = packedBall(edges)
+    val rounds = Loop.iterate(Loop.materialize(regs0)._1, radius)((regs, _) => propagate(regs))
+    (e +: rounds.init).foreach(Loop.release)
+    rounds.last
+  }
+
+  /** The packed HyperBall loop over `edges`: the distinct edge relation
+    * (materialized; the caller releases it once its last round is
+    * materialized) and its row count, round 0 (every node's singleton
+    * register file, not yet materialized) and the round function, which
+    * replaces every node's file by the register-wise max over itself
+    * and its out-neighbors' files. */
+  private def packedBall(edges: DataFrame)
+      : (DataFrame, Long, DataFrame, DataFrame => DataFrame) = {
+    val (e, n, _) = Loop.materialize(edges.select(col("src"), col("dst")).distinct())
+    val regs0 = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
-    var regs = nodes.select(col("node"),
-        Sketches.hllPackedSingleton(col("node").cast("string")).as("regs"))
-      .localCheckpoint(true)
-    var r = 0
-    while (r < radius) {
-      // intermediate rounds checkpoint LAZILY (plan truncated either
-      // way): each round's deferred result stage is computed — and its
-      // partitions persisted — inside the NEXT round's first pass, so
-      // the per-round persist job disappears; the FINAL round is eager
-      // so the chain settles while the edge cache is still live (the
-      // unpersist below would otherwise force recomputes of the
-      // distinct)
-      regs = Sketches.hllPackedMerge(
-        regs.unionByName(e.join(regs, regs("node") === e("dst"))
-          .select(e("src").as("node"), col("regs"))),
-        Seq("node")).localCheckpoint(eager = r + 1 == radius)
-      r += 1
-    }
-    e.unpersist(false)
-    regs
+      .select(col("node"), Sketches.hllPackedSingleton(col("node").cast("string")).as("regs"))
+    def propagate(regs: DataFrame): DataFrame = Sketches.hllPackedMerge(
+      regs.unionByName(e.join(regs, regs("node") === e("dst"))
+        .select(e("src").as("node"), col("regs"))),
+      Seq("node"))
+    (e, n, regs0, propagate)
   }
 
   /**
@@ -955,7 +861,7 @@ object TopicGraph {
    *     ed_reached (relative to the horizon if the fixpoint is not
    *     reached by maxRadius, the standard capped read-off).
    * Propagation is the packed loop; each round's read-off aggregates a
-   * localCheckpoint'd register file, so the relation costs maxRadius
+   * stored register file ([[Loop.iterate]]), so the relation costs maxRadius
    * propagation rounds + maxRadius+1 tiny aggregates.
    */
   def neighborhoodFunction(edges: DataFrame, maxRadius: Int,
@@ -963,14 +869,8 @@ object TopicGraph {
     require(maxRadius >= 0, s"maxRadius must be >= 0, got $maxRadius")
     require(fracNum > 0 && fracDen >= fracNum,
       s"fraction must be a rational in (0,1], got $fracNum/$fracDen")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
-    require(e.count() > 0, "neighborhoodFunction: empty edge relation")
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-    var regs = nodes.select(col("node"),
-        Sketches.hllPackedSingleton(col("node").cast("string")).as("regs"))
-      .localCheckpoint(true)
+    val (e, nEdges, regs0, propagate) = packedBall(edges)
+    require(nEdges > 0, "neighborhoodFunction: empty edge relation")
     def roundRow(r: Int, rg: DataFrame): DataFrame =
       Sketches.hllEstimateFromPacked(rg, Seq("node"))
         .agg(count(lit(1)).as("n_nodes"),
@@ -980,22 +880,11 @@ object TopicGraph {
             " DIV CAST(reg_sum AS DECIMAL(38,0))")).as("n_sum_est_e4"))
         .select(lit(r).as("r"), col("n_nodes"), col("reg_sum_total"),
           col("n_sum_est_e4"))
-    var rows = Seq(roundRow(0, regs))
-    var r = 1
-    while (r <= maxRadius) {
-      // lazy intermediates, eager FINAL round: each round's deferred
-      // result stage materializes inside the next round's first pass
-      // (no per-round persist job), and the final eager round settles
-      // the chain while the edge cache is still live — the read-off
-      // rows only execute in the caller's terminal action
-      regs = Sketches.hllPackedMerge(
-        regs.unionByName(e.join(regs, regs("node") === e("dst"))
-          .select(e("src").as("node"), col("regs"))),
-        Seq("node")).localCheckpoint(eager = r == maxRadius)
-      rows = rows :+ roundRow(r, regs)
-      r += 1
-    }
-    e.unpersist(false)
+    // the read-off rows only execute in the caller's terminal action,
+    // against the stored rounds
+    val rounds = Loop.iterate(Loop.materialize(regs0)._1, maxRadius)((regs, _) => propagate(regs))
+    Loop.release(e)
+    val rows = rounds.zipWithIndex.map { case (regs, r) => roundRow(r, regs) }
     // the read-off table is maxRadius+1 rows — the single-partition
     // windows below are driver-sized by construction
     import org.apache.spark.sql.expressions.Window
@@ -1034,14 +923,8 @@ object TopicGraph {
    */
   def harmonicCentrality(edges: DataFrame, radius: Int): DataFrame = {
     require(radius >= 1, s"radius must be >= 1, got $radius")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
-    require(e.count() > 0, "harmonicCentrality: empty edge relation")
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-    var regs = nodes.select(col("node"),
-        Sketches.hllPackedSingleton(col("node").cast("string")).as("regs"))
-      .localCheckpoint(true)
+    val (e, nEdges, regs0, propagate) = packedBall(edges)
+    require(nEdges > 0, "harmonicCentrality: empty edge relation")
     def lcm(a: Long, b: Long): Long = a / BigInt(a).gcd(BigInt(b)).toLong * b
     val bigL = (1L to radius.toLong).reduce(lcm)
     def weight(r: Int): Long =
@@ -1053,21 +936,12 @@ object TopicGraph {
         .select(col("node"),
           (expr(s"CAST('${Sketches.HllEstE4Num}' AS DECIMAL(38,0))" +
             " DIV CAST(reg_sum AS DECIMAL(38,0))") * lit(weight(r))).as("part"))
-    var parts = Seq(weighted(0, regs))
-    var r = 1
-    while (r <= radius) {
-      // lazy intermediates, eager final round (see neighborhoodFunction:
-      // per-round persist jobs disappear; the weighted read-offs execute
-      // in the caller's terminal action against the settled chain)
-      regs = Sketches.hllPackedMerge(
-        regs.unionByName(e.join(regs, regs("node") === e("dst"))
-          .select(e("src").as("node"), col("regs"))),
-        Seq("node")).localCheckpoint(eager = r == radius)
-      parts = parts :+ weighted(r, regs)
-      r += 1
-    }
-    e.unpersist(false)
-    parts.reduce(_ unionByName _)
+    // the weighted read-offs execute in the caller's terminal action,
+    // against the stored rounds
+    val rounds = Loop.iterate(Loop.materialize(regs0)._1, radius)((regs, _) => propagate(regs))
+    Loop.release(e)
+    rounds.zipWithIndex.map { case (regs, r) => weighted(r, regs) }
+      .reduce(_ unionByName _)
       .groupBy(col("node"))
       .agg(sum(col("part")).as("h_scaled"))
       .select(col("node"), col("h_scaled"),
@@ -1079,9 +953,9 @@ object TopicGraph {
    * exists for (Boldi & Vigna 2013 run it exactly this way): iterate
    * the register propagation to its FIXPOINT (registers are
    * max-monotone over a finite lattice, so a round that changes nothing
-   * is the transitive closure; detected with the ccContraction-style
-   * (count, bit_xor(hash)) signature — one tiny aggregate per round,
-   * no register-file self-join), recording after each round r the
+   * is the transitive closure; detected by an unchanged (count,
+   * fingerprint) of the round's [[Loop.materialize]], as in
+   * ccContraction — no extra action, no register-file self-join), recording after each round r the
    * neighborhood function N(r) = Σ_v |ball_r(v)| estimate. The
    * effective diameter at `fraction` is the smallest r with
    * N(r) ≥ fraction · N(fixpoint).
@@ -1093,49 +967,37 @@ object TopicGraph {
   def effectiveDiameter(edges: DataFrame, fraction: Double = 0.9,
       maxRadius: Int = 64): (Int, Seq[Double], Int) = {
     require(fraction > 0 && fraction <= 1, s"fraction in (0,1], got $fraction")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
-    // empty graph: refuse loudly rather than NPE on the NULL sum the
-    // empty register relation would feed nfun (sig() already coalesces)
-    require(e.count() > 0, "effectiveDiameter: empty edge relation")
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
     // packed register propagation (one array row per node, see
-    // hyperBallPackedRegisters) — the fixpoint signature hashes the
-    // whole register vector per node, same one-tiny-aggregate cost
-    var regs = nodes.select(col("node"),
-        Sketches.hllPackedSingleton(col("node").cast("string")).as("regs"))
-      .localCheckpoint(true)
+    // hyperBallPackedRegisters); the fixpoint signature is each round's
+    // (count, fingerprint) over the whole register vector per node
+    val (e, nEdges, regs0, propagate) = packedBall(edges)
+    // empty graph: refuse loudly rather than NPE on the NULL sum the
+    // empty register relation would feed nfun
+    require(nEdges > 0, "effectiveDiameter: empty edge relation")
     def nfun(rg: DataFrame): Double =
       Sketches.hllEstimateFromPacked(rg, Seq("node"))
         .agg(coalesce(sum(col("n_distinct_est")), lit(0.0))).head().getDouble(0)
-    def sig(rg: DataFrame): (Long, Long) = {
-      val row = rg.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(node, regs))"), lit(0L))).head()
-      (row.getLong(0), row.getLong(1))
-    }
+    var (regs, n0, fp0) = Loop.materialize(regs0)
+    var prev = (n0, fp0)
     val ns = Seq.newBuilder[Double]
     ns += nfun(regs)
-    var prev = sig(regs)
     var rounds = 0
     var fixed = false
     while (!fixed && rounds < maxRadius) {
-      // lazy: the per-round fixpoint signature below is the
-      // materializing action — one job per round instead of two
-      val next = Sketches.hllPackedMerge(
-        regs.unionByName(e.join(regs, regs("node") === e("dst"))
-          .select(e("src").as("node"), col("regs"))),
-        Seq("node")).localCheckpoint(eager = false)
-      val cur = sig(next)
-      if (cur == prev) fixed = true
-      else {
+      val (next, n, fp) = Loop.materialize(propagate(regs))
+      if ((n, fp) == prev) {
+        fixed = true
+        Loop.release(next)
+      } else {
         rounds += 1
         ns += nfun(next)
-        prev = cur
+        prev = (n, fp)
+        Loop.release(regs)
         regs = next
       }
     }
-    e.unpersist(false)
+    Loop.release(regs)
+    Loop.release(e)
     val all = ns.result()
     val target = fraction * all.last
     val eff = all.indexWhere(_ >= target - 1e-9)
@@ -1157,8 +1019,8 @@ object TopicGraph {
    * against the edge relation plus a groupBy min — positions carry
    * (start, node) ids only, the min(struct(score, dst)) aggregation is
    * map-side partial, and a walk that reaches a terminal node simply
-   * drops out of the inner join. T steps = T such rounds, each
-   * localCheckpoint'd (iterative-plan discipline). Out-degree skew is
+   * drops out of the inner join. T steps = T such rounds through
+   * [[Loop.iterate]] (iterative-plan discipline). Out-degree skew is
    * bounded by the scoring join fanning out only to each CURRENT
    * node's neighbors — a hub contributes its degree once per walk
    * standing on it, not per walk in the corpus.
@@ -1168,35 +1030,24 @@ object TopicGraph {
   def randomWalks(edges: DataFrame, starts: DataFrame, steps: Int,
       seed: String = "w"): DataFrame = {
     require(steps >= 0, s"steps must be >= 0, got $steps")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
-    e.count()
-    var cur = starts.select(starts.columns.head).toDF("node").distinct()
-      .select(col("node").as("start"), col("node"))
-      .localCheckpoint(true)
-    val layers = Seq.newBuilder[DataFrame]
-    layers += cur.select(col("start"), lit(0).as("step"), col("node"))
-    var t = 1
-    while (t <= steps) {
+    val (e, _, _) = Loop.materialize(edges.select(col("src"), col("dst")).distinct())
+    val (start, _, _) = Loop.materialize(starts.select(starts.columns.head).toDF("node")
+      .distinct().select(col("node").as("start"), col("node")))
+    val rounds = Loop.iterate(start, steps) { (cur, t) =>
       val score = conv(substring(md5(concat_ws(":", lit(seed),
         col("start").cast("string"), lit(t).cast("string"),
         col("dst").cast("string"))), 1, 15), 16, 10).cast("long")
-      // lazy intermediates, eager FINAL step: each step's deferred
-      // result stage materializes inside the next step's first pass (no
-      // per-step persist job); the final eager step settles the chain
-      // while the edge cache is still live — the layer union only
-      // executes in the caller's terminal action
-      val next = cur.join(e, cur("node") === e("src"))
+      cur.join(e, cur("node") === e("src"))
         .select(col("start"), struct(score.as("sc"), col("dst")).as("cand"))
         .groupBy(col("start")).agg(min(col("cand")).as("m"))
         .select(col("start"), col("m").getField("dst").as("node"))
-        .localCheckpoint(eager = t == steps)
-      layers += next.select(col("start"), lit(t).as("step"), col("node"))
-      cur = next
-      t += 1
     }
-    e.unpersist(false)
-    layers.result().reduce(_ unionByName _)
+    Loop.release(e)
+    // the layer union only executes in the caller's terminal action,
+    // against the stored rounds
+    rounds.zipWithIndex
+      .map { case (pos, t) => pos.select(col("start"), lit(t).as("step"), col("node")) }
+      .reduce(_ unionByName _)
   }
 
   /**
@@ -1230,33 +1081,24 @@ object TopicGraph {
     require(steps >= 0, s"steps must be >= 0, got $steps")
     require(p >= 1 && p <= 8 && q >= 1 && q <= 8,
       s"node2vec: p=$p, q=$q must be in [1, 8] (integer inverse biases)")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges.select(col("src"), col("dst")).distinct().persist(lvl)
-    e.count()
+    val (e, _, _) = Loop.materialize(edges.select(col("src"), col("dst")).distinct())
     def hashKey(t: Int): org.apache.spark.sql.Column =
       conv(substring(md5(concat_ws(":",
       lit(seed), col("start").cast("string"), lit(t).cast("string"),
       col("dst").cast("string"))), 1, 15), 16, 10).cast("long")
-    var cur = starts.select(starts.columns.head).toDF("node").distinct()
-      .select(col("node").as("start"), col("node"))
-      .localCheckpoint(true)
-    val layers = Seq.newBuilder[DataFrame]
-    layers += cur.select(col("start"), lit(0).as("step"), col("node"))
-    // step 1: unbiased (no predecessor), but carry prev forward
-    var frontier: DataFrame = null // (start, prev, node)
-    var t = 1
-    while (t <= steps) {
-      // lazy intermediates, eager final step (see randomWalks): the
-      // per-step persist jobs disappear into the successor passes
-      val next = if (t == 1) {
-        cur.join(e, cur("node") === e("src"))
+    val (start, _, _) = Loop.materialize(starts.select(starts.columns.head).toDF("node")
+      .distinct().select(col("node").as("start"), col("node")))
+    // round 0 is (start, node); every later round is (start, prev, node)
+    val rounds = Loop.iterate(start, steps) { (frontier, t) =>
+      if (t == 1) {
+        // step 1: unbiased (no predecessor), but carry prev forward
+        frontier.join(e, frontier("node") === e("src"))
           .select(col("start"), col("node").as("prev0"),
             struct(hashKey(1).as("sc"), col("dst")).as("cand"))
           .groupBy(col("start")).agg(min(col("cand")).as("m"),
             first(col("prev0")).as("p0")) // start node is unique per group
           .select(col("start"), col("p0").as("prev"),
             col("m").getField("dst").as("node"))
-          .localCheckpoint(eager = t == steps)
       } else {
         val cands = frontier.join(e, frontier("node") === e("src"))
           .select(col("start"), col("prev"), col("node"), col("dst"),
@@ -1272,14 +1114,12 @@ object TopicGraph {
             first(col("newPrev")).as("np"))
           .select(col("start"), col("np").as("prev"),
             col("m").getField("dst").as("node"))
-          .localCheckpoint(eager = t == steps)
       }
-      layers += next.select(col("start"), lit(t).as("step"), col("node"))
-      frontier = next
-      t += 1
     }
-    e.unpersist(false)
-    layers.result().reduce(_ unionByName _)
+    Loop.release(e)
+    rounds.zipWithIndex
+      .map { case (pos, t) => pos.select(col("start"), lit(t).as("step"), col("node")) }
+      .reduce(_ unionByName _)
   }
 
   /** Driver-side BFS twin — same (node, dist) schema and semantics as
@@ -1305,14 +1145,8 @@ object TopicGraph {
       next.foreach(d => dist(d) = layer)
       frontier = next.toVector
     }
-    val nodeType = e.schema.fields(0).dataType
-    val out = dist.toSeq.map { case (nd, dd) => org.apache.spark.sql.Row(nd, dd) }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType),
-        org.apache.spark.sql.types.StructField("dist",
-          org.apache.spark.sql.types.IntegerType))))
+    localFrame(spark, dist.toSeq.map { case (nd, dd) => Row(nd, dd) },
+      "node" -> e.schema.fields(0).dataType, "dist" -> IntegerType)
   }
 
   /**
@@ -1332,9 +1166,11 @@ object TopicGraph {
    * count. The edge relation only ever SHRINKS, so the per-round
    * shuffle decays like contraction CC's; rounds are bounded by the
    * degeneracy ordering length (small for power-law graphs: most
-   * peeling happens in the first rounds). Every round localCheckpoints
-   * (the round references `e` three times — unchecked lineage
-   * multiplies per round, the ccContraction lesson). Small graphs take
+   * peeling happens in the first rounds). Every round is one
+   * [[Loop.materialize]] (the round references `e` three times —
+   * unchecked lineage multiplies per round, the ccContraction lesson),
+   * and a peel only removes edges, so an unchanged count is the
+   * fixpoint. Small graphs take
    * the driver fast path; tests pin the loops equal with
    * localThreshold = 0.
    *
@@ -1343,55 +1179,38 @@ object TopicGraph {
    */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 50,
       localThreshold: Long = 4000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges.select(col("src"), col("dst"))
+    val (sym, nEdges, _) = Loop.materialize(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))
         .filter(col("src") =!= col("dst")))
-      .distinct().persist(lvl)
-    val nEdges = sym.count()
+      .distinct())
     if (nEdges <= localThreshold) {
       val out = kCoreLocal(sym, k)
-      sym.unpersist(false)
+      Loop.release(sym)
       return out
     }
-    val sess = sym.sparkSession
-    val parts = math.max(1, math.min(
-      sess.sparkContext.defaultParallelism, (nEdges / 50000L).toInt))
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
-      var e = sym.localCheckpoint(true)
-      var nNodes = -1L
-      var it = 0
-      var stable = false
-      while (!stable && it < maxIter) {
-        val deg = e.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
-        // LAZY checkpoints, both relations: keep's count() is its
-        // materializing action, and the next round's keep-count pulls
-        // the shrunken edge relation through its (marked) checkpoint —
-        // one job per round where eager-checkpoint+count cost three
-        val keep = deg.filter(col("core_deg") >= k)
-          .select(col("src").as("n")).localCheckpoint(eager = false)
-        val nKeep = keep.count()
-        if (nKeep == nNodes) stable = true
-        else {
-          nNodes = nKeep
-          val next = e
-            .join(keep.withColumnRenamed("n", "src"), Seq("src"))
-            .join(keep.withColumnRenamed("n", "dst"), Seq("dst"))
-            .select(col("src"), col("dst"))
-            .localCheckpoint(eager = false)
-          e = next
-          it += 1
-        }
-      }
-      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
-        .localCheckpoint(true)
-    } finally {
-      sess.conf.set("spark.sql.shuffle.partitions", prevParts)
-      sym.unpersist(false)
+    var e = sym
+    var n = nEdges
+    var it = 0
+    var stable = false
+    while (!stable && it < maxIter) {
+      val keep = e.groupBy(col("src")).agg(count(lit(1)).as("core_deg"))
+        .filter(col("core_deg") >= k).select(col("src").as("n"))
+      val (next, m, _) = Loop.materialize(e
+        .join(keep.withColumnRenamed("n", "src"), Seq("src"))
+        .join(keep.withColumnRenamed("n", "dst"), Seq("dst"))
+        .select(col("src"), col("dst")))
+      // a peel only removes edges, so an unchanged count is the fixpoint
+      stable = m == n
+      Loop.release(e)
+      e = next
+      n = m
+      it += 1
     }
+    val (out, _, _) = Loop.materialize(
+      e.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg")))
+    Loop.release(e)
+    out
   }
 
   /** Driver-side peel over a collected small edge list — same
@@ -1421,17 +1240,11 @@ object TopicGraph {
         }
       }
     }
-    val nodeType = sym.schema.fields(0).dataType
     val out = adj.iterator
       .filter { case (n, ns) => !dead.contains(n) && ns.size >= k }
-      .map { case (n, ns) => org.apache.spark.sql.Row(n, ns.size.toLong) }
+      .map { case (n, ns) => Row(n, ns.size.toLong) }
       .toVector
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType),
-        org.apache.spark.sql.types.StructField("core_deg",
-          org.apache.spark.sql.types.LongType))))
+    localFrame(spark, out, "node" -> sym.schema.fields(0).dataType, "core_deg" -> LongType)
   }
 
   /**
@@ -1453,58 +1266,38 @@ object TopicGraph {
    * rewrites rank ≤ 1 windows to WindowGroupLimit, so the top-1 is
    * reduced map-side before the exchange, never materializing the full
    * (node, label, count) relation through the sort. Labels relation is
-   * |V|-sized. localCheckpoint per round (the ccContraction lesson).
+   * |V|-sized. The rounds run through [[Loop.iterate]] (the
+   * ccContraction lesson: lineage is cut every round).
    *
    * Output: (node, community) after `iters` rounds.
    */
   def labelPropagation(edges: DataFrame, iters: Int = 3,
       localThreshold: Long = 4000000L): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sym = edges.select(col("src"), col("dst"))
+    val (sym, nEdges, _) = Loop.materialize(edges.select(col("src"), col("dst"))
       .filter(col("src") =!= col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))
         .filter(col("src") =!= col("dst")))
-      .distinct().persist(lvl)
-    val nEdges = sym.count()
+      .distinct())
     if (nEdges <= localThreshold) {
       val out = lpaLocal(sym, iters)
-      sym.unpersist(false)
+      Loop.release(sym)
       return out
     }
-    val sess = sym.sparkSession
-    val parts = math.max(1, math.min(
-      sess.sparkContext.defaultParallelism, (nEdges / 50000L).toInt))
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
-      var labels = sym.select(col("src").as("node")).distinct()
-        .withColumn("community", col("node")).localCheckpoint(true)
-      var it = 0
-      while (it < iters) {
-        val nbr = sym
-          .join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
-          .groupBy(col("src").as("node"), col("community"))
-          .agg(count(lit(1)).as("c"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("node"))
-          .orderBy(col("c").desc, col("community").asc)
-        // intermediate rounds checkpoint LAZILY (the plan is truncated
-        // either way; the final round's eager checkpoint materializes
-        // the whole chain in one job — sym must still be persisted
-        // then, which the surrounding try/finally guarantees). iters
-        // jobs collapse to one.
-        labels = nbr
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("node"), col("community"))
-          .localCheckpoint(eager = it + 1 == iters)
-        it += 1
-      }
-      labels
-    } finally {
-      sess.conf.set("spark.sql.shuffle.partitions", prevParts)
-      sym.unpersist(false)
+    val (labels0, _, _) = Loop.materialize(sym.select(col("src").as("node")).distinct()
+      .withColumn("community", col("node")))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("node"))
+      .orderBy(col("c").desc, col("community").asc)
+    val rounds = Loop.iterate(labels0, iters) { (labels, _) =>
+      sym.join(labels.withColumnRenamed("node", "dst"), Seq("dst"))
+        .groupBy(col("src").as("node"), col("community"))
+        .agg(count(lit(1)).as("c"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .select(col("node"), col("community"))
     }
+    (sym +: rounds.init).foreach(Loop.release)
+    rounds.last
   }
 
   /** Driver-side synchronous LPA over a collected small edge list —
@@ -1536,13 +1329,8 @@ object TopicGraph {
       it += 1
     }
     val nodeType = sym.schema.fields(0).dataType
-    val out = labels.iterator
-      .map { case (n, l) => org.apache.spark.sql.Row(n, l) }.toVector
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType),
-        org.apache.spark.sql.types.StructField("community", nodeType))))
+    localFrame(spark, labels.iterator.map { case (n, l) => Row(n, l) }.toVector,
+      "node" -> nodeType, "community" -> nodeType)
   }
 
   /**
@@ -1565,8 +1353,7 @@ object TopicGraph {
    * Scale shape mirrors [[pageRank]]: each half-step is one edge-vs-
    * score equi-join + groupBy (partial aggregation map-side), the
    * 1-row normalization aggregate rides broadcast (never the driver),
-   * shuffle partitions adapted to edge count, every-4th-iteration
-   * localCheckpoint, driver fast path below `localThreshold` edges
+   * every half-step is checkpointed, driver fast path below `localThreshold` edges
    * with the distributed loop spec-pinned equal to 1e-9 (the
    * normalization's double sums are shuffle-order-dependent, so the
    * two paths agree to summation-order ulps, not bit-for-bit — the
@@ -1580,73 +1367,65 @@ object TopicGraph {
   def hits(edges: DataFrame, iters: Int = 4,
       localThreshold: Long = 4000000L): DataFrame = {
     require(iters >= 1, s"hits: iters=$iters must be >= 1")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sess = edges.sparkSession
-    val e = edges.select(col("src"), col("dst")).persist(lvl)
-    requireOneIdType("hits", e)
-    val nEdges = e.count()
+    val sel = edges.select(col("src"), col("dst"))
+    requireOneIdType("hits", sel)
+    val (e, nEdges, _) = Loop.materialize(sel)
     require(nEdges > 0, "hits: empty edge relation")
     if (nEdges <= localThreshold) {
       val out = hitsLocal(e, iters)
-      e.unpersist(false)
+      Loop.release(e)
       return out
     }
-    val parts = math.max(1, math.min(
-      sess.sparkContext.defaultParallelism, (nEdges / 50000L).toInt))
-    val prevParts = sess.conf.get("spark.sql.shuffle.partitions")
-    sess.conf.set("spark.sql.shuffle.partitions", parts)
-    try {
-      val nodes = e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node")))
-        .distinct().persist(lvl)
-      var auth = nodes.withColumn("auth", lit(1.0)).localCheckpoint(true)
-      var hub: DataFrame = null
-      var it = 0
-      while (it < iters) {
-        val hRaw = e
-          .join(auth.select(col("node").as("dst"), col("auth")), Seq("dst"))
-          .groupBy(col("src").as("node")).agg(sum(col("auth")).as("hs"))
-        val hTot = hRaw.agg(sum(col("hs")).as("ht"))
-        // Checkpoint each half-step: an iteration references the
-        // previous relation twice per half-step (raw + total), so the
-        // logical tree QUADRUPLES per iteration — a %4 cadence leaves
-        // a 256x tree whose per-action re-analysis and listener plan
-        // rendering dominate wall time (measured 106 s -> ~5 s at 500
-        // edges) and can OOM the driver's plan-description string.
-        // The hub half-step is LAZY (plan truncated all the same): its
-        // result stage is computed — and persisted — inside the auth
-        // half-step's eager job below, dropping the separate hub
-        // persist job each iteration
-        val newHub = nodes.join(hRaw, Seq("node"), "left_outer")
-          .crossJoin(broadcast(hTot))
-          .select(col("node"),
-            (coalesce(col("hs"), lit(0.0)) / col("ht")).as("hub"))
-          .localCheckpoint(eager = false)
-        val aRaw = e
-          .join(newHub.select(col("node").as("src"), col("hub")), Seq("src"))
-          .groupBy(col("dst").as("node")).agg(sum(col("hub")).as("as_"))
-        val aTot = aRaw.agg(sum(col("as_")).as("at"))
-        val stepped = nodes.join(aRaw, Seq("node"), "left_outer")
-          .crossJoin(broadcast(aTot))
-          .select(col("node"),
-            (coalesce(col("as_"), lit(0.0)) / col("at")).as("auth"))
-          .localCheckpoint(true)
-        it += 1
-        // both superseded checkpoints are read by nothing now: newHub
-        // was stored inside the job that built `stepped`
-        Loop.release(auth)
-        if (hub != null) Loop.release(hub)
-        hub = newHub
-        auth = stepped
-      }
-      val out = hub.join(auth, Seq("node"))
-        .select(col("node"), col("hub"), col("auth")).localCheckpoint(true)
-      Loop.release(hub)
+    val (nodes, _, _) = Loop.materialize(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node")))
+      .distinct())
+    var auth = nodes.withColumn("auth", lit(1.0)).localCheckpoint(true)
+    var hub: DataFrame = null
+    var it = 0
+    while (it < iters) {
+      val hRaw = e
+        .join(auth.select(col("node").as("dst"), col("auth")), Seq("dst"))
+        .groupBy(col("src").as("node")).agg(sum(col("auth")).as("hs"))
+      val hTot = hRaw.agg(sum(col("hs")).as("ht"))
+      // Checkpoint each half-step: an iteration references the
+      // previous relation twice per half-step (raw + total), so the
+      // logical tree QUADRUPLES per iteration — a %4 cadence leaves
+      // a 256x tree whose per-action re-analysis and listener plan
+      // rendering dominate wall time (measured 106 s -> ~5 s at 500
+      // edges) and can OOM the driver's plan-description string.
+      // The hub half-step is LAZY (plan truncated all the same): its
+      // result stage is computed — and persisted — inside the auth
+      // half-step's eager job below, dropping the separate hub
+      // persist job each iteration
+      val newHub = nodes.join(hRaw, Seq("node"), "left_outer")
+        .crossJoin(broadcast(hTot))
+        .select(col("node"),
+          (coalesce(col("hs"), lit(0.0)) / col("ht")).as("hub"))
+        .localCheckpoint(eager = false)
+      val aRaw = e
+        .join(newHub.select(col("node").as("src"), col("hub")), Seq("src"))
+        .groupBy(col("dst").as("node")).agg(sum(col("hub")).as("as_"))
+      val aTot = aRaw.agg(sum(col("as_")).as("at"))
+      val stepped = nodes.join(aRaw, Seq("node"), "left_outer")
+        .crossJoin(broadcast(aTot))
+        .select(col("node"),
+          (coalesce(col("as_"), lit(0.0)) / col("at")).as("auth"))
+        .localCheckpoint(true)
+      it += 1
+      // both superseded checkpoints are read by nothing now: newHub
+      // was stored inside the job that built `stepped`
       Loop.release(auth)
-      nodes.unpersist(false)
-      e.unpersist(false)
-      out
-    } finally sess.conf.set("spark.sql.shuffle.partitions", prevParts)
+      if (hub != null) Loop.release(hub)
+      hub = newHub
+      auth = stepped
+    }
+    val out = hub.join(auth, Seq("node"))
+      .select(col("node"), col("hub"), col("auth")).localCheckpoint(true)
+    Loop.release(hub)
+    Loop.release(auth)
+    Loop.release(nodes)
+    Loop.release(e)
+    out
   }
 
   /**
@@ -1895,7 +1674,7 @@ object TopicGraph {
    * explodes each triangle to its 3 canonical edges, counts support
    * per edge (map-side partial agg), and inner-joins the counts back
    * (zero-support edges are simply absent — dropped, as k ≥ 3
-   * requires). Per-round localCheckpoint cuts lineage; early exit when
+   * requires). One [[Loop.materialize]] per round cuts lineage; early exit when
    * the edge count stops shrinking. Driver fast path below
    * `localThreshold` edges, spec-pinned equal at localThreshold = 0.
    */
@@ -1908,21 +1687,21 @@ object TopicGraph {
         greatest(col("src"), col("dst")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
-    var cur = und.localCheckpoint(true)
-    var n = cur.count()
-    if (n <= localThreshold) return kTrussLocal(cur, k, rounds)
+    var (cur, n, _) = Loop.materialize(und)
+    if (n <= localThreshold) {
+      val out = kTrussLocal(cur, k, rounds)
+      Loop.release(cur)
+      return out
+    }
     var r = 0
     var done = n == 0
     while (r < rounds && !done) {
       val sup = triangleEdgeSupport(cur)
-      // lazy: the count below materializes the round — one job instead
-      // of the eager-checkpoint + count pair (sup itself stays eager:
-      // its orient cache is unpersisted inside triangleEdgeSupport)
-      val next = cur.join(sup, Seq("u", "v"))
+      val (next, m, _) = Loop.materialize(cur.join(sup, Seq("u", "v"))
         .filter(col("sup") >= k - 2)
-        .select(col("u"), col("v"))
-        .localCheckpoint(eager = false)
-      val m = next.count()
+        .select(col("u"), col("v")))
+      Loop.release(sup)
+      Loop.release(cur)
       done = m == n || m == 0
       n = m
       cur = next
@@ -1934,7 +1713,8 @@ object TopicGraph {
   /** Per-edge triangle support of a canonical undirected relation
     * (u < v, distinct): the [[triangles]] compact-forward enumeration,
     * each triangle exploded to its 3 canonical edges and counted.
-    * Returns (u, v, sup) for edges in >= 1 triangle, checkpointed. */
+    * Returns (u, v, sup) for edges in >= 1 triangle, materialized; the
+    * caller releases it. */
   private def triangleEdgeSupport(und: DataFrame): DataFrame = {
     val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -1948,6 +1728,8 @@ object TopicGraph {
       when(uFirst, col("v")).otherwise(col("u")).as("b"),
       when(uFirst, struct(col("dv").as("kd"), col("v").as("kn")))
         .otherwise(struct(col("du").as("kd"), col("u").as("kn"))).as("bkey"))
+      // cached lazily: both wedge sides and the closing check read it
+      // inside the one job that materializes `sup`
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val wedges = orient.as("e1")
       .join(orient.as("e2"), col("e1.a") === col("e2.a") &&
@@ -1955,7 +1737,7 @@ object TopicGraph {
       .select(col("e1.a").as("ta"), col("e1.b").as("tb"), col("e2.b").as("tc"))
     val tri = wedges.join(
       orient.select(col("a").as("tb"), col("b").as("tc")), Seq("tb", "tc"))
-    val sup = tri.select(explode(array(
+    val (sup, _, _) = Loop.materialize(tri.select(explode(array(
         struct(least(col("ta"), col("tb")).as("u"),
           greatest(col("ta"), col("tb")).as("v")),
         struct(least(col("ta"), col("tc")).as("u"),
@@ -1963,8 +1745,7 @@ object TopicGraph {
         struct(least(col("tb"), col("tc")).as("u"),
           greatest(col("tb"), col("tc")).as("v")))).as("e"))
       .select(col("e.u"), col("e.v"))
-      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup"))
-      .localCheckpoint(true)
+      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup")))
     orient.unpersist(false)
     sup
   }
@@ -1993,14 +1774,7 @@ object TopicGraph {
       r += 1
     }
     val tpe = und.schema.fields(0).dataType
-    val rows = es.toVector.map { case (u, v) =>
-      org.apache.spark.sql.Row(u, v)
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("u", tpe),
-        org.apache.spark.sql.types.StructField("v", tpe))))
+    localFrame(spark, es.toVector.map { case (u, v) => Row(u, v) }, "u" -> tpe, "v" -> tpe)
   }
 
   /** Driver-side HITS twin — same math, same (node, hub, auth) schema
@@ -2031,16 +1805,7 @@ object TopicGraph {
       auth = nodes.map(nd => nd -> aRaw(nd) / at).toMap
       it += 1
     }
-    val nodeType = e.schema.fields(0).dataType
-    val out = nodes.map(nd =>
-      org.apache.spark.sql.Row(nd, hub(nd), auth(nd)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node", nodeType),
-        org.apache.spark.sql.types.StructField("hub",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("auth",
-          org.apache.spark.sql.types.DoubleType))))
+    localFrame(spark, nodes.map(nd => Row(nd, hub(nd), auth(nd))),
+      "node" -> e.schema.fields(0).dataType, "hub" -> DoubleType, "auth" -> DoubleType)
   }
 }

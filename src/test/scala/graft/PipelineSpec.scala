@@ -705,27 +705,43 @@ class PipelineSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     def settle(): Unit = { System.gc(); Thread.sleep(300) } // let ContextCleaner drain
     settle()
-    val pre = sc.getPersistentRDDs.size
-    // 20-level chain, distributed loop forced: pre-fix this leaked one
-    // persisted frontier per level (>=16); now only the checkpointed
-    // result (+ <=depth/4 lineage-cut checkpoints pending GC) remain
+    // each distributed loop (threshold forced to 0) leaves at most ONE
+    // persisted RDD behind — its own output — however many rounds it ran
+    var before = sc.getPersistentRDDs.size
+    def leavesAtMostItsOutput(op: String)(run: => Unit): Unit = {
+      run
+      val after = sc.getPersistentRDDs.size
+      assert(after - before <= 1, s"$op leaked ${after - before - 1} persisted RDDs")
+      before = after
+    }
+    // a 20-level chain
     val chain = (0 until 20).map(i => (s"c$i", s"c${i + 1}")).toDF("src", "dst")
     val closure = Redirects.transitiveClosure(chain, localThreshold = 0)
-    closure.count()
-    val afterClosure = sc.getPersistentRDDs.size
-    assert(afterClosure - pre <= 8,
-      s"closure leaked ${afterClosure - pre} persisted RDDs")
+    leavesAtMostItsOutput("transitiveClosure")(closure.count())
     val edges = (0 until 30).map(i => (i.toLong, (i + 1).toLong)).toDF("src", "dst")
     val cc = TopicGraph.connectedComponents(edges, localThreshold = 0)
-    cc.count()
-    val afterCc = sc.getPersistentRDDs.size
-    assert(afterCc - afterClosure <= 8,
-      s"connectedComponents leaked ${afterCc - afterClosure} persisted RDDs")
+    leavesAtMostItsOutput("connectedComponents")(cc.count())
     val doubled = Redirects.transitiveClosureDoubling(chain, localThreshold = 0)
-    doubled.count()
-    val afterDbl = sc.getPersistentRDDs.size
-    assert(afterDbl - afterCc <= 8,
-      s"transitiveClosureDoubling leaked ${afterDbl - afterCc} persisted RDDs")
+    leavesAtMostItsOutput("transitiveClosureDoubling")(doubled.count())
+    // a 30-node ring with chords: 4-regular, so its 3-core and 3-truss
+    // are the whole graph and every peel round runs on real rows
+    val ring = (0 until 30).flatMap(i =>
+      Seq((i.toLong, ((i + 1) % 30).toLong), (i.toLong, ((i + 2) % 30).toLong)))
+      .toDF("src", "dst")
+    val core = TopicGraph.kCore(ring, k = 3, localThreshold = 0)
+    leavesAtMostItsOutput("kCore")(assert(core.count() == 30))
+    val truss = TopicGraph.kTrussPeel(ring, k = 3, rounds = 4, localThreshold = 0)
+    leavesAtMostItsOutput("kTrussPeel")(truss.count())
+    // a functional graph: a 10-node tail into a 10-node cycle
+    val rho = ((0 until 19).map(i => (i.toLong, (i + 1).toLong)) :+ (19L, 10L))
+      .toDF("src", "dst")
+    val cyc = Redirects.cycleMembers(rho, localThreshold = 0)
+    leavesAtMostItsOutput("cycleMembers")(assert(cyc.count() == 10))
+    val lpa = TopicGraph.labelPropagation(ring, iters = 3, localThreshold = 0)
+    leavesAtMostItsOutput("labelPropagation")(lpa.count())
+    val hb = TopicGraph.hyperBall(ring, 3)
+    leavesAtMostItsOutput("hyperBall")(hb.count())
+    leavesAtMostItsOutput("effectiveDiameter")(TopicGraph.effectiveDiameter(edges))
   }
 
   test("simhash: near-identical texts have small hamming distance") {

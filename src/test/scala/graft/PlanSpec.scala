@@ -420,5 +420,20 @@ class PlanSpec extends AnyFunSuite {
     val dbl = planLengths(Redirects.transitiveClosureDoubling(deep, maxRounds = 5,
       localThreshold = 0).collect())
     assert(dbl.max < limit, s"transitiveClosureDoubling plan chars per query: $dbl")
+    // a 40-long id chain: 5+ contraction rounds
+    val ids = (0 until 40).map(i => (i.toLong, (i + 1).toLong)).toDF("src", "dst")
+    val cc = planLengths(TopicGraph.connectedComponents(ids, localThreshold = 0).collect())
+    assert(cc.max < limit, s"connectedComponents plan chars per query: $cc")
+    // the 2-core of the fan-out graph is its 40-ring: one peel round
+    // per tail layer, then a stable one
+    val core = planLengths(TopicGraph.kCore(edges, k = 2, localThreshold = 0).collect())
+    assert(core.max < limit, s"kCore plan chars per query: $core")
+    val hop = planLengths(Redirects.transitiveClosure(deep, maxDepth = 5,
+      localThreshold = 0).collect())
+    assert(hop.max < limit, s"per-hop transitiveClosure plan chars per query: $hop")
+    // a 60-node cycle: 6 doubling rounds before span exceeds |srcs|
+    val ring = (0 until 60).map(i => (s"r$i", s"r${(i + 1) % 60}")).toDF("src", "dst")
+    val cyc = planLengths(Redirects.cycleMembers(ring, localThreshold = 0).collect())
+    assert(cyc.max < limit, s"cycleMembers plan chars per query: $cyc")
   }
 }
