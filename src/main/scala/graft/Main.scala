@@ -1,7 +1,8 @@
 package graft
 
-import graft.core.CodeFile
+import graft.core.{CodeFile, Mention}
 import graft.fixtures.CorpusGen
+import graft.functions.TextFunctions
 import graft.pipeline._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,21 +17,20 @@ import org.apache.spark.sql.functions._
  *
  * Stages (each a Checkpoints snapshot; a killed run resumes from the
  * last committed one): mentions, aliases, closure, ner, triples,
- * priors (PageRank over the materialized triples; needs `triples`
- * in this or an earlier run), dedup (persistent signature index +
- * near-dup keep list over the corpus).
+ * priors (PageRank over the triples), dedup (persistent signature
+ * index + near-dup keep list over the corpus).
+ *
+ * Only `mentions` and `aliases` parse the corpus (through
+ * [[graft.pipeline.Mentions]]); every later stage reads its inputs from
+ * its prerequisites' committed snapshots (closure ← aliases; ner ←
+ * mentions, closure; triples ← mentions, closure; priors ← triples). A
+ * selected stage commits any missing prerequisite first, without
+ * printing its line, so `--stages ner` alone on a fresh directory runs
+ * mentions, aliases and closure as well.
  */
 object Main {
 
   def main(args: Array[String]): Unit = {
-    val opts = args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
-    val corpus = opts.getOrElse("corpus", "gen:4096")
-    val outDir = opts.getOrElse("out", "/tmp/graft-out")
-    val stages = opts.getOrElse("stages", "mentions,aliases,closure,triples")
-      .split(",").toSet
-
     val builder = SparkSession.builder()
       .appName("graft-kg-construct")
       .config("spark.sql.shuffle.partitions",
@@ -43,92 +43,77 @@ object Main {
         s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try run(spark, args) finally spark.stop()
+  }
+
+  /** Entity-type side inputs of the `ner` stage, derived from the corpus
+    * dictionary (in production these come from NerCorpus.readUriUriNt
+    * over real NT dumps): (subject, object) types and (typeUri,
+    * typeName) names. */
+  private[graft] def nerSideInputs(spark: SparkSession): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val entityTypes = (for {
+      e <- CorpusGen.dictionary.values.toSeq.distinct
+      lang <- CorpusGen.langs
+    } yield (TextFunctions.nameToUri(e, lang),
+      "http://graft.dev/ontology/Component")).toDF("subject", "object")
+    val typeNames = Seq(("http://graft.dev/ontology/Component", "component"))
+      .toDF("typeUri", "typeName")
+    (entityTypes, typeNames)
+  }
+
+  /** Run the selected stages on `spark`; returns the run's counters. */
+  def run(spark: SparkSession, args: Array[String]): Map[String, Long] = {
+    val opts = args.sliding(2, 2).collect {
+      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
+    }.toMap
+    val corpus = opts.getOrElse("corpus", "gen:4096")
+    val outDir = opts.getOrElse("out", "/tmp/graft-out")
+    val stages = opts.getOrElse("stages", "mentions,aliases,closure,triples")
+      .split(",").toSet
     import spark.implicits._
 
     val metrics = new Metrics(spark)
-    val parsedCounter = metrics.counter("files_parsed")
-    val cp = new Checkpoints(spark, s"$outDir/stages")
-    val dict = CorpusGen.dictionary
+    try {
+      val parsedCounter = metrics.counter("files_parsed")
+      val cp = new Checkpoints(spark, s"$outDir/stages")
+      val dict = CorpusGen.dictionary
 
-    val files: DataFrame =
-      if (corpus.startsWith("gen:")) {
-        val n = corpus.drop(4).toInt
-        spark.range(n).map(i => CorpusGen.file(i)).toDF()
-      } else spark.read.parquet(corpus)
+      val files: DataFrame =
+        if (corpus.startsWith("gen:")) {
+          val n = corpus.drop(4).toInt
+          spark.range(n).map(i => CorpusGen.file(i)).toDF()
+        } else spark.read.parquet(corpus)
 
-    // files_parsed counts INSIDE the lambdas that already deserialize
-    // each row (the parse flatMap/map of every consuming stage) — a
-    // dedicated counting `.map` here would force a whole
-    // DeserializeToObject -> MapElements -> SerializeFromObject pass
-    // per stage just for the side effect (PlanSpec guards the absence)
-    def typedFiles = files.as[CodeFile]
-    val dictB = spark.sparkContext.broadcast(dict)
+      // files_parsed counts inside the lambda that already deserializes
+      // each row (PlanSpec guards the absence of a counting pass)
+      def typedFiles = files.as[CodeFile]
+      val countParse: CodeFile => Unit = _ => parsedCounter.add(1)
 
-    var mentions: DataFrame = null
-    if (stages("mentions")) {
-      // one fused persist-free stage (see Triples.mentionTriples): the
-      // stage snapshot below is the materialization boundary
-      mentions = cp.runStage("01_mentions") {
-        typedFiles.flatMap { f =>
-          parsedCounter.add(1)
-          val p = graft.parse.CodeParser.parse(f, dictB.value)
-          if (p.aliasTarget.isDefined) Iterator.empty[graft.core.Mention]
-          else graft.parse.Segmenter.sentencesWithMentions(p)
-        }.toDF()
+      // each stage's output: its committed snapshot, computed and committed
+      // on first use
+      lazy val mentions = cp.runStage("01_mentions") {
+        Mentions.extract(typedFiles, dict, onParse = countParse).toDF()
       }
-      println(s"[graft] mentions: ${cp.rows("01_mentions")}")
-    }
-    var aliases: DataFrame = null
-    if (stages("aliases")) {
-      // pushed-down content-prefix scan: alias files are ~2% of the
-      // corpus, re-scanning beats persisting the full parse
-      aliases = cp.runStage("02_aliases") {
-        typedFiles.filter(col("content").startsWith("#ALIAS [["))
-          .map { f => parsedCounter.add(1); graft.parse.CodeParser.parse(f, dictB.value) }
-          .flatMap(p => p.aliasTarget.map(t => (p.uri, t)))
-          .toDF("src", "dst")
+      lazy val aliases = cp.runStage("02_aliases") {
+        Mentions.aliasEdges(typedFiles, dict, onParse = countParse).toDF("src", "dst")
       }
-      println(s"[graft] alias edges: ${cp.rows("02_aliases")}")
-    }
-    var canon: DataFrame = null
-    if (stages("closure")) {
-      canon = cp.runStage("03_closure") {
+      lazy val canon = cp.runStage("03_closure") {
         // log-depth doubling (the scale default, as in NerCorpus);
         // small alias graphs take the same adaptive driver fast path
-        Redirects.transitiveClosureDoubling(
-          if (aliases != null) aliases else spark.read.parquet(s"$outDir/stages/02_aliases"))
+        Redirects.transitiveClosureDoubling(aliases)
       }
-      println(s"[graft] canonical aliases: ${cp.rows("03_closure")}")
-    }
-    if (stages("ner")) {
-      // full ner-corpus chain (reference 01->03) as an operational
-      // stage: entity-type side inputs derived from the corpus
-      // dictionary (in production these come from
-      // NerCorpus.readUriUriNt over real NT dumps)
-      import graft.functions.TextFunctions
-      val entityTypes = (for {
-        e <- dict.values.toSeq.distinct
-        lang <- CorpusGen.langs
-      } yield (TextFunctions.nameToUri(e, lang),
-        "http://graft.dev/ontology/Component")).toDF("subject", "object")
-      val typeNames = Seq(("http://graft.dev/ontology/Component", "component"))
-        .toDF("typeUri", "typeName")
-      cp.runStage("05_ner_corpus") {
-        NerCorpus.run(typedFiles, dict, entityTypes, typeNames,
-          onParse = _ => parsedCounter.add(1))
+      lazy val ner = cp.runStage("05_ner_corpus") {
+        // ner-corpus chain 02->03 (reference 01 is the mentions stage)
+        val (entityTypes, typeNames) = nerSideInputs(spark)
+        NerCorpus.annotatedCorpus(mentions.as[Mention],
+          NerCorpus.typedEntities(entityTypes, canon), typeNames)
       }
-      println(s"[graft] ner annotated sentences: ${cp.rows("05_ner_corpus")}")
-    }
-    if (stages("triples")) {
-      val m = if (mentions != null) mentions
-        else spark.read.parquet(s"$outDir/stages/01_mentions")
-      val c = if (canon != null) canon
-        else spark.read.parquet(s"$outDir/stages/03_closure")
-      val triples = cp.runStage("04_triples") {
+      lazy val triples = cp.runStage("04_triples") {
         // skew-controlled linking join: MG-sketch hot keys -> selective
         // salting (Triples.linkCanonical) — identical rows to the plain
         // left-outer join, but no reducer pins on a ubiquitous surface
-        Triples.linkCanonical(m, c)
+        Triples.linkCanonical(mentions, canon)
           .select(
             col("uri").as("subj"),
             lit("http://graft.dev/ontology#mentions").as("pred"),
@@ -139,60 +124,79 @@ object Main {
             substring(regexp_extract(col("uri"), "entity/(.*)$", 1), 1, 2).as("repo_prefix"))
           .distinct()
       }
-      triples.write.mode("overwrite")
-        .partitionBy("lang", "repo_prefix")
-        .parquet(s"$outDir/triples")
-      // opt-in consumer-side co-location (--bucket-triples true): the
-      // same triples also land bucketed+sorted by subj so downstream
-      // subj-joins run zero-Exchange (TripleMaterialize.writeBucketed;
-      // PlanSpec guards the read-back plan)
-      if (opts.get("bucket-triples").contains("true"))
-        TripleMaterialize.writeBucketed(
-          triples.select(col("subj"), col("pred"), col("obj")), "graft_triples_bucketed")
-      println(s"[graft] triples: ${cp.rows("04_triples")}")
-    }
-    if (stages("priors")) {
-      // entity-importance stage: PageRank over the materialized triple
-      // graph — the popularity prior behind the skew-aware linking join
-      // (its top ranks ARE the hot-key list for Skew.saltedJoin) and
-      // most-common-sense disambiguation
-      val t = spark.read.parquet(s"$outDir/triples")
-      cp.runStage("06_priors") {
-        TopicGraph.pageRank(t.select(col("subj").as("src"), col("obj").as("dst")))
+      lazy val priors = cp.runStage("06_priors") {
+        // entity-importance stage: PageRank over the triple graph — the
+        // popularity prior behind the skew-aware linking join (its top
+        // ranks ARE the hot-key list for Skew.saltedJoin) and
+        // most-common-sense disambiguation
+        TopicGraph.pageRank(triples.select(col("subj").as("src"), col("obj").as("dst")))
           .select(col("node").as("entity"), col("rank").as("pagerank"))
       }
-      println(s"[graft] priors: ${cp.rows("06_priors")} ranked entities")
-    }
-    if (stages("dedup")) {
-      // curation stage: the corpus's persistent SIGNATURE INDEX (sign
-      // once per batch; later increments search it via
-      // Dedup.incrementalCandidates(..., fast = true) — the flag MUST
-      // match this index's xxhash64 family — without re-scanning text)
-      // and the near-dup keep list (candidates -> components -> keep
-      // min-id)
-      val docs = files.select(
-        xxhash64(col("repo"), col("path"), col("commit")).as("doc_id"),
-        col("content").as("text"))
-      val sigs = cp.runStage("07_sig_index") {
-        // fast xxhash64 signatures: the engine-internal index path
-        Dedup.minhashSignaturesFast(docs)
+
+      if (stages("mentions")) {
+        mentions
+        println(s"[graft] mentions: ${cp.rows("01_mentions")}")
       }
-      val keep = cp.runStage("08_keep_list") {
-        val edges = Dedup.candidatesFromSigs(sigs)
-          .filter(col("est_jaccard") >= 0.5)
-          .select(col("id_a").as("src"), col("id_b").as("dst"))
-        val cc = TopicGraph.connectedComponents(edges)
-          .withColumnRenamed("node", "doc_id")
-        docs.select(col("doc_id"))
-          .join(cc, Seq("doc_id"), "left_outer")
-          .select(col("doc_id"),
-            when(col("label").isNull || col("label") === col("doc_id"), 1)
-              .otherwise(0).as("keep"))
+      if (stages("aliases")) {
+        aliases
+        println(s"[graft] alias edges: ${cp.rows("02_aliases")}")
       }
-      val kept = keep.filter(col("keep") === 1).count()
-      println(s"[graft] dedup: ${cp.rows("08_keep_list")} docs, $kept kept")
-    }
-    println(s"[graft] metrics: ${metrics.report()}")
-    spark.stop()
+      if (stages("closure")) {
+        canon
+        println(s"[graft] canonical aliases: ${cp.rows("03_closure")}")
+      }
+      if (stages("ner")) {
+        ner
+        println(s"[graft] ner annotated sentences: ${cp.rows("05_ner_corpus")}")
+      }
+      if (stages("triples")) {
+        triples.write.mode("overwrite")
+          .partitionBy("lang", "repo_prefix")
+          .parquet(s"$outDir/triples")
+        // opt-in consumer-side co-location (--bucket-triples true): the
+        // same triples also land bucketed+sorted by subj so downstream
+        // subj-joins run zero-Exchange (TripleMaterialize.writeBucketed;
+        // PlanSpec guards the read-back plan)
+        if (opts.get("bucket-triples").contains("true"))
+          TripleMaterialize.writeBucketed(
+            triples.select(col("subj"), col("pred"), col("obj")), "graft_triples_bucketed")
+        println(s"[graft] triples: ${cp.rows("04_triples")}")
+      }
+      if (stages("priors")) {
+        priors
+        println(s"[graft] priors: ${cp.rows("06_priors")} ranked entities")
+      }
+      if (stages("dedup")) {
+        // curation stage: the corpus's persistent SIGNATURE INDEX (sign
+        // once per batch; later increments search it via
+        // Dedup.incrementalCandidates(..., fast = true) — the flag MUST
+        // match this index's xxhash64 family — without re-scanning text)
+        // and the near-dup keep list (candidates -> components -> keep
+        // min-id)
+        val docs = files.select(
+          xxhash64(col("repo"), col("path"), col("commit")).as("doc_id"),
+          col("content").as("text"))
+        val sigs = cp.runStage("07_sig_index") {
+          // fast xxhash64 signatures: the engine-internal index path
+          Dedup.minhashSignaturesFast(docs)
+        }
+        val keep = cp.runStage("08_keep_list") {
+          val edges = Dedup.candidatesFromSigs(sigs)
+            .filter(col("est_jaccard") >= 0.5)
+            .select(col("id_a").as("src"), col("id_b").as("dst"))
+          val cc = TopicGraph.connectedComponents(edges)
+            .withColumnRenamed("node", "doc_id")
+          docs.select(col("doc_id"))
+            .join(cc, Seq("doc_id"), "left_outer")
+            .select(col("doc_id"),
+              when(col("label").isNull || col("label") === col("doc_id"), 1)
+                .otherwise(0).as("keep"))
+        }
+        val kept = keep.filter(col("keep") === 1).count()
+        println(s"[graft] dedup: ${cp.rows("08_keep_list")} docs, $kept kept")
+      }
+      println(s"[graft] metrics: ${metrics.report()}")
+      metrics.snapshot()
+    } finally metrics.close()
   }
 }

@@ -1,41 +1,55 @@
 package graft.pipeline
 
-import graft.core.{CodeFile, Mention, ParsedFile}
+import graft.core.{CodeFile, Mention}
 import graft.parse.{CodeParser, Segmenter}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.col
 
 /**
- * Per-file mention extraction — the extract_links.pig /
- * ner-corpus/01_extract_sentences_with_links.pig pipeline: parse every
- * file, segment, emit one row per (sentence ⊇ mention).
+ * The corpus front end: the one place files become mention rows and
+ * alias edges — the extract_links.pig / extract_redirects.pig /
+ * ner-corpus/01_extract_sentences_with_links.pig pipelines.
  *
- * Execution shape (SURVEY §3 entry point A): scan → map(parse) →
- * flatMap(mentions) — a single no-shuffle stage; the anchor dictionary
- * rides to every task as a broadcast variable (the replicated-join
- * pattern of ner-corpus/03_…pig:22 generalized to the parser).
+ * Execution shape (SURVEY §3 entry point A): scan → flatMap(parse,
+ * segment) — a single no-shuffle stage that deserializes each row once;
+ * the anchor dictionary rides to every task as a broadcast variable (the
+ * replicated-join pattern of ner-corpus/03_…pig:22 generalized to the
+ * parser).
+ *
+ * `onParse` is called once per parse, inside the lambda that already
+ * deserializes the row, so a caller can count parses (Main's
+ * `files_parsed`) without a separate counting pass over the scan.
  */
 object Mentions {
 
-  def parseAll(files: Dataset[CodeFile], dictionary: Map[String, String]): Dataset[ParsedFile] = {
+  /** One row per (sentence ⊇ mention); alias files emit nothing. */
+  def extract(files: Dataset[CodeFile], dictionary: Map[String, String],
+      onParse: CodeFile => Unit = _ => ()): Dataset[Mention] = {
     val spark = files.sparkSession
     import spark.implicits._
     val dictB = spark.sparkContext.broadcast(dictionary)
-    files.map(f => CodeParser.parse(f, dictB.value))
+    files.flatMap { f =>
+      onParse(f)
+      val p = CodeParser.parse(f, dictB.value)
+      if (p.aliasTarget.isDefined) Iterator.empty[Mention]
+      else Segmenter.sentencesWithMentions(p)
+    }
   }
 
-  def extract(files: Dataset[CodeFile], dictionary: Map[String, String],
-      sentenceTokens: Int = 10): Dataset[Mention] = {
+  /** Alias edge list (src, dst) from the corpus. `#ALIAS [[T]]` is
+    * anchored at the start of the file (CodeParser.AliasRe), so a
+    * pushed-down `startsWith` prefilter selects exactly the alias files
+    * and only those (~2% of the corpus) are parsed. */
+  def aliasEdges(files: Dataset[CodeFile], dictionary: Map[String, String],
+      onParse: CodeFile => Unit = _ => ()): Dataset[(String, String)] = {
     val spark = files.sparkSession
     import spark.implicits._
-    parseAll(files, dictionary).flatMap(p => Segmenter.sentencesWithMentions(p, sentenceTokens))
-  }
-
-  /** Alias edge list from the corpus (extract_redirects.pig analog). */
-  def aliasEdges(files: Dataset[CodeFile], dictionary: Map[String, String]): Dataset[(String, String)] = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    parseAll(files, dictionary)
-      .filter(_.aliasTarget.isDefined)
-      .map(p => (p.uri, p.aliasTarget.get))
+    val dictB = spark.sparkContext.broadcast(dictionary)
+    files.filter(col("content").startsWith("#ALIAS [["))
+      .flatMap { f =>
+        onParse(f)
+        val p = CodeParser.parse(f, dictB.value)
+        p.aliasTarget.map(t => (p.uri, t))
+      }
   }
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
  * NER training-corpus pipeline — the examples/ner-corpus/01..03 chain
  * re-realized:
  *
- *   01 extract_sentences_with_links  -> Mentions.extract (U1)
+ *   01 extract_sentences_with_links  -> Mentions.extract (U1), alias
+ *      edges from Mentions.aliasEdges closed by Redirects
  *   02 dbpedia_article_types         -> entity typing through redirect
  *      resolution (left join + coalesce, J2+P5) and generic-type filter
  *      (`type NEQ owl#Thing`, ner-corpus/02_…pig:34-35)
@@ -46,22 +47,18 @@ object NerCorpus {
 
   /**
    * Stage 02: per-entity type, with the entity uri canonicalized through
-   * the alias closure. `entityTypes(subject, object)` rows with a
-   * generic type are dropped (the owl#Thing filter).
+   * the alias closure `canon(src, root)` (Redirects.transitiveClosure*).
+   * `entityTypes(subject, object)` rows with a generic type are dropped
+   * (the owl#Thing filter).
    */
-  def typedEntities(entityTypes: DataFrame, aliasEdges: DataFrame,
-      genericType: String = "http://www.w3.org/2002/07/owl#Thing"): DataFrame = {
-    // pointer-doubling closure: log-depth joins at scale (the per-hop
-    // loop is O(depth) rounds); small graphs take the same adaptive
-    // driver fast path either way
-    val canon = Redirects.transitiveClosureDoubling(aliasEdges)
+  def typedEntities(entityTypes: DataFrame, canon: DataFrame,
+      genericType: String = "http://www.w3.org/2002/07/owl#Thing"): DataFrame =
     entityTypes
       .filter(col("object") =!= genericType)
       .join(canon.withColumnRenamed("src", "subject"), Seq("subject"), "left_outer")
       .select(coalesce(col("root"), col("subject")).as("entity"),
         col("object").as("typeUri"))
       .distinct()
-  }
 
   /**
    * Stage 03: mentions joined with typed entities (shuffle join on the
@@ -213,36 +210,17 @@ object NerCorpus {
     out
   }
 
-  /** Full chain over a corpus + NT-file side inputs. Alias edges come
-    * from a pushed-down content-prefix scan (exactly the parser's
-    * anchored AliasRe), the mention branch runs as one fused
-    * persist-free stage — same shape as Triples.mentionTriples; see the
-    * rationale there. */
+  /** Full chain over a corpus + NT-file side inputs: the corpus front
+    * end (Mentions.extract, Mentions.aliasEdges), the pointer-doubling
+    * alias closure (log-depth joins at scale; small alias graphs take the
+    * adaptive driver fast path), typing, and the annotated merge. Main's
+    * `ner` stage runs the same last two steps over its committed
+    * mention and closure snapshots instead. */
   def run(files: Dataset[CodeFile], dictionary: Map[String, String],
-      entityTypes: DataFrame, typeNames: DataFrame,
-      onParse: CodeFile => Unit = _ => ()): DataFrame = {
-    val spark = files.sparkSession
-    import spark.implicits._
-    val dictB = spark.sparkContext.broadcast(dictionary)
-    // `onParse` lets a caller count parsed files from inside the
-    // flatMap/map that already deserializes each row (Main's
-    // files_parsed counter) — a separate counting `.map` would pay a
-    // whole deserialize+reserialize pass per stage for the side effect.
-    // It fires ONLY in the mentions pass below (which scans every file
-    // exactly once, alias files included); hooking the alias branch too
-    // would double-count alias files — the counter means "files", not
-    // "parse invocations"
-    val aliases = files.filter(col("content").startsWith("#ALIAS [["))
-      .map(f => graft.parse.CodeParser.parse(f, dictB.value))
-      .flatMap(p => p.aliasTarget.map(t => (p.uri, t)))
-      .toDF("src", "dst")
-    val mentions = files.flatMap { f =>
-      onParse(f)
-      val p = graft.parse.CodeParser.parse(f, dictB.value)
-      if (p.aliasTarget.isDefined) Iterator.empty[Mention]
-      else graft.parse.Segmenter.sentencesWithMentions(p)
-    }
-    val typed = typedEntities(entityTypes, aliases)
-    annotatedCorpus(mentions, typed, typeNames)
+      entityTypes: DataFrame, typeNames: DataFrame): DataFrame = {
+    val canon = Redirects.transitiveClosureDoubling(
+      Mentions.aliasEdges(files, dictionary).toDF("src", "dst"))
+    annotatedCorpus(Mentions.extract(files, dictionary),
+      typedEntities(entityTypes, canon), typeNames)
   }
 }

@@ -20,27 +20,24 @@ object Triples {
       recoverStraddlers: Boolean = false): DataFrame = {
     val spark = files.sparkSession
     import spark.implicits._
-    val dictB = spark.sparkContext.broadcast(dict)
 
-    // Alias edges first: `#ALIAS [[T]]` is anchored to the file start
-    // (CodeParser.AliasRe), so a startsWith pre-filter selects exactly
-    // the alias files. Re-scanning the columnar source for this
-    // highly-selective predicate costs one cheap vectorized decode pass;
-    // persisting the full parsed corpus (text + spans) to share a single
-    // pass costs far more in memory traffic and pins the map chain to
-    // the persist's partitioning — measured slower at every parallelism.
-    val edges = files.filter(col("content").startsWith("#ALIAS [["))
-      .map(f => graft.parse.CodeParser.parse(f, dictB.value))
-      .flatMap(p => p.aliasTarget.map(t => (p.uri, t)))
-      .toDF("src", "dst")
-    // log-depth doubling closure (scale default; small alias graphs
-    // take the adaptive driver fast path, identical output)
-    val canon = Redirects.transitiveClosureDoubling(edges)
+    // log-depth doubling closure over the corpus's alias edges (scale
+    // default; small alias graphs take the adaptive driver fast path,
+    // identical output). Re-scanning the columnar source for the alias
+    // prefilter costs one cheap vectorized decode pass; persisting the
+    // full parsed corpus to share a single pass costs far more in memory
+    // traffic and pins the map chain to the persist's partitioning —
+    // measured slower at every parallelism.
+    val canon = Redirects.transitiveClosureDoubling(
+      Mentions.aliasEdges(files, dict).toDF("src", "dst"))
 
     // Mention emission: one fused persist-free stage —
     // scan → parse → segment → project(uri, target) → partial distinct —
     // writing directly into the final distinct's shuffle. Alias files
     // emit no mentions (parser skips the dictionary scan on them).
+    // Not Mentions.extract: this is graft.Bench's throughput path, and
+    // routing it through extract would add `recoverStraddlers` there.
+    val dictB = spark.sparkContext.broadcast(dict)
     val mentions = files.flatMap { f =>
       val p = graft.parse.CodeParser.parse(f, dictB.value)
       if (p.aliasTarget.isDefined) Iterator.empty[(String, String)]

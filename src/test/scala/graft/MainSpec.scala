@@ -1,0 +1,69 @@
+package graft
+
+import graft.core.Mention
+import graft.fixtures.CorpusGen
+import graft.parse.CodeParser
+import graft.pipeline.{Checkpoints, NerCorpus, Triples}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.Files
+
+/**
+ * `Main` end to end on a generated corpus: each stage reads its inputs
+ * from its prerequisites' committed snapshots, so the corpus is parsed
+ * once per file (alias files once more, by the alias stage), a missing
+ * prerequisite is committed rather than read raw, and a rerun over a
+ * committed directory parses nothing.
+ */
+class MainSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkTestSession.spark
+  import spark.implicits._
+
+  private val n = 256
+  private val nerStages = Seq("01_mentions", "02_aliases", "03_closure", "05_ner_corpus")
+  private lazy val files = spark.range(n).map(i => CorpusGen.file(i))
+  private lazy val aliasFiles = (0L until n).count(i =>
+    CodeParser.parse(CorpusGen.file(i), CorpusGen.dictionary).aliasTarget.isDefined)
+
+  private def main(out: String, stages: String): Map[String, Long] =
+    Main.run(spark, Array("--corpus", s"gen:$n", "--out", out, "--stages", stages))
+
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  private lazy val nerWant: Seq[String] = {
+    val (entityTypes, typeNames) = Main.nerSideInputs(spark)
+    rows(NerCorpus.run(files, CorpusGen.dictionary, entityTypes, typeNames))
+  }
+
+  test("ner stage over committed snapshots equals NerCorpus.run; a rerun parses nothing") {
+    val out = Files.createTempDirectory("graft-main").toString
+    val first = main(out, "mentions,aliases,closure,ner")
+    assert(aliasFiles > 0 && first("files_parsed") == n + aliasFiles)
+    assert(nerWant.nonEmpty)
+    assert(rows(spark.read.parquet(s"$out/stages/05_ner_corpus")) == nerWant)
+    val again = main(out, "mentions,aliases,closure,ner")
+    assert(again("files_parsed") == 0)
+  }
+
+  test("--stages ner alone commits its prerequisites and gives the same rows") {
+    val out = Files.createTempDirectory("graft-main-ner").toString
+    val counters = main(out, "ner")
+    val cp = new Checkpoints(spark, s"$out/stages")
+    assert(nerStages.forall(cp.isCommitted), cp.committedStages())
+    assert(counters("files_parsed") == n + aliasFiles)
+    assert(rows(spark.read.parquet(s"$out/stages/05_ner_corpus")) == nerWant)
+  }
+
+  test("a stage directory without a manifest is recomputed, not read") {
+    val out = Files.createTempDirectory("graft-main-torn").toString
+    // parquet data but no _MANIFEST: an uncommitted snapshot
+    Seq(Mention("bogus:uri", 1, "bogus:target", 0, 1, "x", "0" * 64)).toDF()
+      .write.parquet(s"$out/stages/01_mentions")
+    val counters = main(out, "triples")
+    val cp = new Checkpoints(spark, s"$out/stages")
+    assert(Seq("01_mentions", "02_aliases", "03_closure", "04_triples").forall(cp.isCommitted))
+    assert(counters("files_parsed") == n + aliasFiles)
+    val got = spark.read.parquet(s"$out/triples").select("subj", "obj").distinct()
+    assert(rows(got) == rows(Triples.mentionTriples(files, CorpusGen.dictionary)))
+  }
+}

@@ -154,7 +154,8 @@ class PipelineSpec extends AnyFunSuite {
   test("mentions pipeline end-to-end on the synthetic corpus (P/R vs goldens)") {
     val corpus = CorpusGen.generate(512)
     val files = spark.createDataset(corpus.map(_.file))
-    val parsed = Mentions.parseAll(files, CorpusGen.dictionary)
+    val dict = CorpusGen.dictionary
+    val parsed = files.map(f => graft.parse.CodeParser.parse(f, dict))
     // per-file mention-set parity with planted goldens
     val got = parsed.flatMap(p => p.mentions.map(m =>
         (p.repo, p.path, m.begin, m.end, m.value)))
@@ -215,6 +216,20 @@ class PipelineSpec extends AnyFunSuite {
     val got = Mentions.aliasEdges(files, CorpusGen.dictionary).collect().toSet
     assert(got == CorpusGen.aliasEdges(corpus).toSet)
     assert(got.nonEmpty)
+    // the startsWith prefilter selects exactly the files the anchored
+    // parser calls aliases, near misses included
+    val nearMisses = Seq(" #ALIAS [[Lead]]", "#ALIAS [x]", "text\n#ALIAS [[Second]]",
+      "#ALIAS [[]]", "#ALIAS [[Plain]]\nbody").zipWithIndex.map { case (c, i) =>
+      graft.core.CodeFile("r", s"near/$i.md", "c", "md", c)
+    }
+    val all = corpus.map(_.file) ++ nearMisses
+    val want = all.flatMap { f =>
+      val p = graft.parse.CodeParser.parse(f, CorpusGen.dictionary)
+      p.aliasTarget.map(t => (p.uri, t))
+    }.toSet
+    assert(Mentions.aliasEdges(spark.createDataset(all), CorpusGen.dictionary)
+      .collect().toSet == want)
+    assert(want.size == got.size + 2, "only `#ALIAS [[]]` and `#ALIAS [[Plain]]` are aliases")
   }
 
   test("CappedConcat aggregator is deterministic under explicit sort key") {

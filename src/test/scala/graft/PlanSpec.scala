@@ -355,17 +355,13 @@ class PlanSpec extends AnyFunSuite {
     // MapElements -> SerializeFromObject pass per stage just for a
     // side-effecting counter. The counter now lives inside the parse
     // flatMap itself; the stage plan must deserialize exactly once.
+    // Mentions.extract is the stage body Main runs.
     import spark.implicits._
     val counter = spark.sparkContext.longAccumulator("files_parsed")
-    val dictB = spark.sparkContext.broadcast(graft.fixtures.CorpusGen.dictionary)
     val files = spark.createDataset(
       graft.fixtures.CorpusGen.generate(64).map(_.file)).toDF()
-    val stage = files.as[graft.core.CodeFile].flatMap { f =>
-      counter.add(1)
-      val p = graft.parse.CodeParser.parse(f, dictB.value)
-      if (p.aliasTarget.isDefined) Iterator.empty[graft.core.Mention]
-      else graft.parse.Segmenter.sentencesWithMentions(p)
-    }.toDF()
+    val stage = graft.pipeline.Mentions.extract(files.as[graft.core.CodeFile],
+      graft.fixtures.CorpusGen.dictionary, onParse = _ => counter.add(1)).toDF()
     assert(stage.count() > 0 && counter.value == 64)
     val p = stage.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     val deser = p.linesIterator.count(_.contains("DeserializeToObject"))
