@@ -6,6 +6,7 @@ import graft.functions.TextFunctions
 import graft.pipeline._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
 
 /**
  * spark-submit entry point — the full KG-construction pipeline with
@@ -150,9 +151,13 @@ object Main {
         println(s"[graft] ner annotated sentences: ${cp.rows("05_ner_corpus")}")
       }
       if (stages("triples")) {
-        triples.write.mode("overwrite")
-          .partitionBy("lang", "repo_prefix")
-          .parquet(s"$outDir/triples")
+        // the export is rewritten only when this run computes the
+        // snapshot, or when the export is missing or did not finish
+        if (!cp.isCommitted("04_triples") ||
+            !Files.exists(Paths.get(s"$outDir/triples/_SUCCESS")))
+          triples.write.mode("overwrite")
+            .partitionBy("lang", "repo_prefix")
+            .parquet(s"$outDir/triples")
         // opt-in consumer-side co-location (--bucket-triples true): the
         // same triples also land bucketed+sorted by subj so downstream
         // subj-joins run zero-Exchange (TripleMaterialize.writeBucketed;

@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.functions.Aggregators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import java.util.concurrent.ConcurrentLinkedQueue
 
 /**
  * Topic-corpus pipeline — the examples/topic-corpus/01..06 chain
@@ -12,8 +13,7 @@ import org.apache.spark.sql.functions._
  *   01 count_topic_direct_degrees -> TopicGraph.degrees (3-way cogroup
  *      semantics) + non-trivial filter (`…pig:48-49`)
  *   02 create_topics_descriptions -> grounding left joins + coalesce,
- *      quality gate (CheckAbstract, U5), HAVING-style post-agg filter,
- *      SPLIT into grounded/orphaned (`…pig:101-103`)
+ *      quality gate (CheckAbstract, U5), HAVING-style post-agg filter
  *   03/05 grounded ancestry       -> TopicGraph.groundedAncestry (BFS
  *      with paths + NoLoopInPath)
  *   06 aggregate abstracts        -> size-capped concat (U3 Aggregator)
@@ -49,16 +49,6 @@ object TopicCorpus {
         coalesce(col("goodAbstract"), lit(false)).cast("int").as("hasGoodAbstract"))
   }
 
-  /** 02 SPLIT: one pass, two disjoint outputs (grounded / orphaned).
-    * The shared persist is CALLER-OWNED (Pig's multi-query pattern made
-    * explicit): unpersist the returned frames' common source after both
-    * branches are consumed. */
-  def splitGrounded(grounded: DataFrame, minEntities: Long = 1): (DataFrame, DataFrame) = {
-    val shared = grounded.persist()
-    (shared.filter(col("entityCount") >= minEntities),
-      shared.filter(col("entityCount") < minEntities))
-  }
-
   /**
    * 06: per-topic text corpus — abstracts of the topic's grounded
    * entities aggregated with the size-capped concat (explicit sort key),
@@ -85,35 +75,72 @@ object TopicCorpus {
   /**
    * Full chain with checkpointed stages and a multi-store ending (TSV +
    * NTriples of the same ordered relation, 06_…pig:91-100).
+   *
+   * Only 01→02 and 06→sinks depend on each other, so the chain runs as
+   * three concurrent branches, Pig's multi-query execution made
+   * explicit: `01_degrees → 02_grounded`, `05_ancestry`, and
+   * `06_abstracts →` the TSV and NT sinks. At small sizes almost every
+   * job is one task and driver work (planning, codegen, scheduling) is
+   * the bottleneck, so one branch's driver work overlaps the others'
+   * jobs. Each stage's jobs carry a job group named after the stage (the
+   * sinks' jobs stay in `06_abstracts`). A failing branch does not stop
+   * its siblings: every stage still commits atomically, `run` rethrows
+   * the first failure once all branches are done, and a rerun resumes
+   * from the stages that committed.
    */
   def run(spark: SparkSession, edges: DataFrame, grounding: DataFrame,
       abstracts: DataFrame, roots: DataFrame, outDir: String): Map[String, Long] = {
     val cp = new Checkpoints(spark, s"$outDir/stages")
-    val topics = cp.runStage("01_degrees") { nonTrivialTopics(edges) }
-    cp.runStage("02_grounded") {
-      groundedTopics(topics, grounding, abstracts)
+    def stage(name: String)(compute: => DataFrame): DataFrame = {
+      spark.sparkContext.setJobGroup(name, s"topic corpus $name")
+      cp.runStage(name)(compute)
     }
-    cp.runStage("05_ancestry") {
-      TopicGraph.groundedAncestry(edges, roots, maxDepth = 5)
-    }
-    val corpus = cp.runStage("06_abstracts") {
-      topicAbstracts(grounding.select(col("topic"), col("entity")), abstracts)
-    }.persist()
-    // multi-store: shared upstream, two sinks
-    corpus.select(col("topic"), col("abstractCount"), col("safeText"))
-      .orderBy(desc("abstractCount"), asc("topic"))
-      .write.mode("overwrite").option("sep", "\t").csv(s"$outDir/topics_tsv")
-    TripleMaterialize.uriLiteralLines(
-      corpus.select(col("topic").as("subj"), col("safeText").as("obj"),
-        lit("en").as("lang")),
-      pred = "http://graft.dev/ontology#corpus")
-      .write.mode("overwrite").text(s"$outDir/topics_nt")
-    val counters = Map(
+    inBranches(
+      "01_degrees" -> { () =>
+        val topics = stage("01_degrees") { nonTrivialTopics(edges) }
+        stage("02_grounded") { groundedTopics(topics, grounding, abstracts) }
+      },
+      "05_ancestry" -> { () =>
+        stage("05_ancestry") { TopicGraph.groundedAncestry(edges, roots, maxDepth = 5) }
+      },
+      "06_abstracts" -> { () =>
+        val corpus = stage("06_abstracts") {
+          topicAbstracts(grounding.select(col("topic"), col("entity")), abstracts)
+        }.persist()
+        try {
+          // multi-store: shared upstream, two sinks
+          corpus.select(col("topic"), col("abstractCount"), col("safeText"))
+            .orderBy(desc("abstractCount"), asc("topic"))
+            .write.mode("overwrite").option("sep", "\t").csv(s"$outDir/topics_tsv")
+          TripleMaterialize.uriLiteralLines(
+            corpus.select(col("topic").as("subj"), col("safeText").as("obj"),
+              lit("en").as("lang")),
+            pred = "http://graft.dev/ontology#corpus")
+            .write.mode("overwrite").text(s"$outDir/topics_nt")
+        } finally corpus.unpersist(false) // don't leak into the session
+      })
+    Map(
       "topics" -> cp.rows("01_degrees"),
       "grounded" -> cp.rows("02_grounded"),
       "ancestry" -> cp.rows("05_ancestry"),
       "corpus" -> cp.rows("06_abstracts"))
-    corpus.unpersist(false) // both sinks written; don't leak into the session
-    counters
+  }
+
+  /** Runs each branch on a driver thread of its own, created here so it
+    * inherits the caller's session and local properties (a job group
+    * it sets stays its own). Waits for every branch, then rethrows the
+    * first failure, with any later ones attached as suppressed. */
+  private def inBranches(branches: (String, () => Any)*): Unit = {
+    val failures = new ConcurrentLinkedQueue[Throwable]()
+    val threads = branches.map { case (name, body) =>
+      new Thread(() => try body() catch { case e: Throwable => failures.add(e) },
+        s"topic-corpus-$name")
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    Option(failures.poll()).foreach { first =>
+      failures.forEach(first.addSuppressed(_))
+      throw first
+    }
   }
 }

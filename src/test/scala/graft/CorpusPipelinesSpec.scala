@@ -117,6 +117,84 @@ class CorpusPipelinesSpec extends AnyFunSuite {
     assert(!paths.exists(p => p.split("/").count(_ == "t1") > 1))
   }
 
+  /** A taxonomy under "root": `levels` levels of `width` topics, each
+    * topic grounded by two entities with good abstracts. */
+  private def taxonomy(levels: Int, width: Int) = {
+    val topics = for (l <- 1 to levels; i <- 0 until width) yield s"t$l-$i"
+    val edges = topics.map { t =>
+      val Array(l, i) = t.drop(1).split("-").map(_.toInt)
+      t -> (if (l == 1) "root" else s"t${l - 1}-${i / 2}")
+    }.toDF("src", "dst")
+    val grounding = topics.flatMap(t => Seq(t -> s"e$t-a", t -> s"e$t-b")).toDF("topic", "entity")
+    val text = (1 to 40).map(i => s"w$i").mkString(" ")
+    val abstracts = (topics.map(t => s"e$t-a") ++ topics.map(t => s"e$t-b") ++ topics)
+      .map(e => (e, s"$text $e", "en")).toDF("subject", "object", "lang")
+    (edges, grounding, abstracts, Seq("root").toDF("root"))
+  }
+
+  private val branchStages = Set("01_degrees", "02_grounded", "05_ancestry", "06_abstracts")
+
+  test("topic-corpus branches run concurrently, each stage in its own job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val (edges, grounding, abstracts, roots) = taxonomy(levels = 5, width = 24)
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
+    val spans = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (!props.exists(_.getProperty(SparkTestSession.DrainMark) != null)) started.put(e.jobId,
+          (props.flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""), e.time))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        Option(started.remove(e.jobId)).foreach { case (g, t0) => spans.add((g, t0, e.time)) }
+    }
+    sc.addSparkListener(listener)
+    val counts = try {
+      val out = Files.createTempDirectory("graft-topic-par").toString
+      val c = TopicCorpus.run(spark, edges, grounding, abstracts, roots, out)
+      SparkTestSession.drainListeners()
+      c
+    } finally sc.removeSparkListener(listener)
+    assert(counts == Map("topics" -> 121L, "grounded" -> 121L, "ancestry" -> 121L,
+      "corpus" -> 120L))
+    import scala.jdk.CollectionConverters._
+    val jobs = spans.asScala.toSeq
+    val overlapping = for {
+      (g1, s1, e1) <- jobs; (g2, s2, e2) <- jobs
+      if g1 < g2 && s1 < e2 && s2 < e1
+    } yield (g1, g2)
+    assert(overlapping.nonEmpty, s"no two stage groups ran at once: $jobs")
+    // every job of the chain carries its stage's group; the caller's stays unset
+    assert(jobs.map(_._1).toSet == branchStages, jobs.map(_._1).distinct)
+    assert(sc.getLocalProperty("spark.jobGroup.id") == null)
+  }
+
+  test("a failing topic-corpus branch leaves its siblings committed; a rerun resumes") {
+    val (edges, grounding, abstracts, roots) = taxonomy(levels = 3, width = 4)
+    val out = Files.createTempDirectory("graft-topic-fail").toString
+    val cp = new graft.pipeline.Checkpoints(spark, s"$out/stages")
+    // no `object`: 02_grounded and 06_abstracts cannot plan, their siblings commit
+    intercept[org.apache.spark.sql.AnalysisException] {
+      TopicCorpus.run(spark, edges, grounding, abstracts.drop("object"), roots, out)
+    }
+    assert(cp.committedStages() == Seq("01_degrees", "05_ancestry"))
+    // no `entity`: only 06_abstracts reads it; the rerun commits 02_grounded alone
+    intercept[org.apache.spark.sql.AnalysisException] {
+      TopicCorpus.run(spark, edges, grounding.drop("entity"), abstracts, roots, out)
+    }
+    assert(cp.committedStages() == Seq("01_degrees", "02_grounded", "05_ancestry"))
+    def manifests = Seq("01_degrees", "02_grounded", "05_ancestry").map(s =>
+      Files.getLastModifiedTime(java.nio.file.Paths.get(s"$out/stages/$s/_MANIFEST")))
+    val before = manifests
+    val resumed = TopicCorpus.run(spark, edges, grounding, abstracts, roots, out)
+    assert(cp.committedStages() == branchStages.toSeq.sorted)
+    assert(manifests == before) // only 06_abstracts committed on the good rerun
+    val clean = TopicCorpus.run(spark, edges, grounding, abstracts, roots,
+      Files.createTempDirectory("graft-topic-clean").toString)
+    assert(resumed == clean)
+  }
+
   test("NT loader exact counts + last-row golden (TestUriUriNTriplesLoader style)") {
     // 110 valid rows + malformed/comment/filtered lines interleaved —
     // mirrors the reference's assertEquals(110, ...) fixture discipline

@@ -6,14 +6,14 @@ import graft.parse.CodeParser
 import graft.pipeline.{Checkpoints, NerCorpus, Triples}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 /**
  * `Main` end to end on a generated corpus: each stage reads its inputs
  * from its prerequisites' committed snapshots, so the corpus is parsed
  * once per file (alias files once more, by the alias stage), a missing
  * prerequisite is committed rather than read raw, and a rerun over a
- * committed directory parses nothing.
+ * committed directory parses nothing and rewrites no finished export.
  */
 class MainSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
@@ -64,6 +64,46 @@ class MainSpec extends AnyFunSuite {
     assert(Seq("01_mentions", "02_aliases", "03_closure", "04_triples").forall(cp.isCommitted))
     assert(counters("files_parsed") == n + aliasFiles)
     val got = spark.read.parquet(s"$out/triples").select("subj", "obj").distinct()
+    assert(rows(got) == rows(Triples.mentionTriples(files, CorpusGen.dictionary)))
+  }
+
+  /** SQL executions that write files, started by `body`. */
+  private def writesDuring(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val writes = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          writes.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; SparkTestSession.drainListeners() }
+    finally spark.sparkContext.removeSparkListener(listener)
+    writes.get()
+  }
+
+  test("the triples export is written once per snapshot; a torn export is rewritten") {
+    val out = Files.createTempDirectory("graft-main-export").toString
+    val export = java.nio.file.Paths.get(s"$out/triples")
+    def listing: Seq[(Path, java.nio.file.attribute.FileTime)] = {
+      val paths = Files.walk(export)
+      try paths.toArray.toSeq.map(_.asInstanceOf[Path]).sorted
+        .map(p => p -> Files.getLastModifiedTime(p))
+      finally paths.close()
+    }
+    assert(writesDuring(main(out, "triples")) > 0)
+    val before = listing
+    assert(before.exists(_._1.endsWith("_SUCCESS")))
+    assert(writesDuring(main(out, "triples")) == 0)
+    assert(listing == before)
+    Files.delete(export.resolve("_SUCCESS"))
+    assert(writesDuring(main(out, "triples")) > 0)
+    assert(Files.exists(export.resolve("_SUCCESS")))
+    val got = spark.read.parquet(export.toString).select("subj", "obj").distinct()
     assert(rows(got) == rows(Triples.mentionTriples(files, CorpusGen.dictionary)))
   }
 }

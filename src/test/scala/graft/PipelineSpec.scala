@@ -16,6 +16,28 @@ object SparkTestSession {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  /** Local property that marks [[drainListeners]]' job. */
+  val DrainMark = "graft.drain"
+
+  /** Returns once every listener event posted so far was delivered: runs
+    * a job marked with [[DrainMark]] and waits until a listener sees it
+    * (the bus delivers one queue's events in order). */
+  def drainListeners(): Unit = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(DrainMark) != null)) seen.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(DrainMark, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(DrainMark, null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 /**

@@ -2,7 +2,7 @@
 """Paired A/B of two checkouts on one kgbench workload.
 
     python3 tools/ab.py --parent DIR --change DIR --workload topic \
-        --seeds 1311-1320
+        --seeds 1311-1320 [--traced-seed 1321]
 
 Each checkout runs its own kgbench/run.py (from its own root, so each
 builds and measures its own source) on the same seed for the parent
@@ -18,6 +18,10 @@ than the parent's by more than the metric's bound (a fraction of the
 parent median), and the metric is unresolved when the parent's own IQR
 is wider than that bound, unless every run of the change is better
 than every run of the parent.
+
+With --traced-seed N it then makes one traced run (--trace 1) per side
+on seed N and prints every per-layer metric whose value differs,
+parent -> change, so the layer that moved shows in the same report.
 """
 import argparse
 import json
@@ -36,11 +40,11 @@ def seeds_arg(text):
     return out
 
 
-def run(root, workload, seed, seconds):
+def run(root, workload, seed, seconds, trace=0):
     """One kgbench run in `root`; returns its result JSON (None on failure)."""
     proc = subprocess.run(
         [sys.executable, os.path.join(root, "kgbench", "run.py"), "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
         cwd=root, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = [line for line in proc.stdout.splitlines() if line.strip()]
     if proc.returncode != 0 or not lines:
@@ -62,6 +66,8 @@ def main():
     ap.add_argument("--change", required=True, help="checkout of the change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", type=seeds_arg, required=True)
+    ap.add_argument("--traced-seed", type=int,
+                    help="after the pairs, one traced run per side on this seed")
     args = ap.parse_args()
 
     with open(os.path.join(args.parent, "BENCHMARK.json")) as f:
@@ -122,6 +128,30 @@ def main():
               f"change median {cm:.4g} ({(cm - pm) / pm:+.1%}); change won {wins}/{n}; "
               f"gain {'claimable' if gain else 'not shown'}; "
               f"regression past bound {bound}: {regression}")
+    if args.traced_seed is not None:
+        traced(sides, args.workload, args.traced_seed, seconds,
+               [m["name"] for m in bench["per_layer"]])
+
+
+def traced(sides, workload, seed, seconds, names):
+    """One traced run per side; prints each per-layer metric that moved."""
+    got = {side: run(root, workload, seed, seconds, trace=1) for side, root in sides.items()}
+    print(f"\ntraced {workload}, seed {seed}:")
+    bad = [side for side, res in got.items() if res is None or not res.get("correct")]
+    if bad:
+        print(f"  {' and '.join(bad)} traced run failed or incorrect")
+        return
+    p, c = ({m: v["value"] for m, v in got[side]["metrics"].items()}
+            for side in ("parent", "change"))
+    same = 0
+    for name in names:
+        a, b = p[name], c[name]
+        if a == b:
+            same += 1
+        else:
+            rel = f" ({(b - a) / a:+.1%})" if a else ""
+            print(f"  {name}: {a:.4g} -> {b:.4g}{rel}")
+    print(f"  {same} per-layer metrics unchanged")
 
 
 if __name__ == "__main__":
