@@ -31,9 +31,20 @@ import java.nio.file.{Files, Paths}
  */
 object Main {
 
+  /** Codegen settings of every graft JVM (the root build's `javaOptions`
+    * carry the same pair for `sbt run` and forked tests). Without a
+    * stage id in its name, a generated class is keyed by its content
+    * alone, so a loop round of an already compiled shape reuses its
+    * classes; 1000 entries hold one `topic` iteration's ~130 distinct
+    * classes, each compiled once per class loader. */
+  val sessionDefaults: Map[String, String] = Map(
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
+
   def main(args: Array[String]): Unit = {
     val builder = SparkSession.builder()
       .appName("graft-kg-construct")
+      .config(sessionDefaults)
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.adaptive.enabled", "true")

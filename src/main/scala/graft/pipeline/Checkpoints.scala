@@ -1,9 +1,11 @@
 package graft.pipeline
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.file.{Files, Paths}
 
 /**
@@ -64,22 +66,32 @@ final class Checkpoints(spark: SparkSession, baseDir: String) {
    * last via temp-file + atomic rename (`Files.move(..., ATOMIC_MOVE)`)
    * — a crash mid-commit leaves either no manifest or a complete one,
    * never a truncated record that `isCommitted` would trust (Iceberg
-   * snapshots give the same guarantee transactionally). The snapshot is
-   * read back with the computed schema, so the commit infers nothing.
+   * snapshots give the same guarantee transactionally). The manifest
+   * records the computed schema, and the snapshot is read back with
+   * it, so neither the commit nor a later reload infers a schema (a
+   * manifest written before the schema was recorded falls back to
+   * inference).
    */
   def runStage(name: String)(compute: => DataFrame): DataFrame = {
     if (isCommitted(name)) {
-      spark.read.parquet(stageDir(name))
+      val reader = spark.read
+      manifestSchema(name).fold(reader)(s => reader.schema(s)).parquet(stageDir(name))
     } else {
       val df = compute
       df.write.mode("overwrite").parquet(stageDir(name))
       val tmp = Paths.get(s"${stageDir(name)}/_MANIFEST.tmp")
-      Files.writeString(tmp, s"""{"stage":"$name",${rowRecord(stageDir(name))}}""")
+      Files.writeString(tmp,
+        s"""{"stage":"$name",${rowRecord(stageDir(name))},"schema":${df.schema.json}}""")
       Files.move(tmp, manifest(name),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       spark.read.schema(df.schema).parquet(stageDir(name))
     }
   }
+
+  /** The snapshot schema a committed stage's manifest records, if any. */
+  private def manifestSchema(name: String): Option[StructType] =
+    Option(new ObjectMapper().readTree(Files.readString(manifest(name))).get("schema"))
+      .map(s => DataType.fromJson(s.toString).asInstanceOf[StructType])
 
   /** Row count of a committed stage, from its manifest (no Spark job). */
   def rows(name: String): Long = {

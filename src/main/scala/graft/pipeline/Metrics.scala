@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.LongAccumulator
@@ -15,9 +16,13 @@ import scala.collection.concurrent.TrieMap
  *    inside typed maps, mirroring Hadoop counters the reference got for
  *    free from MapReduce;
  *  - a SparkListener capturing per-stage task/record/shuffle metrics,
- *    dumped as one JSON line per stage for the run log.
+ *    dumped as one JSON line per stage for the run log;
+ *  - the generated classes compiled since this `Metrics` was built, on
+ *    any thread of this JVM (the codegen layer of a run).
  */
 final class Metrics(spark: SparkSession) {
+
+  private val compilesAtStart = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   private val accs = TrieMap.empty[String, LongAccumulator]
 
@@ -57,7 +62,8 @@ final class Metrics(spark: SparkSession) {
       s"""{"stage":${s.stageId},"tasks":${s.tasks},"in":${s.inputRecords},""" +
         s""""out":${s.outputRecords},"shr":${s.shuffleReadBytes},""" +
         s""""shw":${s.shuffleWriteBytes},"ms":${s.wallMs}}""").mkString(",")
-    s"""{"counters":{$cs},"stages":[$ss]}"""
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compilesAtStart
+    s"""{"counters":{$cs},"stages":[$ss],"codegen_compiles":$compiles}"""
   }
 
   def close(): Unit = spark.sparkContext.removeSparkListener(listener)

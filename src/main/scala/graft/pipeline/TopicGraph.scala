@@ -439,7 +439,11 @@ object TopicGraph {
     val (edgesDeg, _, _) = Loop.materialize(
       e.join(outdeg.withColumnRenamed("node", "src"), Seq("src")))
     Loop.release(e)
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
+    // the uniform start is checkpointed (lazily: round 1's job fills
+    // it), so round 1 reads a (node, hasOut, non-null rank) relation
+    // exactly as every later round does, not a literal the optimizer
+    // would fold into the join: every round runs the same generated code
+    var ranks = nodes.withColumn("rank", lit(1.0 / n)).localCheckpoint(eager = false)
     var it = 0
     while (it < iters) {
       val contrib = edgesDeg
@@ -447,16 +451,17 @@ object TopicGraph {
         .select(col("dst").as("node"), (col("rank") / col("deg")).as("c"))
         .groupBy(col("node")).agg(sum(col("c")).as("in_sum"))
       // rank held by dangling nodes teleports uniformly; the 1-row
-      // aggregate rides broadcast, never the driver
+      // aggregate (already divided by n, so the rank stays non-null)
+      // rides broadcast, never the driver
       val dang = ranks.filter(!col("hasOut"))
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dang"))
+        .agg(coalesce(sum(col("rank")) / n, lit(0.0)).as("dang"))
       val (stepped, _, _) = Loop.materialize(nodes
         .join(contrib, Seq("node"), "left_outer")
         .crossJoin(broadcast(dang))
         .select(col("node"), col("hasOut"),
           (lit((1 - damping) / n) + lit(damping) *
-            (coalesce(col("in_sum"), lit(0.0)) + col("dang") / n)).as("rank")))
-      if (it > 0) Loop.release(ranks)
+            (coalesce(col("in_sum"), lit(0.0)) + col("dang"))).as("rank")))
+      Loop.release(ranks)
       ranks = stepped
       it += 1
     }
@@ -705,10 +710,8 @@ object TopicGraph {
     }
     var (dist, frontierCount, _) = Loop.materialize(sd.select(col("node"), lit(0).as("dist")))
     var frontier = dist
-    var layer = 0
     var layersSinceCompact = 0
     while (frontierCount > 0) {
-      layer += 1
       // Each layer is one materialization whose counts the planner
       // reads as exact statistics: while the frontier and the visited
       // set are small (the common case: BFS frontiers are a sliver of
@@ -719,11 +722,18 @@ object TopicGraph {
       // distributed 10x leg (1M edges, ecc≈200): a sort-merge join of
       // the full edge relation every round cost ~2.4 s/round, 533 s
       // total. A frontier too big to broadcast gets the shuffle plan.
-      val (next, n, _) = Loop.materialize(frontier
-        .join(e, frontier("node") === e("src"))
-        .select(col("dst").as("node"))
-        .join(dist, Seq("node"), "left_anti").distinct()
-        .select(col("node"), lit(layer).as("dist")))
+      // The layer comes from the frontier's rows, not a literal, so
+      // every round runs the generated code of the first. A candidate
+      // is dropped when a visited row reached it at a shorter distance
+      // (every visited distance is shorter): the anti-join reads the
+      // visited rows whole, so in round 1, where they are the frontier,
+      // both joins share one broadcast.
+      val reached = frontier.join(e, frontier("node") === e("src"))
+        .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
+      val (next, n, _) = Loop.materialize(reached
+        .join(dist, reached("node") === dist("node") && reached("dist") > dist("dist"),
+          "left_anti")
+        .distinct())
       frontierCount = n
       dist = dist.unionByName(next)
       frontier = next

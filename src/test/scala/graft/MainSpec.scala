@@ -35,6 +35,23 @@ class MainSpec extends AnyFunSuite {
     rows(NerCorpus.run(files, CorpusGen.dictionary, entityTypes, typeNames))
   }
 
+  private val allStages = "mentions,aliases,closure,ner,triples,priors"
+
+  /** The `codegen_compiles` of the metrics line `Main.run` prints. */
+  private def compilesOf(out: String, stages: String): Long = {
+    val log = new java.io.ByteArrayOutputStream()
+    Console.withOut(log)(main(out, stages))
+    """"codegen_compiles":(\d+)""".r.findFirstMatchIn(log.toString).get.group(1).toLong
+  }
+
+  // first in the suite: the first run must meet plans no earlier test
+  // of this suite compiled
+  test("a second identical Main.run compiles fewer generated classes than the first") {
+    val first = compilesOf(Files.createTempDirectory("graft-main-cg1").toString, allStages)
+    val second = compilesOf(Files.createTempDirectory("graft-main-cg2").toString, allStages)
+    assert(first > 0 && second < first, s"first run $first compiles, second $second")
+  }
+
   test("ner stage over committed snapshots equals NerCorpus.run; a rerun parses nothing") {
     val out = Files.createTempDirectory("graft-main").toString
     val first = main(out, "mentions,aliases,closure,ner")
@@ -84,6 +101,39 @@ class MainSpec extends AnyFunSuite {
     try { body; SparkTestSession.drainListeners() }
     finally spark.sparkContext.removeSparkListener(listener)
     writes.get()
+  }
+
+  /** Names of the first stage of every job `body` starts. */
+  private def jobsDuring(body: => Any): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).forall(_.getProperty(SparkTestSession.DrainMark) == null))
+          jobs.add(e.stageInfos.minBy(_.stageId).name)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; SparkTestSession.drainListeners() }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.toArray(Array.empty[String]).toSeq
+  }
+
+  test("a resume over committed stages infers no schema; an old manifest still loads") {
+    val out = Files.createTempDirectory("graft-main-resume").toString
+    main(out, allStages)
+    val jobs = jobsDuring(main(out, allStages))
+    assert(!jobs.exists(_.startsWith("parquet at Checkpoints")), jobs)
+    // a manifest written before the schema was recorded: the reload
+    // infers it and reads the same rows
+    val stage = s"$out/stages/01_mentions"
+    val cp = new Checkpoints(spark, s"$out/stages")
+    val recorded = cp.runStage("01_mentions")(fail("a committed stage was recomputed"))
+    val manifest = java.nio.file.Paths.get(s"$stage/_MANIFEST")
+    Files.writeString(manifest, Files.readString(manifest).replaceFirst(",\"schema\":.*}$", "}"))
+    assert(!Files.readString(manifest).contains("schema"))
+    val inferred = cp.runStage("01_mentions")(fail("a committed stage was recomputed"))
+    assert(inferred.schema == recorded.schema)
+    assert(rows(inferred) == rows(recorded) && rows(recorded) == rows(spark.read.parquet(stage)))
   }
 
   test("the triples export is written once per snapshot; a torn export is rewritten") {
