@@ -42,6 +42,14 @@ object Main {
     "spark.sql.codegen.cache.maxEntries" -> "1000")
 
   def main(args: Array[String]): Unit = {
+    val spark = session()
+    try run(spark, args) finally spark.stop()
+  }
+
+  /** The session of every graft main but the frozen `Bench` and
+    * `Verify`: [[sessionDefaults]], AQE, and `SPARK_GRAFT_CPUS` (32 when
+    * unset) shuffle partitions and local cores. */
+  def session(): SparkSession = {
     val builder = SparkSession.builder()
       .appName("graft-kg-construct")
       .config(sessionDefaults)
@@ -55,7 +63,7 @@ object Main {
         s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    try run(spark, args) finally spark.stop()
+    spark
   }
 
   /** Entity-type side inputs of the `ner` stage, derived from the corpus

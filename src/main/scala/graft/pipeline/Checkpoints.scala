@@ -1,12 +1,12 @@
 package graft.pipeline
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path => FsPath, Paths}
 
 /**
  * Stage checkpoint registry — the resumability surface of the north
@@ -29,17 +29,22 @@ final class Checkpoints(spark: SparkSession, baseDir: String) {
   private def stageDir(name: String) = s"$baseDir/$name"
   private def manifest(name: String) = Paths.get(s"${stageDir(name)}/_MANIFEST")
 
-  /** True iff the stage snapshot was fully committed: the manifest
-    * exists AND is structurally complete (the atomic rename below makes
-    * a torn manifest near-impossible, but a half-written file from an
-    * older writer or a non-atomic copy must still read as uncommitted —
-    * resuming from a stage whose lineage record is garbage would be a
-    * silent trust violation even when the parquet itself is fine). */
-  def isCommitted(name: String): Boolean =
-    Files.exists(manifest(name)) && {
-      val m = try Files.readString(manifest(name)) catch { case _: Exception => "" }
-      m.startsWith("{") && m.trim.endsWith("}") && m.contains("\"rows\"")
-    }
+  private val json = new ObjectMapper()
+
+  /** The manifest at `p` if it commits its snapshot: it parses as JSON
+    * to an object with an integer top-level `rows`. The atomic rename
+    * below makes a torn manifest near-impossible, but a missing,
+    * half-written or foreign file (an older writer, a non-atomic copy)
+    * must read as uncommitted: resuming from a stage whose lineage
+    * record is garbage would be a silent trust violation even when the
+    * parquet itself is fine. */
+  private def committedManifest(p: FsPath): Option[JsonNode] =
+    try Option(json.readTree(Files.readString(p)))
+      .filter(m => m.isObject && m.path("rows").isIntegralNumber)
+    catch { case _: java.io.IOException => None }
+
+  /** True iff the stage snapshot was fully committed. */
+  def isCommitted(name: String): Boolean = committedManifest(manifest(name)).isDefined
 
   /** The `"rows":…,"files":…,"lineage":[…]` fields of a manifest for a
     * just-written snapshot directory: rows per data file, read from the
@@ -72,33 +77,29 @@ final class Checkpoints(spark: SparkSession, baseDir: String) {
    * manifest written before the schema was recorded falls back to
    * inference).
    */
-  def runStage(name: String)(compute: => DataFrame): DataFrame = {
-    if (isCommitted(name)) {
-      val reader = spark.read
-      manifestSchema(name).fold(reader)(s => reader.schema(s)).parquet(stageDir(name))
-    } else {
-      val df = compute
-      df.write.mode("overwrite").parquet(stageDir(name))
-      val tmp = Paths.get(s"${stageDir(name)}/_MANIFEST.tmp")
-      Files.writeString(tmp,
-        s"""{"stage":"$name",${rowRecord(stageDir(name))},"schema":${df.schema.json}}""")
-      Files.move(tmp, manifest(name),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      spark.read.schema(df.schema).parquet(stageDir(name))
+  def runStage(name: String)(compute: => DataFrame): DataFrame =
+    committedManifest(manifest(name)) match {
+      case Some(m) =>
+        val reader = spark.read
+        Option(m.get("schema"))
+          .map(s => DataType.fromJson(s.toString).asInstanceOf[StructType])
+          .fold(reader)(s => reader.schema(s)).parquet(stageDir(name))
+      case None =>
+        val df = compute
+        df.write.mode("overwrite").parquet(stageDir(name))
+        val tmp = Paths.get(s"${stageDir(name)}/_MANIFEST.tmp")
+        Files.writeString(tmp,
+          s"""{"stage":"$name",${rowRecord(stageDir(name))},"schema":${df.schema.json}}""")
+        Files.move(tmp, manifest(name),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        spark.read.schema(df.schema).parquet(stageDir(name))
     }
-  }
-
-  /** The snapshot schema a committed stage's manifest records, if any. */
-  private def manifestSchema(name: String): Option[StructType] =
-    Option(new ObjectMapper().readTree(Files.readString(manifest(name))).get("schema"))
-      .map(s => DataType.fromJson(s.toString).asInstanceOf[StructType])
 
   /** Row count of a committed stage, from its manifest (no Spark job). */
-  def rows(name: String): Long = {
-    require(isCommitted(name), s"checkpoint stage '$name' is not committed")
-    val m = Files.readString(manifest(name))
-    """"rows":(\d+)""".r.findFirstMatchIn(m).get.group(1).toLong
-  }
+  def rows(name: String): Long = committedManifest(manifest(name))
+    .getOrElse(throw new IllegalArgumentException(
+      s"checkpoint stage '$name' is not committed"))
+    .get("rows").asLong
 
   /** Names of committed stages (resume inspection). */
   def committedStages(): Seq[String] = {
@@ -128,10 +129,7 @@ final class Checkpoints(spark: SparkSession, baseDir: String) {
     Paths.get(s"${versionDir(name, v)}/_VMANIFEST")
 
   private def isVersionCommitted(name: String, v: Long): Boolean =
-    Files.exists(vManifest(name, v)) && {
-      val m = try Files.readString(vManifest(name, v)) catch { case _: Exception => "" }
-      m.startsWith("{") && m.trim.endsWith("}") && m.contains("\"rows\"")
-    }
+    committedManifest(vManifest(name, v)).isDefined
 
   /** Committed versions of a stage, ascending. */
   def versions(name: String): Seq[Long] = {

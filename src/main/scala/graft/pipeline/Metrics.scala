@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.LongAccumulator
 import scala.collection.concurrent.TrieMap
@@ -67,4 +67,29 @@ final class Metrics(spark: SparkSession) {
   }
 
   def close(): Unit = spark.sparkContext.removeSparkListener(listener)
+}
+
+object Metrics {
+
+  /** Local property that marks [[drainListeners]]' job. */
+  val DrainMark = "graft.drain"
+
+  /** Returns once every listener event posted so far was delivered
+    * (`QueryExecutionListener` calls included): runs a job marked with
+    * [[DrainMark]] and waits until a listener sees it (the bus delivers
+    * one queue's events in order). */
+  def drainListeners(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(DrainMark) != null)) seen.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(DrainMark, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(DrainMark, null)
+      require(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -144,8 +144,8 @@ object TextAnalysis {
    * scored token is in the LM — it came from the same corpus). The
    * 1-row global token total rides a SinglePartition exchange into a
    * broadcast — only |partitions| partial sums cross it, the benign
-   * form of a global scalar (PlanAudit flags it; this is the
-   * documented exception).
+   * form of a global scalar (`graft.tools.Probe`'s audit line flags
+   * it; this is the documented exception).
    *
    * Output: (doc_id, n_tok, logprob) with logprob = Σ ln(c_t/T) / n_tok.
    */

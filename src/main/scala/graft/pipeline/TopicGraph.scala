@@ -490,11 +490,7 @@ object TopicGraph {
    * (exact; enumeration order-free, so engine-independent).
    */
   def triangles(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val und = simpleUndirected(edges)
     val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
     // orient u~v from the smaller (degree, id) endpoint; carry the
@@ -1438,6 +1434,47 @@ object TopicGraph {
     out
   }
 
+  /** The canonical undirected simple graph of `edges`: one (u, v) row
+    * per unordered pair, u < v, self-loops dropped. */
+  private def simpleUndirected(edges: DataFrame): DataFrame =
+    edges
+      .select(least(col("src"), col("dst")).as("u"),
+        greatest(col("src"), col("dst")).as("v"))
+      .filter(col("u") =!= col("v"))
+      .distinct()
+
+  /** The Adamic–Adar wedge of [[adamicAdar]] and [[linkPredictionAuc]]
+    * over a simple graph `und` (u < v): (u, v, aa_fp) for every pair
+    * with a common neighbor, adjacent or not, aa_fp = Σ ⌊1e9/ln deg(w)⌋
+    * over the common neighbors w, each center's adjacency capped at
+    * `maxDeg` by the seeded md5 rank (the weight keeps the true degree). */
+  private def aaWedgeScores(und: DataFrame, maxDeg: Option[Int]): DataFrame = {
+    val sym = und.select(col("u").as("w"), col("v").as("x"))
+      .unionByName(und.select(col("v").as("w"), col("u").as("x")))
+    val deg = sym.groupBy(col("w")).agg(count(lit(1)).as("d"))
+    val symCapped = maxDeg match {
+      case Some(f) =>
+        import org.apache.spark.sql.expressions.Window
+        val win = Window.partitionBy(col("w"))
+          .orderBy(md5(concat(lit("aa:"), col("w").cast("string"), lit(":"),
+            col("x").cast("string"))).asc, col("x").asc)
+        sym.withColumn("rn", row_number().over(win))
+          .filter(col("rn") <= f).drop("rn")
+      case None => sym
+    }
+    // d = 1 centers cannot form a wedge (one adjacency row) and would
+    // divide by ln(1) = 0 — drop them before the weight projection
+    val nbr = symCapped.join(deg, Seq("w"))
+      .filter(col("d") >= 2)
+      .withColumn("t",
+        floor(lit(1.0e9) / log(col("d").cast("double"))).cast("long"))
+    nbr.as("a").join(nbr.as("b"),
+        col("a.w") === col("b.w") && col("a.x") < col("b.x"))
+      .select(col("a.x").as("u"), col("b.x").as("v"), col("a.t").as("t"))
+      .groupBy(col("u"), col("v"))
+      .agg(sum(col("t")).as("aa_fp"))
+  }
+
   /**
    * Adamic–Adar link prediction (Adamic & Adar 2003): score every
    * NON-adjacent node pair by Σ_{w ∈ Γ(u)∩Γ(v)} 1/ln(deg(w)) — common
@@ -1472,36 +1509,8 @@ object TopicGraph {
     require(maxDeg.forall(_ >= 2),
       s"adamicAdar: maxDeg=$maxDeg must be >= 2 (a wedge needs 2 neighbors)")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val und = edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct().persist(lvl)
-    val sym = und.select(col("u").as("w"), col("v").as("x"))
-      .unionByName(und.select(col("v").as("w"), col("u").as("x")))
-    val deg = sym.groupBy(col("w")).agg(count(lit(1)).as("d"))
-    val symCapped = maxDeg match {
-      case Some(f) =>
-        import org.apache.spark.sql.expressions.Window
-        val win = Window.partitionBy(col("w"))
-          .orderBy(md5(concat(lit("aa:"), col("w").cast("string"), lit(":"),
-            col("x").cast("string"))).asc, col("x").asc)
-        sym.withColumn("rn", row_number().over(win))
-          .filter(col("rn") <= f).drop("rn")
-      case None => sym
-    }
-    // d = 1 centers cannot form a wedge (one adjacency row) and would
-    // divide by ln(1) = 0 — drop them before the weight projection
-    val nbr = symCapped.join(deg, Seq("w"))
-      .filter(col("d") >= 2)
-      .withColumn("t",
-        floor(lit(1.0e9) / log(col("d").cast("double"))).cast("long"))
-    val wedge = nbr.as("a").join(nbr.as("b"),
-        col("a.w") === col("b.w") && col("a.x") < col("b.x"))
-      .select(col("a.x").as("u"), col("b.x").as("v"), col("a.t").as("t"))
-    val scores = wedge.groupBy(col("u"), col("v"))
-      .agg(sum(col("t")).as("aa_fp"))
-    val out = scores.join(und, Seq("u", "v"), "left_anti")
+    val und = simpleUndirected(edges).persist(lvl)
+    val out = aaWedgeScores(und, maxDeg).join(und, Seq("u", "v"), "left_anti")
       .orderBy(col("aa_fp").desc, col("u").asc, col("v").asc)
       .limit(k)
       .select(col("u"), col("v"),
@@ -1545,40 +1554,17 @@ object TopicGraph {
   def linkPredictionAuc(edges: DataFrame, testMod: Int = 5,
       maxDeg: Option[Int] = None): DataFrame = {
     require(testMod >= 2, s"linkPredictionAuc: testMod=$testMod must be >= 2")
+    require(maxDeg.forall(_ >= 2),
+      s"linkPredictionAuc: maxDeg=$maxDeg must be >= 2 (a wedge needs 2 neighbors)")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val und = edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct().persist(lvl)
+    val und = simpleUndirected(edges).persist(lvl)
     val h = conv(substring(md5(concat_ws(":", lit("lp"),
       col("u").cast("string"), col("v").cast("string"))), 1, 15), 16, 10)
       .cast("long")
     val test = und.filter(pmod(h, lit(testMod.toLong)) === 0)
     val train = und.filter(pmod(h, lit(testMod.toLong)) =!= 0)
       .localCheckpoint(true)
-    val sym = train.select(col("u").as("w"), col("v").as("x"))
-      .unionByName(train.select(col("v").as("w"), col("u").as("x")))
-    val deg = sym.groupBy(col("w")).agg(count(lit(1)).as("d"))
-    val symCapped = maxDeg match {
-      case Some(f) =>
-        import org.apache.spark.sql.expressions.Window
-        val win = Window.partitionBy(col("w"))
-          .orderBy(md5(concat(lit("aa:"), col("w").cast("string"), lit(":"),
-            col("x").cast("string"))).asc, col("x").asc)
-        sym.withColumn("rn", row_number().over(win))
-          .filter(col("rn") <= f).drop("rn")
-      case None => sym
-    }
-    val nbr = symCapped.join(deg, Seq("w"))
-      .filter(col("d") >= 2)
-      .withColumn("t",
-        floor(lit(1.0e9) / log(col("d").cast("double"))).cast("long"))
-    val wedge = nbr.as("a").join(nbr.as("b"),
-        col("a.w") === col("b.w") && col("a.x") < col("b.x"))
-      .select(col("a.x").as("u"), col("b.x").as("v"), col("a.t").as("t"))
-    val cand = wedge.groupBy(col("u"), col("v"))
-      .agg(sum(col("t")).as("aa_fp"))
+    val cand = aaWedgeScores(train, maxDeg)
       .join(train, Seq("u", "v"), "left_anti")
       .join(test.withColumn("lbl", lit(1L)), Seq("u", "v"), "left_outer")
       .select(col("aa_fp"), coalesce(col("lbl"), lit(0L)).as("lbl"))
@@ -1692,11 +1678,7 @@ object TopicGraph {
       localThreshold: Long = 4000000L): DataFrame = {
     require(k >= 3, s"kTrussPeel: k=$k must be >= 3")
     require(rounds >= 1, s"kTrussPeel: rounds=$rounds must be >= 1")
-    val und = edges
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
+    val und = simpleUndirected(edges)
     var (cur, n, _) = Loop.materialize(und)
     if (n <= localThreshold) {
       val out = kTrussLocal(cur, k, rounds)

@@ -1,28 +1,24 @@
-// Scratch: dump NAMED queries to parquet (plus their oracle SQL) for a
-// local DuckDB cross-check while iterating on a new query slot.
+// Dump NAMED queries to parquet (plus their oracle SQL) for a local
+// DuckDB cross-check while iterating on a query slot, on Main's session.
 // usage: runMain graft.tools.VerifyOne <sfDir> <outDir> <query> [query...]
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 object VerifyOne {
   def main(args: Array[String]): Unit = {
     val (dir, outDir, names) = (args(0), args(1), args.drop(2).toSeq)
-    val s = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    new java.io.File(outDir).mkdirs()
-    names.foreach { n =>
-      graft.SparkEntry.queries(n)(s, dir).coalesce(1)
-        .write.mode("overwrite").parquet(s"$outDir/$n")
-      graft.SparkEntry.oracleSql.get(n).foreach { sql =>
-        Files.writeString(Paths.get(s"$outDir/$n.sql"), sql)
+    val s = graft.Main.session()
+    try {
+      Files.createDirectories(Paths.get(outDir))
+      names.foreach { n =>
+        graft.SparkEntry.queries(n)(s, dir).coalesce(1)
+          .write.mode("overwrite").parquet(s"$outDir/$n")
+        graft.SparkEntry.oracleSql.get(n).foreach { sql =>
+          Files.writeString(Paths.get(s"$outDir/$n.sql"), sql)
+        }
+        println(s"VERIFYONE dumped $n")
       }
-      println(s"VERIFYONE dumped $n")
-    }
-    s.stop()
+    } finally s.stop()
   }
 }

@@ -18,26 +18,10 @@ object SparkTestSession {
     .getOrCreate()
 
   /** Local property that marks [[drainListeners]]' job. */
-  val DrainMark = "graft.drain"
+  val DrainMark: String = Metrics.DrainMark
 
-  /** Returns once every listener event posted so far was delivered: runs
-    * a job marked with [[DrainMark]] and waits until a listener sees it
-    * (the bus delivers one queue's events in order). */
-  def drainListeners(): Unit = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(DrainMark) != null)) seen.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(DrainMark, "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(DrainMark, null)
-      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Returns once every listener event posted so far was delivered. */
+  def drainListeners(): Unit = Metrics.drainListeners(spark)
 }
 
 /**
@@ -2521,6 +2505,12 @@ class PipelineSpec extends AnyFunSuite {
     val capped = TopicGraph.adamicAdar(small, k = 30, maxDeg = Some(64))
       .as[(Long, Long, Double)].collect().toSet
     assert(capped == exact)
+    // the evaluation scores through the same wedge: exact under the cap too
+    def auc(es: org.apache.spark.sql.DataFrame, cap: Option[Int]) =
+      TopicGraph.linkPredictionAuc(es, maxDeg = cap)
+        .as[(Long, Long, Option[Double])].collect().head
+    val aucExact = auc(small, None)
+    assert(aucExact._1 > 0 && aucExact._2 > 0 && auc(small, Some(64)) == aucExact)
     // planted star hub: center 0 with degree D = 60 plus a disjoint
     // rare wedge. Exact AA emits C(60,2) = 1770 hub-mediated pairs;
     // with cap f = 5 only the f sampled spokes can pair through the
@@ -2551,8 +2541,15 @@ class PipelineSpec extends AnyFunSuite {
     val again = TopicGraph.adamicAdar(hub, k = 5000, maxDeg = Some(5))
       .as[(Long, Long, Double)].collect().toSet
     assert(again == gotCap.toSet)
+    // the evaluation's candidates through the hub shrink to C(f,2) too
+    // (plus the rare pair; held-out spokes leave the hub's train degree
+    // at most D)
+    assert(auc(hub, None)._2 > 5 * 4 / 2 + 1 && auc(hub, Some(5))._2 <= 5 * 4 / 2 + 1)
     intercept[IllegalArgumentException] {
       TopicGraph.adamicAdar(hub, k = 5, maxDeg = Some(1))
+    }
+    intercept[IllegalArgumentException] {
+      TopicGraph.linkPredictionAuc(hub, maxDeg = Some(1))
     }
   }
 

@@ -198,6 +198,30 @@ class ResilienceSpec extends AnyFunSuite {
     assert(run() == 50 && computeCalls.get() == 2)
   }
 
+  test("a manifest cut right after a lineage entry reads as uncommitted") {
+    // starts with "{", names "rows" and ends in "}", yet is not a JSON object
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-cut").toString
+    val computeCalls = new AtomicInteger(0)
+    def run(): Long = new Checkpoints(spark, dir).runStage("s") {
+      computeCalls.incrementAndGet()
+      spark.range(10).toDF()
+    }.count()
+    assert(run() == 10 && computeCalls.get() == 1)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/s/_MANIFEST"),
+      """{"stage":"s","rows":10,"files":2,"lineage":[{"file":"p0","rows":5}""")
+    val cp = new Checkpoints(spark, dir)
+    assert(!cp.isCommitted("s") && cp.committedStages().isEmpty)
+    intercept[IllegalArgumentException](cp.rows("s"))
+    assert(run() == 10 && computeCalls.get() == 2, "a torn manifest must force recompute")
+    assert(new Checkpoints(spark, dir).rows("s") == 10L)
+    // a version manifest follows the same rule
+    cp.commitVersion("t") { spark.range(5).toDF() }
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/t/_versions/v00001/_VMANIFEST"),
+      """{"stage":"t","version":1,"rows":5,"files":1,"lineage":[{"file":"p0","rows":5}""")
+    assert(cp.versions("t").isEmpty)
+  }
+
   test("dedup stage pair resumes: keep list rebuilt from the committed sig index") {
     // the Main `dedup` stage shape: sign once (index), derive keep list;
     // a crash after the index commit must NOT re-sign the corpus
