@@ -54,26 +54,15 @@ object Dedup {
   val MinhashFunctions = 16
   private val seedsPerDoc = 4
 
-  /** Per-shingle concatenated digest material: md5("0:"+s)+...+md5("3:"+s). */
-  private def shingleHexes(shingles: Column): Column =
-    transform(shingles, s =>
-      concat((0 until seedsPerDoc).map(j => md5(concat(lit(s"$j:"), s))): _*))
-
-  def minhashSignature(shingles: Column, numHashes: Int = MinhashFunctions): Column = {
-    val hexes = shingleHexes(shingles)
-    array((0 until numHashes).map { i =>
-      array_min(transform(hexes, h => substring(h, i * 8 + 1, 8)))
-    }: _*)
-  }
-
   /**
    * (doc_id, sig) signatures via explode + 16 partial-min aggregates.
    * This shape matters: a single projection computes the 4 md5s ONCE
    * per shingle row, and the mins combine map-side before the shuffle.
-   * (The pure-Column form above duplicates the digest expression into
-   * every array_min lambda — Catalyst does not CSE through higher-order
-   * functions — making it 16x more digest work; measured 31s vs 2s at
-   * sf0.1.)
+   * (A pure-Column form — one `array_min(transform(...))` per hash over
+   * the per-shingle digests — would copy the digest expression into
+   * every lambda, since Catalyst does not CSE (common-subexpression-
+   * eliminate) through higher-order lambdas: 16x the digest work,
+   * measured 31s vs 2s at sf0.1.)
    */
   def minhashSignatures(docs: DataFrame, shingleWords: Int = 3,
       numHashes: Int = MinhashFunctions): DataFrame =

@@ -30,11 +30,31 @@ object Similarity {
     graft.functions.GraftFunctions.vec_norm(a)
 
   /** Cosine similarity; 0 for zero vectors. */
-  def cosine(a: Column, b: Column): Column = {
-    val d = dot(a, b)
-    val nn = norm(a) * norm(b)
-    when(nn === 0, lit(0.0)).otherwise(d / nn)
-  }
+  def cosine(a: Column, b: Column): Column = cosFromNorms(a, norm(a), b, norm(b))
+
+  /** Cosine of `a`, `b` given their norms `na`, `nb`; 0 for zero vectors.
+    * Every pair search projects the norms per SIDE before its pair join
+    * and scores with this (why: [[bruteForceTopK]]). */
+  private def cosFromNorms(a: Column, na: Column, b: Column, nb: Column): Column =
+    when(na * nb === 0, lit(0.0)).otherwise(dot(a, b) / (na * nb))
+
+  /** Per-probe top-k of a scored (probe_id, cand_id, cos, ...) relation:
+    * cosine descending, ties to the smaller cand_id; adds `rank`. */
+  private def topKPerProbe(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(Window.partitionBy(col("probe_id"))
+        .orderBy(col("cos").desc, col("cand_id").asc)))
+      .filter(col("rank") <= k)
+
+  /** Hot-bucket cap of a (bucket, ...) relation: drop every bucket
+    * holding more than `maxBucketSize` rows; `maxBucketSize <= 0` is
+    * off (the relation is returned as is). Why and what it trades:
+    * [[signLshPairs]]. */
+  private def capBuckets(keyed: DataFrame, maxBucketSize: Long): DataFrame =
+    if (maxBucketSize <= 0L) keyed
+    else keyed.join(keyed.groupBy(col("bucket"))
+      .agg(count(lit(1)).as("_n"))
+      .filter(col("_n") <= maxBucketSize)
+      .select(col("bucket")), Seq("bucket"))
 
   /**
    * Exact top-k by cosine: probes × corpus (corpus side broadcast when
@@ -51,14 +71,9 @@ object Similarity {
       col("embedding").as("pv"), norm(col("embedding")).as("pn")))
     val c = corpus.select(col("vec_id").as("cand_id"),
       col("embedding").as("cv"), norm(col("embedding")).as("cn"))
-    val scored = c.join(p, col("probe_id") =!= col("cand_id"))
+    topKPerProbe(c.join(p, col("probe_id") =!= col("cand_id"))
       .select(col("probe_id"), col("cand_id"),
-        when(col("pn") * col("cn") === 0, lit(0.0))
-          .otherwise(dot(col("pv"), col("cv")) / (col("pn") * col("cn"))).as("cos"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        cosFromNorms(col("pv"), col("pn"), col("cv"), col("cn")).as("cos")), k)
   }
 
   /** Fixed seed of the random-projection family: every signer and every
@@ -174,15 +189,7 @@ object Similarity {
     val keyed =
       if (maxBucketSize <= 0L) allKeyed
       else allKeyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val capped =
-      if (maxBucketSize <= 0L) keyed
-      else {
-        val ok = keyed.groupBy(col("bucket"))
-          .agg(count(lit(1)).as("_n"))
-          .filter(col("_n") <= maxBucketSize)
-          .select(col("bucket"))
-        keyed.join(ok, Seq("bucket"))
-      }
+    val capped = capBuckets(keyed, maxBucketSize)
     val a = capped.select(col("bucket"), col("vec_id").as("id_a"),
       col("embedding").as("ea"), col("nrm").as("na"))
     val b = capped.select(col("bucket"), col("vec_id").as("id_b"),
@@ -194,8 +201,7 @@ object Similarity {
     val pairs = a.join(b, Seq("bucket"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
-        when(col("na") * col("nb") === 0, lit(0.0))
-          .otherwise(dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cos"))
+        cosFromNorms(col("ea"), col("na"), col("eb"), col("nb")).as("cos"))
       .groupBy(col("id_a"), col("id_b"))
       .agg(max(col("cos")).as("cos")) // identical across band matches
     if (maxBucketSize <= 0L) pairs
@@ -235,18 +241,13 @@ object Similarity {
     val p = cells(probes, nprobe)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pv"),
         norm(col("embedding")).as("pn"), col("cell"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
     // no dedup needed: each candidate is assigned to exactly ONE cell,
     // so (probe, cand) appears once even at nprobe > 1 — a defensive
     // dropDuplicates here would add a whole shuffle for a no-op
-    p.join(cands, Seq("cell"))
+    topKPerProbe(p.join(cands, Seq("cell"))
       .filter(col("probe_id") =!= col("cand_id"))
       .select(col("probe_id"), col("cand_id"),
-        when(col("pn") * col("cn") === 0, lit(0.0))
-          .otherwise(dot(col("pv"), col("cv")) / (col("pn") * col("cn"))).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        cosFromNorms(col("pv"), col("pn"), col("cv"), col("cn")).as("cos")), k)
   }
 
   /** Broadcast centroid set: the corpus vectors at id stride n/k (the
@@ -326,12 +327,6 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), col("cent_id").as("cell"))
   }
 
-  /**
-   * Bucketed ANN: join probes to candidates sharing ANY of the `bands`
-   * sign buckets, dedup, then exact cosine + per-probe top-k. Recall < 1
-   * by design; every join shuffles on small band keys instead of
-   * cross-joining.
-   */
   /**
    * SemDeDup-style semantic deduplication (Abbas et al. 2023,
    * arXiv:2303.09540): partition the embedding space into cells, run
@@ -424,16 +419,7 @@ object Similarity {
     var cents = vecs.filter(col("vec_id") % stride === 0)
       .select(col("vec_id").as("cent_id"),
         col("embedding").cast("array<double>").as("cv"))
-    val l2 = (a: Column, b: Column) => graft.functions.GraftFunctions.vec_l2(a, b)
-    def assign(v: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("dist").asc, col("cent_id").asc)
-      v.join(broadcast(cents))
-        .select(col("vec_id"), col("embedding"), col("cent_id"),
-          l2(col("embedding"), col("cv")).as("dist"))
-        .withColumn("rk", row_number().over(w)).filter(col("rk") <= 1)
-        .select(col("vec_id"), col("embedding"), col("cent_id").as("cell"))
-    }
+    def assign(v: DataFrame): DataFrame = ivfCells(v, broadcast(cents), 1)
     for (_ <- 1 to iters) {
       // Lloyd step: mean per (cell, dim) — posexplode keeps the mean
       // exact and engine-reproducible (fixed dim order on rebuild)
@@ -516,9 +502,8 @@ object Similarity {
       .join(c.as("b"), col("a.cell") === col("b.cell") &&
         col("a.vec_id") < col("b.vec_id"))
       .select(col("b.vec_id").as("vec_id"),
-        when(col("a.nrm") * col("b.nrm") === 0, lit(0.0))
-          .otherwise(dot(col("a.embedding"), col("b.embedding"))
-            / (col("a.nrm") * col("b.nrm"))).as("cos"))
+        cosFromNorms(col("a.embedding"), col("a.nrm"),
+          col("b.embedding"), col("b.nrm")).as("cos"))
       .filter(col("cos") >= tau)
       .select(col("vec_id")).distinct()
     val out = c.select(col("vec_id"), col("cell"))
@@ -564,36 +549,59 @@ object Similarity {
       n: Long = -1L, refineIters: Int = 0, trainSample: Int = 1024): DataFrame = {
     val gf = graft.functions.GraftFunctions
     val nn = if (n >= 0) n else corpus.count()
+    val (cb, nCw) = pqCodebook("pqTopK", corpus,
+      col("embedding").cast("array<double>"), nn, halfStride = false,
+      subspaces, codewords, refineIters, trainSample)
+    // the ADC scan touches CODES only (the compressed relation — in
+    // production a stored table)
+    val codes = corpus.select(col("vec_id").as("cand_id"),
+      gf.pq_codes(col("embedding"), cb, subspaces).as("codes"))
+    val pTables = broadcast(probes.select(col("vec_id").as("probe_id"),
+      gf.pq_dtable(col("embedding"), cb, subspaces).as("dt")))
+    pqShortlistRerank(codes.join(pTables, col("probe_id") =!= col("cand_id")),
+      nCw, probes, corpus, k, shortlist)
+  }
+
+  /** PQ codebook of the three PQ searches: ≤ `codewords` rows of the
+    * array<double> `vec` over `src`, at vec_id ≡ 0 (mod stride
+    * n/`codewords`) — or ≡ stride/2 with `halfStride` (the residual
+    * sample, see [[ivfPqResidualTopK]]) — in id order, flattened and
+    * driver-collected; Lloyd-refined over the bounded training sample
+    * only when `refineIters > 0` ([[refinePqCodebook]]). Returns the
+    * flat codebook and its row count, which is < `codewords` on tiny
+    * corpora; an empty sample (empty corpus) is refused, naming `op`. */
+  private def pqCodebook(op: String, src: DataFrame, vec: Column, nn: Long,
+      halfStride: Boolean, subspaces: Int, codewords: Int, refineIters: Int,
+      trainSample: Int): (Array[Double], Int) = {
     val stride = math.max(1L, nn / codewords)
-    val cbRows = corpus.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
+    val rows = src.filter(col("vec_id") % stride === (if (halfStride) stride / 2 else 0L))
+      .select(col("vec_id"), vec)
       .orderBy(col("vec_id")).limit(codewords)
       .collect()
-    val dim = cbRows.head.getSeq[Double](1).length
+    require(rows.nonEmpty, s"$op: empty codebook sample (empty corpus)")
+    val dim = rows.head.getSeq[Double](1).length
     require(dim % subspaces == 0,
-      s"pqTopK: dim $dim not divisible into $subspaces subspaces")
-    val cbStride: Array[Double] =
-      cbRows.flatMap(_.getSeq[Double](1)).toArray
-    val nCw = cbRows.length // may be < codewords on tiny corpora
-    val cbFlat =
-      if (refineIters <= 0) cbStride
-      else refinePqCodebook(pqTrainSample(corpus, "embedding", nn, trainSample),
-        cbStride, subspaces, nCw, refineIters)
+      s"$op: dim $dim not divisible into $subspaces subspaces")
+    val cb = rows.flatMap(_.getSeq[Double](1)).toArray
+    if (refineIters <= 0) (cb, rows.length)
+    else (refinePqCodebook(pqTrainSample(src, vec, nn, trainSample),
+      cb, subspaces, rows.length, refineIters), rows.length)
+  }
+
+  /** The ADC shortlist and exact re-rank of the three PQ searches, over
+    * a search's own scan relation of (probe_id, cand_id, codes, dt)
+    * pairs: the ADC top-`shortlist` per probe (default 4k), ids only —
+    * the shortlist exchange never carries an embedding — then the
+    * original vectors re-gathered for the |probes|·shortlist exact
+    * cosine top-k, the tiny shortlist broadcast against the corpus
+    * scan. */
+  private def pqShortlistRerank(scan: DataFrame, nCw: Int, probes: DataFrame,
+      corpus: DataFrame, k: Int, shortlist: Int): DataFrame = {
     val sl = if (shortlist > 0) shortlist else 4 * k
-    // the ADC scan touches CODES only (the compressed relation — in
-    // production a stored table), and the shortlist exchange carries
-    // (probe_id, cand_id, adc) — never an embedding; original vectors
-    // are re-gathered for the |probes|·shortlist exact re-rank, with
-    // the tiny shortlist broadcast against the corpus scan
-    val codes = corpus.select(col("vec_id").as("cand_id"),
-      gf.pq_codes(col("embedding"), cbFlat, subspaces).as("codes"))
-    val pTables = broadcast(probes.select(col("vec_id").as("probe_id"),
-      gf.pq_dtable(col("embedding"), cbFlat, subspaces).as("dt")))
     val wAdc = Window.partitionBy(col("probe_id"))
       .orderBy(col("adc").asc, col("cand_id").asc)
-    val short = codes.join(pTables, col("probe_id") =!= col("cand_id"))
-      .select(col("probe_id"), col("cand_id"),
-        gf.pq_adc(col("codes"), col("dt"), nCw).as("adc"))
+    val short = scan.select(col("probe_id"), col("cand_id"),
+        graft.functions.GraftFunctions.pq_adc(col("codes"), col("dt"), nCw).as("adc"))
       .withColumn("srk", row_number().over(wAdc))
       .filter(col("srk") <= sl)
       .select(col("probe_id"), col("cand_id"))
@@ -604,13 +612,8 @@ object Similarity {
         norm(col("embedding")).as("cn"))
       .join(broadcast(short), Seq("cand_id"))
       .join(pVecs, Seq("probe_id"))
-    val wCos = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
-    gathered.select(col("probe_id"), col("cand_id"),
-        when(col("pn") * col("cn") === 0, lit(0.0))
-          .otherwise(dot(col("pv"), col("cv")) / (col("pn") * col("cn"))).as("cos"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= k)
+    topKPerProbe(gathered.select(col("probe_id"), col("cand_id"),
+      cosFromNorms(col("pv"), col("pn"), col("cv"), col("cn")).as("cos")), k)
   }
 
   /**
@@ -636,52 +639,19 @@ object Similarity {
     val gf = graft.functions.GraftFunctions
     val nn = if (n >= 0) n else corpus.count()
     val cents = ivfCentroids(corpus, kCentroids, nn, centIters)
-    val stride = math.max(1L, nn / codewords)
-    val cbRows = corpus.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .orderBy(col("vec_id")).limit(codewords)
-      .collect()
-    val dim = cbRows.head.getSeq[Double](1).length
-    require(dim % subspaces == 0,
-      s"ivfPqTopK: dim $dim not divisible into $subspaces subspaces")
-    val cbStride: Array[Double] = cbRows.flatMap(_.getSeq[Double](1)).toArray
-    val nCw = cbRows.length
-    val cbFlat =
-      if (refineIters <= 0) cbStride
-      else refinePqCodebook(pqTrainSample(corpus, "embedding", nn, trainSample),
-        cbStride, subspaces, nCw, refineIters)
-    val sl = if (shortlist > 0) shortlist else 4 * k
+    val (cb, nCw) = pqCodebook("ivfPqTopK", corpus,
+      col("embedding").cast("array<double>"), nn, halfStride = false,
+      subspaces, codewords, refineIters, trainSample)
     // celled + coded candidates: both are map-side projections over the
     // assignment join; the ADC join carries (cell, cand_id, codes)
     val codes = ivfCells(corpus, cents, 1)
       .select(col("cell"), col("vec_id").as("cand_id"),
-        gf.pq_codes(col("embedding"), cbFlat, subspaces).as("codes"))
+        gf.pq_codes(col("embedding"), cb, subspaces).as("codes"))
     val pTables = broadcast(ivfCells(probes, cents, nprobe)
       .select(col("cell"), col("vec_id").as("probe_id"),
-        gf.pq_dtable(col("embedding"), cbFlat, subspaces).as("dt")))
-    val wAdc = Window.partitionBy(col("probe_id"))
-      .orderBy(col("adc").asc, col("cand_id").asc)
-    val short = codes.join(pTables, Seq("cell"))
-      .filter(col("probe_id") =!= col("cand_id"))
-      .select(col("probe_id"), col("cand_id"),
-        gf.pq_adc(col("codes"), col("dt"), nCw).as("adc"))
-      .withColumn("srk", row_number().over(wAdc))
-      .filter(col("srk") <= sl)
-      .select(col("probe_id"), col("cand_id"))
-    val pVecs = broadcast(probes.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pv"), norm(col("embedding")).as("pn")))
-    val gathered = corpus
-      .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-        norm(col("embedding")).as("cn"))
-      .join(broadcast(short), Seq("cand_id"))
-      .join(pVecs, Seq("probe_id"))
-    val wCos = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
-    gathered.select(col("probe_id"), col("cand_id"),
-        when(col("pn") * col("cn") === 0, lit(0.0))
-          .otherwise(dot(col("pv"), col("cv")) / (col("pn") * col("cn"))).as("cos"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= k)
+        gf.pq_dtable(col("embedding"), cb, subspaces).as("dt")))
+    pqShortlistRerank(codes.join(pTables, Seq("cell"))
+      .filter(col("probe_id") =!= col("cand_id")), nCw, probes, corpus, k, shortlist)
   }
 
   /**
@@ -717,7 +687,6 @@ object Similarity {
         "(stride-1 residual sampling yields an all-zero codebook and an " +
         "id-ordered shortlist); use pqTopK or bruteForceTopK for tiny corpora")
     val cents = ivfCentroids(corpus, kCentroids, nn, centIters)
-    val stride = math.max(1L, nn / codewords)
     def residuals(vecs: DataFrame, np: Int): DataFrame =
       ivfCells(vecs, cents, np)
         .join(cents, col("cell") === col("cent_id"))
@@ -725,50 +694,16 @@ object Similarity {
           zip_with(col("embedding").cast("array<double>"),
             col("cv").cast("array<double>"), (a, b) => a - b).as("res"))
     val resCorpus = residuals(corpus, 1)
-    val cbRows = resCorpus.filter(col("vec_id") % stride === stride / 2)
-      .select(col("vec_id"), col("res"))
-      .orderBy(col("vec_id")).limit(codewords)
-      .collect()
-    require(cbRows.nonEmpty, "ivfPqResidualTopK: empty residual codebook sample")
-    val dim = cbRows.head.getSeq[Double](1).length
-    require(dim % subspaces == 0,
-      s"ivfPqResidualTopK: dim $dim not divisible into $subspaces subspaces")
-    val cbStride: Array[Double] = cbRows.flatMap(_.getSeq[Double](1)).toArray
-    val nCw = cbRows.length
-    val cbFlat =
-      if (refineIters <= 0) cbStride
-      else refinePqCodebook(pqTrainSample(resCorpus, "res", nn, trainSample),
-        cbStride, subspaces, nCw, refineIters)
-    val sl = if (shortlist > 0) shortlist else 4 * k
+    val (cb, nCw) = pqCodebook("ivfPqResidualTopK", resCorpus, col("res"), nn,
+      halfStride = true, subspaces, codewords, refineIters, trainSample)
     val codes = resCorpus
       .select(col("cell"), col("vec_id").as("cand_id"),
-        gf.pq_codes(col("res"), cbFlat, subspaces).as("codes"))
+        gf.pq_codes(col("res"), cb, subspaces).as("codes"))
     val pTables = broadcast(residuals(probes, nprobe)
       .select(col("cell"), col("vec_id").as("probe_id"),
-        gf.pq_dtable(col("res"), cbFlat, subspaces).as("dt")))
-    val wAdc = Window.partitionBy(col("probe_id"))
-      .orderBy(col("adc").asc, col("cand_id").asc)
-    val short = codes.join(pTables, Seq("cell"))
-      .filter(col("probe_id") =!= col("cand_id"))
-      .select(col("probe_id"), col("cand_id"),
-        gf.pq_adc(col("codes"), col("dt"), nCw).as("adc"))
-      .withColumn("srk", row_number().over(wAdc))
-      .filter(col("srk") <= sl)
-      .select(col("probe_id"), col("cand_id"))
-    val pVecs = broadcast(probes.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pv"), norm(col("embedding")).as("pn")))
-    val gathered = corpus
-      .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-        norm(col("embedding")).as("cn"))
-      .join(broadcast(short), Seq("cand_id"))
-      .join(pVecs, Seq("probe_id"))
-    val wCos = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
-    gathered.select(col("probe_id"), col("cand_id"),
-        when(col("pn") * col("cn") === 0, lit(0.0))
-          .otherwise(dot(col("pv"), col("cv")) / (col("pn") * col("cn"))).as("cos"))
-      .withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= k)
+        gf.pq_dtable(col("res"), cb, subspaces).as("dt")))
+    pqShortlistRerank(codes.join(pTables, Seq("cell"))
+      .filter(col("probe_id") =!= col("cand_id")), nCw, probes, corpus, k, shortlist)
   }
 
   /**
@@ -793,14 +728,7 @@ object Similarity {
       explode(signBandKeys(col("embedding"), bits, bands)).as("bucket"),
       lit(bits).as("_bits"), lit(bands).as("_bands"),
       lit(ProjSeed).as("_seed"))
-    if (maxBucketSize <= 0L) keyed
-    else {
-      val ok = keyed.groupBy(col("bucket"))
-        .agg(count(lit(1)).as("_n"))
-        .filter(col("_n") <= maxBucketSize)
-        .select(col("bucket"))
-      keyed.join(ok, Seq("bucket"))
-    }
+    capBuckets(keyed, maxBucketSize)
   }
 
   /** Read (bits, bands) from a [[signLshIndex]] frame, refusing an
@@ -843,9 +771,7 @@ object Similarity {
     keyed.join(idx, Seq("bucket"))
       .filter(col("vec_id") =!= col("cand_id"))
       .select(col("vec_id"), col("cand_id"),
-        when(col("pn") * col("cn") === 0, lit(0.0))
-          .otherwise(dot(col("pv"), col("cv")) / (col("pn") * col("cn")))
-          .as("cos"))
+        cosFromNorms(col("pv"), col("pn"), col("cv"), col("cn")).as("cos"))
       .filter(col("cos") >= tau)
       .groupBy(col("vec_id"), col("cand_id"))
       .agg(max(col("cos")).as("cos")) // identical across band matches
@@ -858,11 +784,11 @@ object Similarity {
     * system (a 100 TB corpus trains its quantizer on thousands of
     * vectors, not the corpus), so the collect is O(trainN·dim)
     * regardless of corpus size — ~0.5 MB at the 1024×64 default. */
-  private def pqTrainSample(src: DataFrame, vcol: String, nn: Long,
+  private def pqTrainSample(src: DataFrame, vec: Column, nn: Long,
       trainN: Int): Array[Array[Double]] = {
     val ts = math.max(1L, nn / math.max(trainN, 1))
     src.filter(col("vec_id") % ts === 0)
-      .select(col("vec_id"), col(vcol).cast("array<double>"))
+      .select(col("vec_id"), vec)
       .orderBy(col("vec_id")).limit(trainN)
       .collect()
       .map(_.getSeq[Double](1).toArray)
@@ -928,6 +854,12 @@ object Similarity {
     cb
   }
 
+  /**
+   * Bucketed ANN: join probes to candidates sharing ANY of the `bands`
+   * sign buckets, dedup, then exact cosine + per-probe top-k. Recall < 1
+   * by design; every join shuffles on small band keys instead of
+   * cross-joining.
+   */
   def lshTopK(probes: DataFrame, corpus: DataFrame, k: Int, bits: Int = 0,
       bands: Int = 4, n: Long = -1L, maxBucketSize: Long = 0L): DataFrame = {
     // bits = 0 derives bucket granularity from the CORPUS side (the
@@ -945,29 +877,15 @@ object Similarity {
     // population multiplies every probe that lands in the bucket):
     // a template-family bucket of m vectors costs m rows PER PROBE —
     // dropped as non-discriminative past the cap, same rule and
-    // trade as signLshPairs (other bands still cover)
-    val c =
-      if (maxBucketSize <= 0L) c0
-      else {
-        val ok = c0.groupBy(col("bucket"))
-          .agg(count(lit(1)).as("_n"))
-          .filter(col("_n") <= maxBucketSize)
-          .select(col("bucket"))
-        c0.join(ok, Seq("bucket"))
-      }
-    // cosine before dedup (see signLshPairs): the exchange carries
-    // (probe_id, cand_id, cos), never the embedding arrays
-    val scored = p.join(c, Seq("bucket"))
+    // trade as signLshPairs (other bands still cover). Cosine before
+    // dedup (see signLshPairs): the exchange carries (probe_id,
+    // cand_id, cos), never the embedding arrays
+    topKPerProbe(p.join(capBuckets(c0, maxBucketSize), Seq("bucket"))
       .filter(col("probe_id") =!= col("cand_id"))
       .select(col("probe_id"), col("cand_id"),
-        when(col("pn") * col("cn") === 0, lit(0.0))
-          .otherwise(dot(col("pv"), col("cv")) / (col("pn") * col("cn"))).as("cos"))
+        cosFromNorms(col("pv"), col("pn"), col("cv"), col("cn")).as("cos"))
       .groupBy(col("probe_id"), col("cand_id"))
-      .agg(max(col("cos")).as("cos"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos").desc, col("cand_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .agg(max(col("cos")).as("cos")), k)
   }
 
   /**

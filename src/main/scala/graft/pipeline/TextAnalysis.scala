@@ -26,19 +26,6 @@ object TextAnalysis {
     size(filter(toks, t => t.isin(words.map(w => w: Any): _*)))
 
   /**
-   * Heuristic language-ID: the language whose marker list hits the most
-   * tokens (ties broken by language name order — deterministic).
-   */
-  def langIdScore(text: Column): Column = {
-    val toks = split(text, " ")
-    val scored = langMarkers.toSeq.sortBy(_._1).map { case (lang, words) =>
-      struct(markerHits(toks, words).as("hits"), lit(lang).as("lang"))
-    }
-    // max by (hits, then lexicographically LAST lang to make ordering total)
-    element_at(array_sort(array(scored: _*)), -1)
-  }
-
-  /**
    * Repetition signals (the Gopher/MassiveText repetition filters,
    * Rae et al. 2021 §A1.1, adapted to this corpus's 10-token sentence
    * windows): per document,

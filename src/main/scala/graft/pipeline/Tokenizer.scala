@@ -116,10 +116,6 @@ object Tokenizer {
   private def mergeEnc(e: Column, l: String, r: String): Column =
     replace(e, lit(s" $l  $r "), lit(s" $l$r "))
 
-  /** Apply one merge to a plain single-space token string. */
-  def mergeStep(toks: Column, l: String, r: String): Column =
-    dec(mergeEnc(enc(toks), l, r))
-
   /**
    * Word-frequency vocabulary with initial symbol sequences:
    * (word, freq, toks) where toks = chars joined by ' ' + ' </w>'.

@@ -490,7 +490,25 @@ object TopicGraph {
    * (exact; enumeration order-free, so engine-independent).
    */
   def triangles(edges: DataFrame): DataFrame = {
-    val und = simpleUndirected(edges)
+    val (tri, orient) = compactForwardTriangles(simpleUndirected(edges))
+    val out = tri.select(explode(array(col("a"), col("b"), col("c"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
+      .localCheckpoint(true)
+    orient.unpersist(false)
+    out
+  }
+
+  /** The compact-forward enumeration of [[triangles]] over a canonical
+    * undirected relation `und` (u < v, distinct): each undirected edge
+    * oriented from its smaller (degree, id) endpoint, wedges at the low
+    * vertex, closed by the oriented b→c edge. Returns the closed (a, b,
+    * c) triangles, each once, and the oriented relation they read. That
+    * relation feeds BOTH wedge sides and the closing check, so it is
+    * persisted lazily (all three consumers share one action): the
+    * degree joins run once, and the caller unpersists it after the one
+    * action over the triangles (same discipline as
+    * Dedup.lshCandidatesFromSigs). */
+  private def compactForwardTriangles(und: DataFrame): (DataFrame, DataFrame) = {
     val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
     // orient u~v from the smaller (degree, id) endpoint; carry the
@@ -499,11 +517,6 @@ object TopicGraph {
       .join(deg.select(col("node").as("u"), col("d").as("du")), Seq("u"))
       .join(deg.select(col("node").as("v"), col("d").as("dv")), Seq("v"))
     val uFirst = col("du") < col("dv") || (col("du") === col("dv") && col("u") < col("v"))
-    // the oriented relation feeds BOTH wedge sides and the closure
-    // check: persist lazily (all three consumers share one action) so
-    // the dedup+degree joins run once, and release it once the small
-    // per-node counts are checkpointed (same discipline as
-    // Dedup.lshCandidatesFromSigs)
     val orient = withDeg.select(
       when(uFirst, col("u")).otherwise(col("v")).as("a"),
       when(uFirst, col("v")).otherwise(col("u")).as("b"),
@@ -514,13 +527,7 @@ object TopicGraph {
       .join(orient.as("e2"), col("e1.a") === col("e2.a") &&
         col("e1.bkey") < col("e2.bkey"))
       .select(col("e1.a").as("a"), col("e1.b").as("b"), col("e2.b").as("c"))
-    val tri = wedges.join(
-      orient.select(col("a").as("b"), col("b").as("c")), Seq("b", "c"))
-    val out = tri.select(explode(array(col("a"), col("b"), col("c"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
-      .localCheckpoint(true)
-    orient.unpersist(false)
-    out
+    (wedges.join(orient.select(col("a").as("b"), col("b").as("c")), Seq("b", "c")), orient)
   }
 
   /** Driver-side power iteration over a collected small edge list —
@@ -1708,34 +1715,11 @@ object TopicGraph {
     * Returns (u, v, sup) for edges in >= 1 triangle, materialized; the
     * caller releases it. */
   private def triangleEdgeSupport(und: DataFrame): DataFrame = {
-    val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("d"))
-    val withDeg = und
-      .join(deg.select(col("node").as("u"), col("d").as("du")), Seq("u"))
-      .join(deg.select(col("node").as("v"), col("d").as("dv")), Seq("v"))
-    val uFirst = col("du") < col("dv") ||
-      (col("du") === col("dv") && col("u") < col("v"))
-    val orient = withDeg.select(
-      when(uFirst, col("u")).otherwise(col("v")).as("a"),
-      when(uFirst, col("v")).otherwise(col("u")).as("b"),
-      when(uFirst, struct(col("dv").as("kd"), col("v").as("kn")))
-        .otherwise(struct(col("du").as("kd"), col("u").as("kn"))).as("bkey"))
-      // cached lazily: both wedge sides and the closing check read it
-      // inside the one job that materializes `sup`
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val wedges = orient.as("e1")
-      .join(orient.as("e2"), col("e1.a") === col("e2.a") &&
-        col("e1.bkey") < col("e2.bkey"))
-      .select(col("e1.a").as("ta"), col("e1.b").as("tb"), col("e2.b").as("tc"))
-    val tri = wedges.join(
-      orient.select(col("a").as("tb"), col("b").as("tc")), Seq("tb", "tc"))
+    val (tri, orient) = compactForwardTriangles(und)
     val (sup, _, _) = Loop.materialize(tri.select(explode(array(
-        struct(least(col("ta"), col("tb")).as("u"),
-          greatest(col("ta"), col("tb")).as("v")),
-        struct(least(col("ta"), col("tc")).as("u"),
-          greatest(col("ta"), col("tc")).as("v")),
-        struct(least(col("tb"), col("tc")).as("u"),
-          greatest(col("tb"), col("tc")).as("v")))).as("e"))
+        struct(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v")),
+        struct(least(col("a"), col("c")).as("u"), greatest(col("a"), col("c")).as("v")),
+        struct(least(col("b"), col("c")).as("u"), greatest(col("b"), col("c")).as("v")))).as("e"))
       .select(col("e.u"), col("e.v"))
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup")))
     orient.unpersist(false)

@@ -6,7 +6,8 @@
 // no name probes every query, then every twin.
 // Per query, on stdout:
 //   QTIME <query> pass<k> <s> s rows=<n>   two timed passes, no capture
-//   AUDIT <query> exchanges=<n> flags=...  the final plan's red flags
+//   AUDIT <query> exchanges=<n> flags=...  red flags summed over the
+//                                          final plans of every action
 // and <outDir>/<query>.txt (':' written as '_'): the formatted explain
 // plus the executed plan of every action of an untimed third pass, loop
 // rounds included.
@@ -44,7 +45,9 @@ object Probe {
       }
       // the iterative operators run their rounds while the DataFrame is
       // built (each round is a driver-side action), so the listener is
-      // on before construction
+      // on before construction. The bus is drained first: an action of
+      // the timed passes still queued there would reach the listener
+      Metrics.drainListeners(spark)
       val plans = ArrayBuffer.empty[(String, String)]
       val listener = new QueryExecutionListener {
         override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
@@ -65,11 +68,13 @@ object Probe {
         s"== $spec: final-plan explain(formatted) ==\n$explain\n\n" +
           "== executed plans of every action (loop rounds included) ==\n" +
           actions.map { case (head, plan) => s"$head\n${plan.take(20000)}" }.mkString("\n"))
-      // the last action is the noop write of the query itself; AQE's
-      // initial plan follows its final one
-      val fin = actions.last._2.split("== Initial Plan ==").head
-      val flags = Seq("CartesianProduct", "SinglePartition", "ScalaUDF").filter(fin.contains)
-      val exchanges = fin.linesIterator.count(_.contains("Exchange hashpartitioning"))
+      // every action is audited: a loop query's last action (the noop
+      // write) is a scan of its last checkpoint, its rounds ran before.
+      // AQE's initial plan follows each action's final one
+      val fins = actions.map(_._2.split("== Initial Plan ==").head)
+      val flags = Seq("CartesianProduct", "SinglePartition", "ScalaUDF")
+        .filter(f => fins.exists(_.contains(f)))
+      val exchanges = fins.map(_.linesIterator.count(_.contains("Exchange hashpartitioning"))).sum
       println(s"AUDIT $spec exchanges=$exchanges flags=${flags.mkString(",")}")
     }
   }

@@ -553,6 +553,15 @@ class PipelineSpec extends AnyFunSuite {
       Similarity.ivfPqResidualTopK(vecs, vecs, 3, codewords = 16)
     }
     assert(e.getMessage.contains("codewords"))
+    // an empty corpus has no codebook sample at all: the flat and IVF
+    // PQ searches refuse it by name too
+    val none = vecs.limit(0)
+    Seq[(String, () => Any)](
+      "pqTopK" -> (() => Similarity.pqTopK(none, none, 3)),
+      "ivfPqTopK" -> (() => Similarity.ivfPqTopK(none, none, 3))).foreach { case (op, run) =>
+      val ee = intercept[IllegalArgumentException](run())
+      assert(ee.getMessage.contains(s"$op: empty codebook sample"), ee.getMessage)
+    }
   }
 
   test("sign-LSH hot-bucket cap bounds template-family pair blowup, keeps rare pairs") {

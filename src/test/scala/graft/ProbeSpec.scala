@@ -30,5 +30,9 @@ class ProbeSpec extends AnyFunSuite {
       assert(plan.contains("\n==== action: "), plan)
     }
     assert(new java.io.File(out).list().length == specs.size)
+    // a loop query's exchanges are in its round plans, not in the final
+    // scan of its last checkpoint
+    val pr = lines.find(_.startsWith("AUDIT dist:q75_pagerank ")).get
+    assert("""exchanges=(\d+)""".r.findFirstMatchIn(pr).get.group(1).toInt > 0, pr)
   }
 }
