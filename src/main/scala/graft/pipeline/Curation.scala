@@ -354,8 +354,8 @@ object Curation {
    *
    * Scale shape: one corpus scan computes (source, content-hash,
    * token count); the only big shuffle is the hash-frequency groupBy
-   * on a 16-byte key (identical to `Dedup.exactGroups` — on a shared
-   * pipeline the two stages reuse one hash-frequency relation); the
+   * on a 16-byte key (identical to q40's exact-dedup groupBy — on a
+   * shared pipeline the two stages reuse one hash-frequency relation); the
    * per-source rollup output is |sources|-sized, orders below the
    * corpus.
    */

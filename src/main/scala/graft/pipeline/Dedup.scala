@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Document deduplication for training-data pipelines: exact (hash
@@ -19,12 +20,6 @@ import org.apache.spark.sql.functions._
  *    reproducible across engines (and DuckDB-checkable).
  */
 object Dedup {
-
-  /** Exact duplicate groups: md5(text) -> count + canonical (min id). */
-  def exactGroups(docs: DataFrame): DataFrame =
-    docs.groupBy(md5(col("text")).as("content_hash"))
-      .agg(count(lit(1)).as("n_dups"), min(col("doc_id")).as("canonical_id"))
-      .filter(col("n_dups") > 1)
 
   /** Word n-gram shingles of a text column, as an array column.
     * Built from n-1 zip_with passes over shifted slices (n slices of
@@ -78,14 +73,92 @@ object Dedup {
         array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
 
   /**
-   * LSH banding: signature array -> array of (band, bucket-hash) keys.
-   * Docs sharing any band bucket are candidate pairs.
+   * LSH banding: a `numHashes`-long signature array -> array of
+   * (band, bucket-hash) keys, one per band of `numHashes / bands`
+   * positions. Docs sharing any band bucket are candidate pairs. A band
+   * count that does not divide the signature is refused: `bands >
+   * numHashes` gives empty bands, so every document would share every
+   * bucket and the search would silently become an all-pairs join.
    */
-  def lshBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      concat_ws("|", lit(b.toString),
-        md5(array_join(slice(sig, b * rowsPerBand + 1, rowsPerBand), ",")))
-    }: _*)
+  private[graft] def lshBandKeys(sig: Column, numHashes: Int, bands: Int): Column = {
+    require(bands >= 1 && numHashes % bands == 0,
+      s"LSH bands=$bands must be >= 1 and divide numHashes=$numHashes")
+    val rows = numHashes / bands
+    bandTagged(bands)(b => md5(array_join(slice(sig, b * rows + 1, rows), ",")))
+  }
+
+  /** `bands` band keys "b|key(b)": tagging each key with its band keeps
+    * equal keys of different bands in different buckets. Shared by the
+    * MinHash, SimHash and sign-LSH bandings. */
+  private[pipeline] def bandTagged(bands: Int)(key: Int => Column): Column =
+    array((0 until bands).map(b => concat_ws("|", lit(b.toString), key(b))): _*)
+
+  /** Band-keyed view of a (doc_id, sig) signature table: (doc_id, sig,
+    * bucket), one row per band — the blocking relation of every MinHash
+    * search, and the static side `EventStream.incrementalDedupStream`
+    * joins against (pre-explode it once and checkpoint it, rather than
+    * exploding per micro-batch). */
+  def bandedIndex(sigs: DataFrame, numHashes: Int = 16, bands: Int = 4): DataFrame =
+    sigs.select(col("doc_id"), col("sig"),
+      explode(lshBandKeys(col("sig"), numHashes, bands)).as("bucket"))
+
+  /** MinHash estimate of the Jaccard similarity of two `numHashes`-long
+    * signatures: the fraction of positions where they agree. */
+  private[graft] def estJaccard(a: Column, b: Column, numHashes: Int): Column =
+    (size(filter(zip_with(a, b, (x, y) => x === y), (m: Column) => m)) /
+      lit(numHashes.toDouble)).as("est_jaccard")
+
+  /** Band self-join of a (bucket, ...) relation: each pair of rows that
+    * share a bucket, once per bucket, as (bucket, id_a, a…, id_b, b…)
+    * with id_a < id_b; `a` and `b` pick and alias each side's payload. */
+  private[pipeline] def bandPairs(keyed: DataFrame, id: String, a: Seq[Column],
+      b: Seq[Column]): DataFrame =
+    keyed.select((col("bucket") +: col(id).as("id_a") +: a): _*)
+      .join(keyed.select((col("bucket") +: col(id).as("id_b") +: b): _*), Seq("bucket"))
+      .filter(col("id_a") < col("id_b"))
+
+  /** Hot-bucket cap of a (bucket, ...) relation — the block-purging step
+    * of blocking: a bucket shared by k rows costs k²/2 join rows, so
+    * every bucket holding more than `maxBucketSize` rows is dropped as
+    * non-discriminative (boilerplate-heavy corpora put whole template
+    * families into one bucket). Costs one extra aggregation on the band
+    * keys; recall for pairs in RARE buckets is untouched, and a pair can
+    * still surface through its other bands. `maxBucketSize <= 0` is off
+    * (the relation is returned as is) — with the cap on, the result is
+    * a deliberate subset. */
+  private[pipeline] def capBuckets(keyed: DataFrame, maxBucketSize: Long): DataFrame =
+    if (maxBucketSize <= 0L) keyed
+    else keyed.join(keyed.groupBy(col("bucket"))
+      .agg(count(lit(1)).as("_n"))
+      .filter(col("_n") <= maxBucketSize)
+      .select(col("bucket")), Seq("bucket"))
+
+  /**
+   * Runs a pair search over `side` and returns its ids-only result
+   * eagerly checkpointed. `side` is lazily persisted for the search (NOT
+   * eagerly checkpointed: an eager localCheckpoint costs ~2.2s at sf0.1
+   * to materialize while the whole signature stage costs ~0.6s): the
+   * first join side populates the cache within the same action and the
+   * second reads it, so the signing lineage runs once, not twice. On a
+   * cluster at corpus scale, write signatures to a snapshot table
+   * instead (Checkpoints.runStage) and join from that.
+   *
+   * A side the caller already cached is used as is and left cached: the
+   * "sign once, search many" entry point ([[candidatesFromSigs]]) takes
+   * a table the caller may keep across searches — unpersisting THAT
+   * would evict it after the first search and silently re-sign the
+   * corpus on the next one. Otherwise the side is released once the
+   * result is checkpointed — without that, every call would leak one
+   * cached relation into a shared session for its lifetime (checkpoint
+   * blocks are ContextCleaner-collected once the caller drops the
+   * result).
+   */
+  private[pipeline] def searchOnce(side: DataFrame)(search: DataFrame => DataFrame): DataFrame = {
+    val callerCached = side.storageLevel != StorageLevel.NONE
+    val s = if (callerCached) side else side.persist(StorageLevel.MEMORY_AND_DISK)
+    try search(s).localCheckpoint(true)
+    finally if (!callerCached) s.unpersist(false)
+  }
 
   /**
    * ONE-PASS JVM minhash signature — byte-exact the same result as
@@ -194,47 +267,6 @@ object Dedup {
       array_min(transform(shingles, s => xxhash64(lit(i), s)))
         .cast("string")): _*)
 
-  /** Shared LSH banding + bucket join + match-fraction estimate over a
-    * (doc_id, sig: array<string>) relation. */
-  private def lshCandidatesFromSigs(sigsIn: DataFrame, numHashes: Int,
-      bands: Int): DataFrame = {
-    val rows = numHashes / bands
-    // Lazily persisted (NOT eagerly checkpointed: an eager
-    // localCheckpoint costs ~2.2s at sf0.1 to materialize while the
-    // whole signature stage costs ~0.6s): the first join side populates
-    // the cache within the same action and the second side reads it,
-    // so the shingle+digest lineage runs once, not twice. On a cluster
-    // at corpus scale, write signatures to a snapshot table instead
-    // (Checkpoints.runStage) and join from that.
-    // respect a caller-managed cache: the "sign once, search many"
-    // entry point (candidatesFromSigs) hands in a table the caller may
-    // keep cached across searches — unpersisting THAT here would evict
-    // it after the first search and silently re-sign the corpus on the
-    // next one
-    val callerCached =
-      sigsIn.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val sigs = if (callerCached) sigsIn
-      else sigsIn.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keyed = sigs.select(col("doc_id"), col("sig"),
-      explode(lshBandKeys(col("sig"), bands, rows)).as("bucket"))
-    val a = keyed.select(col("bucket"), col("doc_id").as("id_a"), col("sig").as("sig_a"))
-    val b = keyed.select(col("bucket"), col("doc_id").as("id_b"), col("sig").as("sig_b"))
-    // the pair list is ids+estimate only (tiny next to the corpus):
-    // eagerly checkpoint it so the signature cache can be RELEASED here
-    // — otherwise every call leaks one cached relation into a shared
-    // session for its lifetime (checkpoint blocks are ContextCleaner-
-    // collected once the caller drops the result)
-    val out = a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        (size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-          (b: Column) => b)) / lit(numHashes.toDouble)).as("est_jaccard"))
-      .distinct()
-      .localCheckpoint(true)
-    if (!callerCached) sigs.unpersist(false)
-    out
-  }
-
   /**
    * MinHash/LSH near-duplicate candidate pairs with estimated Jaccard
    * (fraction of matching signature positions). `docs` must have
@@ -246,23 +278,29 @@ object Dedup {
     // form, which remains as the cross-checked reference): the entire
     // signature stage is map-side, so the only shuffle left in the
     // candidate search is the band-bucket join itself
-    lshCandidatesFromSigs(
+    candidatesFromSigs(
       minhashSignaturesOnePass(docs, shingleWords, numHashes), numHashes, bands)
 
   /** [[minhashCandidates]] on the xxhash64 fast signatures — the
     * throughput path when cross-engine reproducibility isn't needed. */
   def minhashCandidatesFast(docs: DataFrame, shingleWords: Int = 3,
       numHashes: Int = 16, bands: Int = 4): DataFrame =
-    lshCandidatesFromSigs(
+    candidatesFromSigs(
       minhashSignaturesFast(docs, shingleWords, numHashes), numHashes, bands)
 
   /** Candidate pairs from an existing (doc_id, sig) signature table —
     * the snapshot-table entry point: sign once (`minhashSignatures*`,
     * checkpointed per batch), search many times without touching the
-    * corpus text. */
+    * corpus text. Returns (id_a, id_b, est_jaccard), id_a < id_b. */
   def candidatesFromSigs(sigs: DataFrame, numHashes: Int = 16,
       bands: Int = 4): DataFrame =
-    lshCandidatesFromSigs(sigs, numHashes, bands)
+    searchOnce(sigs) { s =>
+      bandPairs(bandedIndex(s, numHashes, bands), "doc_id",
+          Seq(col("sig").as("sig_a")), Seq(col("sig").as("sig_b")))
+        .select(col("id_a"), col("id_b"),
+          estJaccard(col("sig_a"), col("sig_b"), numHashes))
+        .distinct()
+    }
 
   /**
    * Incremental near-dup candidates: a NEW document batch against an
@@ -290,30 +328,23 @@ object Dedup {
   def incrementalCandidates(newDocs: DataFrame, corpusSigs: DataFrame,
       shingleWords: Int = 3, numHashes: Int = 16, bands: Int = 4,
       fast: Boolean = false): DataFrame = {
-    val rows = numHashes / bands
-    val newSigs = (if (fast) minhashSignaturesFast(newDocs, shingleWords, numHashes)
-      else minhashSignaturesOnePass(newDocs, shingleWords, numHashes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def keyed(sigs: DataFrame): DataFrame = sigs.select(col("doc_id"), col("sig"),
-      explode(lshBandKeys(col("sig"), bands, rows)).as("bucket"))
-    val a = keyed(newSigs)
-      .select(col("bucket"), col("doc_id").as("id_new"), col("sig").as("sig_a"))
-    val b = keyed(corpusSigs)
-      .select(col("bucket"), col("doc_id").as("id_other"), col("sig").as("sig_b"),
-        lit(false).as("within_batch"))
-      .unionByName(keyed(newSigs)
-        .select(col("bucket"), col("doc_id").as("id_other"), col("sig").as("sig_b"),
-          lit(true).as("within_batch")))
-    val out = a.join(b, Seq("bucket"))
-      .filter(col("id_new") =!= col("id_other") &&
-        (!col("within_batch") || col("id_new") < col("id_other")))
-      .select(col("id_new"), col("id_other"), col("within_batch"),
-        (size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
-          (m: Column) => m)) / lit(numHashes.toDouble)).as("est_jaccard"))
-      .distinct()
-      .localCheckpoint(true)
-    newSigs.unpersist(false)
-    out
+    val newSigs = if (fast) minhashSignaturesFast(newDocs, shingleWords, numHashes)
+      else minhashSignaturesOnePass(newDocs, shingleWords, numHashes)
+    searchOnce(newSigs) { s =>
+      def side(sigs: DataFrame, within: Boolean): DataFrame =
+        bandedIndex(sigs, numHashes, bands).select(col("bucket"),
+          col("doc_id").as("id_other"), col("sig").as("sig_b"),
+          lit(within).as("within_batch"))
+      bandedIndex(s, numHashes, bands)
+        .select(col("bucket"), col("doc_id").as("id_new"), col("sig").as("sig_a"))
+        .join(side(corpusSigs, within = false).unionByName(side(s, within = true)),
+          Seq("bucket"))
+        .filter(col("id_new") =!= col("id_other") &&
+          (!col("within_batch") || col("id_new") < col("id_other")))
+        .select(col("id_new"), col("id_other"), col("within_batch"),
+          estJaccard(col("sig_a"), col("sig_b"), numHashes))
+        .distinct()
+    }
   }
 
   /** Exact n-gram Jaccard similarity between two shingle-array columns. */
@@ -377,10 +408,7 @@ object Dedup {
   def simhashBandKeys(sh: Column, bands: Int = 4, bits: Int = SimhashBits): Column = {
     val w = bits / bands
     val mask = (1L << w) - 1
-    array((0 until bands).map { b =>
-      concat_ws("|", lit(b.toString),
-        shiftright(sh, b * w).bitwiseAND(lit(mask)).cast("string"))
-    }: _*)
+    bandTagged(bands)(b => shiftright(sh, b * w).bitwiseAND(lit(mask)).cast("string"))
   }
 
   /**
@@ -396,49 +424,28 @@ object Dedup {
    * where n/2^15 is still too hot, raise `bands` on a wider fingerprint
    * (the standard 64-bit/4x16 table layout) — same plan shape.
    *
-   * Pipeline ordering at scale: run EXACT dedup first ([[exactGroups]])
-   * and feed only canonical docs here — a template-heavy corpus puts
-   * whole exact-duplicate families into one bucket, and the pair list
-   * among k identical docs is k²/2 rows that exact dedup would have
-   * collapsed to one representative for free.
+   * Pipeline ordering at scale: run EXACT dedup first (q40's md5(text)
+   * groupBy) and feed only canonical docs here — a template-heavy
+   * corpus puts whole exact-duplicate families into one bucket, and the
+   * pair list among k identical docs is k²/2 rows that exact dedup
+   * would have collapsed to one representative for free. What survives
+   * of a template family is what `maxBucketSize > 0` caps
+   * ([[capBuckets]]; off by default).
    */
   def simhashCandidates(docs: DataFrame, maxHamming: Int = 20,
       bands: Int = 4, maxBucketSize: Long = 0L): DataFrame = {
-    // lazy persist shared by both join sides: the first side's scan
-    // populates the cache within the action, the second reads it, so
-    // the text scan + simhash run once (same discipline as minhash)
     val sh = docs.select(col("doc_id"),
       graft.functions.GraftFunctions.simhash64(col("text")).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val allKeyed = sh.select(col("doc_id"), col("sh"),
-      explode(simhashBandKeys(col("sh"), bands)).as("bucket"))
-    // optional hot-bucket cap (maxBucketSize > 0): a bucket shared by k
-    // docs costs k²/2 join rows; buckets past the cap are dropped as
-    // non-discriminative — the stop-shingle analog for Hamming banding
-    // (boilerplate-heavy corpora put whole template families into one
-    // chunk value). Costs one extra aggregation on the band keys;
-    // recall for pairs in RARE buckets is untouched. Off by default —
-    // with the cap on, the result is a deliberate subset.
-    val keyed =
-      if (maxBucketSize <= 0L) allKeyed
-      else {
-        val ok = allKeyed.groupBy(col("bucket"))
-          .agg(count(lit(1)).as("_n"))
-          .filter(col("_n") <= maxBucketSize)
-          .select(col("bucket"))
-        allKeyed.join(ok, Seq("bucket"))
-      }
-    val a = keyed.select(col("bucket"), col("doc_id").as("id_a"), col("sh").as("sh_a"))
-    val b = keyed.select(col("bucket"), col("doc_id").as("id_b"), col("sh").as("sh_b"))
-    val out = a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("int").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
-      .localCheckpoint(true) // ids+distance only; frees the sh cache
-    sh.unpersist(false)
-    out
+    searchOnce(sh) { s =>
+      val keyed = s.select(col("doc_id"), col("sh"),
+        explode(simhashBandKeys(col("sh"), bands)).as("bucket"))
+      bandPairs(capBuckets(keyed, maxBucketSize), "doc_id",
+          Seq(col("sh").as("sh_a")), Seq(col("sh").as("sh_b")))
+        .select(col("id_a"), col("id_b"),
+          bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("int").as("hamming"))
+        .filter(col("hamming") <= maxHamming)
+        .distinct()
+    }
   }
 
   /**
@@ -547,6 +554,49 @@ object Dedup {
       .filter(levenshtein(col("name_a"), col("name_b")) <= 1)
   }
 
+  /** The set joins take their threshold as the rational tauNum/tauDen
+    * in (0, 1], so every filter is integer cross-multiplication. */
+  private def requireTau(tauNum: Int, tauDen: Int): Unit =
+    require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
+      s"threshold must be a rational in (0,1], got $tauNum/$tauDen")
+
+  /** (tok, df): the number of documents of a (doc_id, tok) relation of
+    * distinct per-doc tokens that hold each token. */
+  private def docFreq(toks: DataFrame): DataFrame =
+    toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
+
+  /** (doc_id, arr, sz): each document's distinct tokens sorted
+    * rarest-first (df asc, tok asc) — the global order the prefix
+    * filters' completeness proofs assume. A struct sort gives that
+    * total order without materializing a global rank (no
+    * single-partition row_number over the vocabulary). */
+  private def rarestFirst(toks: DataFrame): DataFrame =
+    toks.join(docFreq(toks), "tok")
+      .groupBy(col("doc_id"))
+      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("ts"))
+      .select(col("doc_id"),
+        transform(col("ts"), s => s.getField("tok")).as("arr"),
+        size(col("ts")).as("sz"))
+
+  /** Exact verify input: each (doc_a, doc_b) candidate with both docs'
+    * rarest-first arrays and sizes gathered from `sorted` (arr_a, sza,
+    * arr_b, szb) and their overlap `c` — full token ARRAYS re-join only
+    * for the candidate set, and intersect map-side. */
+  private def withOverlap(cands: DataFrame, sorted: DataFrame): DataFrame = {
+    def side(s: String) = sorted.select(col("doc_id").as(s"doc_$s"),
+      col("arr").as(s"arr_$s"), col("sz").as(s"sz$s"))
+    cands.join(side("a"), "doc_a").join(side("b"), "doc_b")
+      .withColumn("c", size(array_intersect(col("arr_a"), col("arr_b"))))
+  }
+
+  /** Prefix length p = L − ⌈t·L⌉ + 1 of a rarest-first array of size
+    * `sz` at t = tauNum/tauDen: the ceiling is (num·L + den − 1)
+    * integer-divided by den (longs stay exact; the cast truncates an
+    * already-integral value). */
+  private def prefixLen(tauNum: Int, tauDen: Int): Column =
+    (col("sz") - ((lit(tauNum.toLong) * col("sz") + lit(tauDen - 1))
+      / lit(tauDen)).cast("int") + 1).as("p")
+
   /**
    * EXACT Jaccard-threshold similarity self-join via prefix filtering
    * (AllPairs, Bayardo et al. WWW'07 / PPJoin, Xiao et al. 2008) — the
@@ -589,12 +639,7 @@ object Dedup {
       .distinct() // a pair can meet on several shared prefix tokens
     // exact verify on the candidate set only: gather both token arrays,
     // intersect map-side, keep tauDen*common >= tauNum*union (integer)
-    val da = sorted.select(col("doc_id").as("doc_a"), col("arr").as("arr_a"),
-      col("sz").as("sza"))
-    val db = sorted.select(col("doc_id").as("doc_b"), col("arr").as("arr_b"),
-      col("sz").as("szb"))
-    cands.join(da, "doc_a").join(db, "doc_b")
-      .withColumn("c", size(array_intersect(col("arr_a"), col("arr_b"))))
+    withOverlap(cands, sorted)
       .filter(lit(tauDen.toLong) * col("c") >=
         lit(tauNum.toLong) * (col("sza") + col("szb") - col("c")))
       .select(col("doc_a"), col("doc_b"),
@@ -612,17 +657,12 @@ object Dedup {
   private[graft] def jaccardCandidateMeets(docs: DataFrame, id: Column,
       text: Column, tauNum: Int, tauDen: Int,
       posFilter: Boolean = true, sigFilter: Boolean = true): (DataFrame, DataFrame) = {
-    require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
-      s"threshold must be a rational in (0,1], got $tauNum/$tauDen")
+    requireTau(tauNum, tauDen)
     // distinct non-empty whitespace tokens per doc; empty-token removal
     // BEFORE distinct so "a  b" and "a b" tokenize identically
     val toks = docs
       .select(id.as("doc_id"), explode(array_distinct(
         array_remove(split(coalesce(text, lit("")), " "), ""))).as("tok"))
-    val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    // per-doc token array sorted rarest-first (df asc, tok asc): struct
-    // sort gives the global total order without materializing a global
-    // rank (no single-partition row_number over the vocabulary)
     // materialized ONCE (localCheckpoint): the plan consumes this
     // relation four times (both prefix sides + both verify gathers) and
     // would otherwise recompute the explode+join+collect chain each time
@@ -631,20 +671,12 @@ object Dedup {
     // filter below (the PPJoin+ suffix-filter role: bound the overlap
     // from information BEYOND prefix positions, before the distinct
     // exchange ever sees the row)
-    val sorted = toks.join(dfreq, "tok")
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("ts"))
-      .select(col("doc_id"),
-        transform(col("ts"), s => s.getField("tok")).as("arr"),
-        size(col("ts")).as("sz"))
+    val sorted = rarestFirst(toks)
       .withColumn("wsig", expr(
         "aggregate(arr, CAST(0 AS BIGINT), (acc, t) -> " +
           "acc | shiftleft(CAST(1 AS BIGINT), CAST(pmod(xxhash64(t), 64) AS INT)))"))
       .localCheckpoint(true)
-    // p = L - ceil(t*L) + 1; ceil via (num*L + den - 1) integer-div den
-    // (longs stay exact; the cast truncates an already-integral value)
-    val p = (col("sz") - ((lit(tauNum.toLong) * col("sz") + lit(tauDen - 1))
-      / lit(tauDen)).cast("int") + 1).as("p")
+    val p = prefixLen(tauNum, tauDen)
     // the candidate join meets on the token's 8-byte xxhash64, not the
     // token string — the prefix relations are the stage's shuffle-byte
     // bill at corpus scale and the string is dead weight there: a hash
@@ -746,27 +778,19 @@ object Dedup {
   def containmentJoinExact(docs: DataFrame, tauNum: Int = 9,
       tauDen: Int = 10, shingleN: Int = 3,
       maxDf: Option[Int] = None): DataFrame = {
-    require(tauNum > 0 && tauDen > 0 && tauNum <= tauDen,
-      s"threshold must be a rational in (0,1], got $tauNum/$tauDen")
+    requireTau(tauNum, tauDen)
     require(maxDf.forall(_ >= 2),
       s"containmentJoinExact: maxDf=$maxDf must be >= 2")
     val toks = docs.select(col("doc_id"),
       explode(array_distinct(wordShingles(col("text"), shingleN))).as("tok"))
-    val dfreq = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     // Hot set materialized once (it is boilerplate-sized, not
     // corpus-sized) so the two anti-joins below don't each re-run the
     // corpus df aggregate.
     val hotOpt = maxDf.map(cap =>
-      dfreq.filter(col("df") > cap).select(col("tok")).localCheckpoint(true))
-    val sorted = toks.join(dfreq, "tok")
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("df"), col("tok")))).as("ts"))
-      .select(col("doc_id"),
-        transform(col("ts"), s => s.getField("tok")).as("arr"),
-        size(col("ts")).as("sz"))
+      docFreq(toks).filter(col("df") > cap).select(col("tok")).localCheckpoint(true))
+    val sorted = rarestFirst(toks)
       .localCheckpoint(true) // consumed by the prefix, postings, and both verify sides
-    val p = (col("sz") - ((lit(tauNum.toLong) * col("sz") + lit(tauDen - 1))
-      / lit(tauDen)).cast("int") + 1).as("p")
+    val p = prefixLen(tauNum, tauDen)
     val prefA0 = sorted.select(col("doc_id").as("doc_a"),
       explode(slice(col("arr"), lit(1), p)).as("tok"))
     val postB0 = sorted.select(col("doc_id").as("doc_b"),
@@ -793,11 +817,7 @@ object Dedup {
       .join(postB.select(xxhash64(col("tok")).as("kh"), col("doc_b")), Seq("kh"))
       .filter(col("doc_a") =!= col("doc_b"))
       .select(col("doc_a"), col("doc_b")).distinct()
-    val da = sorted.select(col("doc_id").as("doc_a"),
-      col("arr").as("arr_a"), col("sz").as("sza"))
-    val db = sorted.select(col("doc_id").as("doc_b"), col("arr").as("arr_b"))
-    cands.join(da, "doc_a").join(db, "doc_b")
-      .withColumn("c", size(array_intersect(col("arr_a"), col("arr_b"))))
+    withOverlap(cands, sorted)
       .filter(lit(tauDen.toLong) * col("c") >= lit(tauNum.toLong) * col("sza"))
       .select(col("doc_a"), col("doc_b"),
         round(col("c").cast("double") / col("sza").cast("double"), 6)
@@ -838,8 +858,7 @@ object Dedup {
         transform(sequence(lit(0), size(col("t")) - k),
           i => array_join(slice(col("t"), i + lit(1), lit(k)), " ")))
         .as(Seq("pos", "gram")))
-      .withColumn("h",
-        conv(substring(md5(col("gram")), 1, 15), 16, 10).cast("long"))
+      .withColumn("h", Sketches.h60(col("gram")))
       .drop("gram")
     val wf = Window.partitionBy(col("doc_id")).orderBy(col("pos").asc)
       .rowsBetween(0, w - 1)

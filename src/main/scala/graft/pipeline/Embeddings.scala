@@ -61,10 +61,6 @@ object Embeddings {
   private def hardSig(dotFp: Column): Column =
     least(lit(Fp), greatest(lit(0L), fdiv(dotFp, 4L) + lit(Fp / 2)))
 
-  private def h60(parts: Column*): Column =
-    conv(substring(md5(concat_ws(":", parts.map(_.cast("string")): _*)),
-      1, 15), 16, 10).cast("long")
-
   /**
    * Train SGNS embeddings over a `(start, step, node)` walk relation
    * (the [[TopicGraph.randomWalks]] / [[TopicGraph.node2vecWalks]]
@@ -127,7 +123,7 @@ object Embeddings {
         .select(col("c"), col("x").as("xp"), col("m"),
           explode(sequence(lit(1), lit(negatives))).as("j"))
         .withColumn("rn",
-          (pmod(h60(lit(seed), lit("neg"), col("c"), col("xp"), col("j")),
+          (pmod(Sketches.h60Joined(lit(seed), lit("neg"), col("c"), col("xp"), col("j")),
             lit(n)) + 1).cast("int"))
         .join(vocab, Seq("rn"))
         .select(col("c"), col("node").as("x"), lit(0L).as("label"),
@@ -141,7 +137,7 @@ object Embeddings {
     val dims = spark.range(dim).select(col("id").cast("int").as("k"))
     def init(which: String): DataFrame = vocab.crossJoin(dims)
       .select(col("node"), col("k"),
-        (pmod(h60(lit(seed), lit("init"), lit(which), col("node"), col("k")),
+        (pmod(Sketches.h60Joined(lit(seed), lit("init"), lit(which), col("node"), col("k")),
           lit(200001L)) - lit(100000L)).as("v"))
       .localCheckpoint(true)
     var eIn = init("i")

@@ -29,13 +29,10 @@ object Similarity {
   def norm(a: Column): Column =
     graft.functions.GraftFunctions.vec_norm(a)
 
-  /** Cosine similarity; 0 for zero vectors. */
-  def cosine(a: Column, b: Column): Column = cosFromNorms(a, norm(a), b, norm(b))
-
   /** Cosine of `a`, `b` given their norms `na`, `nb`; 0 for zero vectors.
     * Every pair search projects the norms per SIDE before its pair join
     * and scores with this (why: [[bruteForceTopK]]). */
-  private def cosFromNorms(a: Column, na: Column, b: Column, nb: Column): Column =
+  private[graft] def cosFromNorms(a: Column, na: Column, b: Column, nb: Column): Column =
     when(na * nb === 0, lit(0.0)).otherwise(dot(a, b) / (na * nb))
 
   /** Per-probe top-k of a scored (probe_id, cand_id, cos, ...) relation:
@@ -44,17 +41,6 @@ object Similarity {
     scored.withColumn("rank", row_number().over(Window.partitionBy(col("probe_id"))
         .orderBy(col("cos").desc, col("cand_id").asc)))
       .filter(col("rank") <= k)
-
-  /** Hot-bucket cap of a (bucket, ...) relation: drop every bucket
-    * holding more than `maxBucketSize` rows; `maxBucketSize <= 0` is
-    * off (the relation is returned as is). Why and what it trades:
-    * [[signLshPairs]]. */
-  private def capBuckets(keyed: DataFrame, maxBucketSize: Long): DataFrame =
-    if (maxBucketSize <= 0L) keyed
-    else keyed.join(keyed.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("_n"))
-      .filter(col("_n") <= maxBucketSize)
-      .select(col("bucket")), Seq("bucket"))
 
   /**
    * Exact top-k by cosine: probes × corpus (corpus side broadcast when
@@ -131,9 +117,7 @@ object Similarity {
    */
   def signBandKeys(emb: Column, bits: Int, bands: Int): Column = {
     require(bits > 0 && bands > 0, s"signBandKeys: bits=$bits bands=$bands must be positive")
-    array((0 until bands).map { b =>
-      concat_ws("|", lit(b.toString), signBucket(emb, bits, first = b * bits))
-    }: _*)
+    Dedup.bandTagged(bands)(b => signBucket(emb, bits, first = b * bits))
   }
 
   /** Sign-LSH SEARCH bucket sizing: smallest `bits` with 2^bits ≥ n/8
@@ -186,30 +170,19 @@ object Similarity {
     // on the result is a deliberate subset, so cap mode persists the
     // keyed relation (it feeds the count AND both join sides) and
     // checkpoints the ids-only output eagerly.
-    val keyed =
-      if (maxBucketSize <= 0L) allKeyed
-      else allKeyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val capped = capBuckets(keyed, maxBucketSize)
-    val a = capped.select(col("bucket"), col("vec_id").as("id_a"),
-      col("embedding").as("ea"), col("nrm").as("na"))
-    val b = capped.select(col("bucket"), col("vec_id").as("id_b"),
-      col("embedding").as("eb"), col("nrm").as("nb"))
     // cosine computed BEFORE the dedup: a pair matching in k bands costs
     // k cheap vector ops map-side, and the dedup shuffle then carries
     // only (id, id, cos) — deduping first would drag the embedding
     // arrays themselves through the exchange
-    val pairs = a.join(b, Seq("bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        cosFromNorms(col("ea"), col("na"), col("eb"), col("nb")).as("cos"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col("cos")).as("cos")) // identical across band matches
-    if (maxBucketSize <= 0L) pairs
-    else {
-      val out = pairs.localCheckpoint(true) // ids+cos only; frees the cache
-      keyed.unpersist(false)
-      out
-    }
+    def pairs(keyed: DataFrame): DataFrame =
+      Dedup.bandPairs(Dedup.capBuckets(keyed, maxBucketSize), "vec_id",
+          Seq(col("embedding").as("ea"), col("nrm").as("na")),
+          Seq(col("embedding").as("eb"), col("nrm").as("nb")))
+        .select(col("id_a"), col("id_b"),
+          cosFromNorms(col("ea"), col("na"), col("eb"), col("nb")).as("cos"))
+        .groupBy(col("id_a"), col("id_b"))
+        .agg(max(col("cos")).as("cos")) // identical across band matches
+    if (maxBucketSize <= 0L) pairs(allKeyed) else Dedup.searchOnce(allKeyed)(pairs)
   }
 
   /**
@@ -492,7 +465,7 @@ object Similarity {
     // the celled projection feeds BOTH self-join sides and the final
     // keep join: persist lazily so the scan + norms + cells compute
     // once, release after the verdict table is checkpointed (same
-    // discipline as Dedup.lshCandidatesFromSigs)
+    // discipline as Dedup.candidatesFromSigs)
     val c = base.select(col("vec_id"), col("embedding"), col("cell"),
       norm(col("embedding")).as("nrm"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -728,7 +701,7 @@ object Similarity {
       explode(signBandKeys(col("embedding"), bits, bands)).as("bucket"),
       lit(bits).as("_bits"), lit(bands).as("_bands"),
       lit(ProjSeed).as("_seed"))
-    capBuckets(keyed, maxBucketSize)
+    Dedup.capBuckets(keyed, maxBucketSize)
   }
 
   /** Read (bits, bands) from a [[signLshIndex]] frame, refusing an
@@ -880,7 +853,7 @@ object Similarity {
     // trade as signLshPairs (other bands still cover). Cosine before
     // dedup (see signLshPairs): the exchange carries (probe_id,
     // cand_id, cos), never the embedding arrays
-    topKPerProbe(p.join(capBuckets(c0, maxBucketSize), Seq("bucket"))
+    topKPerProbe(p.join(Dedup.capBuckets(c0, maxBucketSize), Seq("bucket"))
       .filter(col("probe_id") =!= col("cand_id"))
       .select(col("probe_id"), col("cand_id"),
         cosFromNorms(col("pv"), col("pn"), col("cv"), col("cn")).as("cos"))
@@ -899,7 +872,7 @@ object Similarity {
    * Deterministic: the seed is the min-id vector; each round adds the
    * point maximizing its current min cosine-DISTANCE to the selected
    * set (ties by vec_id). Zero-norm vectors sit at distance 1 from
-   * everything (the cosine(=0) convention of [[cosine]]).
+   * everything (the cosine(=0) convention of [[cosFromNorms]]).
    *
    * Scale shape: the working relation carries (vec_id, embedding,
    * norm, d) where d is the running min-distance — each round is ONE

@@ -44,9 +44,16 @@ object Sketches {
   private val RestBits = 60 - HllP
 
   /** 60-bit nonnegative hash of `key` — the engine's md5-prefix family
-    * (same construction as the q56 split / q96 mixture thresholds). */
-  private def h60(key: Column): Column =
+    * (same construction as the q56 split / q96 mixture thresholds). It
+    * hashes the key itself, so a NULL key stays NULL: through
+    * [[h60Joined]]'s `concat_ws` it would hash as "". */
+  private[pipeline] def h60(key: Column): Column =
     conv(substring(md5(key), 1, 15), 16, 10).cast("long")
+
+  /** [[h60]] of the parts cast to strings and joined with ":" — the
+    * seeded form, e.g. seed:start:step:dst. */
+  private[pipeline] def h60Joined(parts: Column*): Column =
+    h60(concat_ws(":", parts.map(_.cast("string")): _*))
 
   /**
    * Per-group HLL register file: (groupCols…, bucket, rho) with one
@@ -54,7 +61,10 @@ object Sketches {
    * leading-zero count of the 54-bit post-bucket hash field. bin()
    * gives the minimal binary string, so bitlength(rest) =
    * length(bin(rest)) and rho = 55 − bitlength — pure integer columns,
-   * codegen end to end.
+   * codegen end to end. On a streaming frame the state is ≤ 64
+   * registers per group, so it is safe in Complete mode with no
+   * watermark wherever the group domain is bounded (languages,
+   * sources, shards), unlike a dropDuplicates that holds every key.
    */
   def hllRegisters(df: DataFrame, key: Column, groupCols: Seq[String]): DataFrame = {
     val h = h60(key)
@@ -66,18 +76,6 @@ object Sketches {
       .agg(max(col("r")).as("rho"))
   }
 
-  /**
-   * Per-group cardinality estimate from the register file. The
-   * indicator sum Z⁻¹ = Σ 2^−M_j is carried as the EXACT integer
-   * S = Σ 2^(55−M_j) (absent buckets contribute 2^55; S ≤ 64·2^55 =
-   * 2^61 fits a long), so the only floating step is the final
-   * alpha·m²·2^55 / S division — deterministic IEEE on both engines.
-   * Output: (groupCols…, n_zero_regs, reg_sum, n_distinct_est).
-   * The raw estimator is published as-is (no small-range linear
-   * counting correction: ln() is not bit-reproducible across engines,
-   * and the REGISTERS are the durable product — a consumer holding
-   * (n_zero_regs, reg_sum) can apply any correction downstream).
-   */
   /** Default Bloom geometry: m = 4096 bits / k = 3 probes keeps the
     * whole filter at 512 bytes — sized for the spec corpora; a real
     * blocklist sizes m ≈ 1.44·k·|keys| for its target fp rate
@@ -94,7 +92,7 @@ object Sketches {
     * intermediate stays tiny and the DuckDB oracle restates the
     * arithmetic verbatim with no overflow analysis. */
   private def bloomPositions(key: Column, k: Int, m: Int): Seq[Column] = {
-    val h1 = conv(substring(md5(key), 1, 15), 16, 10).cast("long") % m
+    val h1 = h60(key) % m
     val h2 = (conv(substring(md5(key), 16, 15), 16, 10).cast("long") * 2 + 1) % m
     (0 until k).map(i => (h1 + lit(i.toLong) * h2) % m)
   }
@@ -225,6 +223,11 @@ object Sketches {
    * trusting the caller. NULL keys are excluded (md5(null) is null —
    * a null-position counter would be unprobeable and the row bound
    * would quietly grow); a null is not a key.
+   *
+   * On a streaming frame the state is bounded by the geometry (≤
+   * depth×width counter keys) however unbounded the stream, so it is
+   * safe in Complete mode with no watermark; each snapshot is a valid
+   * register file over everything ingested so far.
    */
   def cmsRegisters(df: DataFrame, key: Column, depth: Int = CmsDepth,
       width: Int = CmsWidth): DataFrame = {
@@ -371,10 +374,21 @@ object Sketches {
   def hllEstimate(df: DataFrame, key: Column, groupCols: Seq[String]): DataFrame =
     hllEstimateFromRegisters(hllRegisters(df, key, groupCols), groupCols)
 
-  /** Read-off from an existing (groupCols…, bucket, rho) register file
-    * — the merge-then-estimate entry point ([[hllRegisters]] files of
-    * any provenance combine by groupBy max(rho) first; HyperBall feeds
-    * its propagated ball registers here). */
+  /**
+   * Per-group cardinality estimate from an existing (groupCols…,
+   * bucket, rho) register file — the merge-then-estimate entry point
+   * ([[hllRegisters]] files of any provenance combine by groupBy
+   * max(rho) first; HyperBall feeds its propagated ball registers
+   * here). The indicator sum Z⁻¹ = Σ 2^−M_j is carried as the EXACT
+   * integer S = Σ 2^(55−M_j) (absent buckets contribute 2^55; S ≤
+   * 64·2^55 = 2^61 fits a long), so the only floating step is the final
+   * alpha·m²·2^55 / S division — deterministic IEEE on both engines.
+   * Output: (groupCols…, n_zero_regs, reg_sum, n_distinct_est).
+   * The raw estimator is published as-is (no small-range linear
+   * counting correction: ln() is not bit-reproducible across engines,
+   * and the REGISTERS are the durable product — a consumer holding
+   * (n_zero_regs, reg_sum) can apply any correction downstream).
+   */
   def hllEstimateFromRegisters(regs: DataFrame, groupCols: Seq[String]): DataFrame = {
     val gcols = groupCols.map(col)
     // functions.shiftleft only takes a literal shift — the SQL form

@@ -21,10 +21,6 @@ object TextAnalysis {
     "de" -> Seq("join", "filter", "window"),
     "zh" -> Seq("spark", "group", "query"))
 
-  /** Count of tokens of `text` that are in `words`. */
-  def markerHits(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isin(words.map(w => w: Any): _*)))
-
   /**
    * Repetition signals (the Gopher/MassiveText repetition filters,
    * Rae et al. 2021 §A1.1, adapted to this corpus's 10-token sentence

@@ -507,7 +507,7 @@ object TopicGraph {
     * persisted lazily (all three consumers share one action): the
     * degree joins run once, and the caller unpersists it after the one
     * action over the triangles (same discipline as
-    * Dedup.lshCandidatesFromSigs). */
+    * Dedup.candidatesFromSigs). */
   private def compactForwardTriangles(und: DataFrame): (DataFrame, DataFrame) = {
     val deg = und.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -1047,9 +1047,7 @@ object TopicGraph {
     val (start, _, _) = Loop.materialize(starts.select(starts.columns.head).toDF("node")
       .distinct().select(col("node").as("start"), col("node")))
     val rounds = Loop.iterate(start, steps) { (cur, t) =>
-      val score = conv(substring(md5(concat_ws(":", lit(seed),
-        col("start").cast("string"), lit(t).cast("string"),
-        col("dst").cast("string"))), 1, 15), 16, 10).cast("long")
+      val score = Sketches.h60Joined(lit(seed), col("start"), lit(t), col("dst"))
       cur.join(e, cur("node") === e("src"))
         .select(col("start"), struct(score.as("sc"), col("dst")).as("cand"))
         .groupBy(col("start")).agg(min(col("cand")).as("m"))
@@ -1096,9 +1094,7 @@ object TopicGraph {
       s"node2vec: p=$p, q=$q must be in [1, 8] (integer inverse biases)")
     val (e, _, _) = Loop.materialize(edges.select(col("src"), col("dst")).distinct())
     def hashKey(t: Int): org.apache.spark.sql.Column =
-      conv(substring(md5(concat_ws(":",
-      lit(seed), col("start").cast("string"), lit(t).cast("string"),
-      col("dst").cast("string"))), 1, 15), 16, 10).cast("long")
+      Sketches.h60Joined(lit(seed), col("start"), lit(t), col("dst"))
     val (start, _, _) = Loop.materialize(starts.select(starts.columns.head).toDF("node")
       .distinct().select(col("node").as("start"), col("node")))
     // round 0 is (start, node); every later round is (start, prev, node)
@@ -1565,9 +1561,7 @@ object TopicGraph {
       s"linkPredictionAuc: maxDeg=$maxDeg must be >= 2 (a wedge needs 2 neighbors)")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val und = simpleUndirected(edges).persist(lvl)
-    val h = conv(substring(md5(concat_ws(":", lit("lp"),
-      col("u").cast("string"), col("v").cast("string"))), 1, 15), 16, 10)
-      .cast("long")
+    val h = Sketches.h60Joined(lit("lp"), col("u"), col("v"))
     val test = und.filter(pmod(h, lit(testMod.toLong)) === 0)
     val train = und.filter(pmod(h, lit(testMod.toLong)) =!= 0)
       .localCheckpoint(true)

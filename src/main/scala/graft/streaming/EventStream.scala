@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -81,12 +81,9 @@ object EventStream {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
   }
 
-  /** Read the events parquet as a bounded stream (for tests).
-    * FileStreamSource requires a directory of files, so the single-file
-    * table is exposed through a temp directory symlink. */
   /**
    * Streaming exact dedup — the streaming twin of the batch exact-dedup
-   * operator (Dedup.exactGroups / q40): keep the first event per key.
+   * operator (q40's md5(text) groupBy): keep the first event per key.
    * Uses `dropDuplicatesWithinWatermark`, which EVICTS each key's state
    * once the watermark passes its event time — plain
    * `dropDuplicates(keys)` without the event-time column in the keys
@@ -131,7 +128,7 @@ object EventStream {
    * exactly like the batch search, per micro-batch.
    *
    * `bandedIndex` is the pre-exploded (doc_id, sig, bucket) view of the
-   * corpus signature table — build it once with [[bandedIndex]] over
+   * corpus signature table — build it once with `Dedup.bandedIndex` over
    * the checkpointed (doc_id, sig) stage and snapshot it (a raw
    * signature table is NOT accepted here: exploding band keys per
    * micro-batch would redo the same corpus-wide work every trigger).
@@ -155,7 +152,7 @@ object EventStream {
   def incrementalDedupStream(docs: DataFrame, bandedIndex: DataFrame,
       numHashes: Int = 16, bands: Int = 4, tsCol: String = "ts",
       fast: Boolean = false): DataFrame = {
-    val rows = numHashes / bands
+    val dedup = graft.pipeline.Dedup
     val marked = docs
       .withColumn(tsCol, col(tsCol).cast("timestamp"))
       .withWatermark(tsCol, "10 minutes")
@@ -163,22 +160,19 @@ object EventStream {
       if (fast) marked
         // shingles materialized once, then the 16 per-row minima read
         // them (Catalyst does not CSE through HOF lambdas)
-        .withColumn("_shingles", graft.pipeline.Dedup.wordShingles(col("text"), 3))
-        .withColumn("sig",
-          graft.pipeline.Dedup.fastSigFromShingles(col("_shingles"), numHashes))
+        .withColumn("_shingles", dedup.wordShingles(col("text"), 3))
+        .withColumn("sig", dedup.fastSigFromShingles(col("_shingles"), numHashes))
       else marked
         .withColumn("sig", graft.functions.GraftFunctions.minhash_sig(col("text")))
     val newKeyed = signed
       .select(col("doc_id"), col("sig"), col(tsCol),
-        explode(graft.pipeline.Dedup.lshBandKeys(col("sig"), bands, rows)).as("bucket"))
+        explode(dedup.lshBandKeys(col("sig"), numHashes, bands)).as("bucket"))
     val idx = bandedIndex.select(col("bucket"),
       col("doc_id").as("dup_of"), col("sig").as("sig_b"))
     newKeyed.join(idx, Seq("bucket"))
       .filter(col("doc_id") =!= col("dup_of"))
       .select(col("doc_id"), col("dup_of"),
-        (size(filter(zip_with(col("sig"), col("sig_b"), (x, y) => x === y),
-          (m: Column) => m)) / lit(numHashes.toDouble)).as("est_jaccard"),
-        col(tsCol))
+        dedup.estJaccard(col("sig"), col("sig_b"), numHashes), col(tsCol))
       .dropDuplicatesWithinWatermark("doc_id", "dup_of")
   }
 
@@ -230,69 +224,12 @@ object EventStream {
       .dropDuplicatesWithinWatermark("subj", "obj")
   }
 
-  /** Band-keyed view of a (doc_id, sig) signature table — the static
-    * side [[incrementalDedupStream]] joins against (pre-explode it
-    * once and checkpoint, rather than exploding per micro-batch). */
-  def bandedIndex(sigs: DataFrame, numHashes: Int = 16, bands: Int = 4): DataFrame =
-    sigs.select(col("doc_id"), col("sig"),
-      explode(graft.pipeline.Dedup.lshBandKeys(col("sig"), bands, numHashes / bands))
-        .as("bucket"))
-
-  /** Band-keyed sign-LSH view of a (vec_id, embedding) table — the
-    * static side [[annStream]] joins against (build once over the
-    * committed corpus, snapshot it). The index CARRIES ITS FAMILY as
-    * metadata columns (`_bits`, `_bands`, `_seed`): a stream keyed
-    * with different bucket granularity — or an index built by an
-    * engine with a different projection seed — would miss every
-    * bucket SILENTLY (the md5-vs-xxhash64 signature-family hazard of
-    * [[incrementalDedupStream]], in LSH form), so [[annStream]] reads
-    * the family from the index instead of trusting the caller, and
-    * refuses a foreign seed loudly. */
-  def signLshIndex(vecs: DataFrame, bits: Int, bands: Int = 4,
-      maxBucketSize: Long = 0L): DataFrame =
-    graft.pipeline.Similarity.signLshIndex(vecs, bits, bands, maxBucketSize)
-
-  /**
-   * Streaming Count-Min register maintenance — literally the batch
-   * transform ([[graft.pipeline.Sketches.cmsRegisters]]) applied to a
-   * streaming DataFrame (unified Dataset semantics): a streaming
-   * groupBy whose STATE is bounded by the sketch geometry (≤
-   * depth×width counter keys) however unbounded the stream — the rare
-   * aggregation that is safe in Complete mode with NO watermark,
-   * because the grouping key space belongs to the sketch, not the
-   * data. Each emitted snapshot is a valid register file for
-   * [[graft.pipeline.Sketches.cmsEstimate]] over everything ingested
-   * so far, and two streams' registers merge by SUM (the batch merge
-   * law) — per-shard ingest sketches combine at read time exactly like
-   * the batch manifests.
-   */
-  def cmsRegistersStream(stream: DataFrame, key: Column,
-      depth: Int = graft.pipeline.Sketches.CmsDepth,
-      width: Int = graft.pipeline.Sketches.CmsWidth): DataFrame =
-    graft.pipeline.Sketches.cmsRegisters(stream, key, depth, width)
-
-  /**
-   * Streaming HLL register maintenance — the distinct-count leg of the
-   * same family ([[cmsRegistersStream]] is the frequency leg): the
-   * batch [[graft.pipeline.Sketches.hllRegisters]] transform on a
-   * streaming DataFrame. State is ≤ 64 registers PER GROUP — safe in
-   * Complete mode when the group domain is bounded (languages,
-   * sources, shards: the manifest dimensions), which is exactly where
-   * a streaming distinct-count is wanted; a raw dropDuplicates would
-   * instead hold every distinct key forever. Snapshots feed
-   * [[graft.pipeline.Sketches.hllEstimateFromRegisters]]; shards merge
-   * by groupBy max(rho).
-   */
-  def hllRegistersStream(stream: DataFrame, key: Column,
-      groupCols: Seq[String]): DataFrame =
-    graft.pipeline.Sketches.hllRegisters(stream, key, groupCols)
-
   /**
    * Streaming ANN against a static sign-LSH index — the embedding twin
    * of [[incrementalDedupStream]]: each arriving probe vector is
    * band-keyed in the micro-batch (map-side seeded projections, the
    * `RandProjBitsExpr` codegen path) and joined against the
-   * pre-exploded [[signLshIndex]] snapshot; candidates above `tau`
+   * pre-exploded `Similarity.signLshIndex` snapshot; candidates above `tau`
    * exact cosine are emitted. Stream-static joins keep NO state for
    * the static side, so per-trigger cost is O(|batch| · bucket
    * population) regardless of index size — the same scaling as the
@@ -326,9 +263,7 @@ object EventStream {
     keyed.join(idx, Seq("bucket"))
       .filter(col("probe_id") =!= col("cand_id"))
       .select(col("probe_id"), col("cand_id"),
-        when(col("pn") * col("cn") === 0, lit(0.0))
-          .otherwise(sim.dot(col("pv"), col("cv")) / (col("pn") * col("cn")))
-          .as("cos"),
+        sim.cosFromNorms(col("pv"), col("pn"), col("cv"), col("cn")).as("cos"),
         col(tsCol))
       .filter(col("cos") >= tau)
       .dropDuplicatesWithinWatermark("probe_id", "cand_id")
@@ -363,6 +298,9 @@ object EventStream {
           .as("delta_sec"))
   }
 
+  /** Read the events parquet as a bounded stream (for tests).
+    * FileStreamSource requires a directory of files, so the single-file
+    * table is exposed through a temp directory symlink. */
   def readEventStream(spark: SparkSession, sfDir: String): DataFrame = {
     val schema: StructType = spark.read.parquet(s"$sfDir/events.parquet").schema
     val dir = java.nio.file.Files.createTempDirectory("graft-events-stream")

@@ -8,6 +8,8 @@
 //   QTIME <query> pass<k> <s> s rows=<n>   two timed passes, no capture
 //   AUDIT <query> exchanges=<n> flags=...  red flags summed over the
 //                                          final plans of every action
+//                                          (SinglePartition: a one-task
+//                                          shuffle, not a global count's)
 // and <outDir>/<query>.txt (':' written as '_'): the formatted explain
 // plus the executed plan of every action of an untimed third pass, loop
 // rounds included.
@@ -17,7 +19,15 @@ import graft.SparkEntry
 import graft.pipeline.Metrics
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{ExplainMode, QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.CartesianProductExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import scala.collection.mutable.ArrayBuffer
 
@@ -48,11 +58,11 @@ object Probe {
       // on before construction. The bus is drained first: an action of
       // the timed passes still queued there would reach the listener
       Metrics.drainListeners(spark)
-      val plans = ArrayBuffer.empty[(String, String)]
+      val plans = ArrayBuffer.empty[(String, String, SparkPlan)]
       val listener = new QueryExecutionListener {
         override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
-          plans.synchronized(plans +=
-            f"==== action: $fn (${ns / 1e6}%.0f ms) ====" -> qe.executedPlan.toString)
+          plans.synchronized(plans += ((f"==== action: $fn (${ns / 1e6}%.0f ms) ====",
+            qe.executedPlan.toString, qe.executedPlan)))
         override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
       }
       spark.listenerManager.register(listener)
@@ -67,15 +77,47 @@ object Probe {
       Files.writeString(Paths.get(outDir, s"${spec.replace(':', '_')}.txt"),
         s"== $spec: final-plan explain(formatted) ==\n$explain\n\n" +
           "== executed plans of every action (loop rounds included) ==\n" +
-          actions.map { case (head, plan) => s"$head\n${plan.take(20000)}" }.mkString("\n"))
+          actions.map { case (head, text, _) => s"$head\n${text.take(20000)}" }.mkString("\n"))
       // every action is audited: a loop query's last action (the noop
-      // write) is a scan of its last checkpoint, its rounds ran before.
-      // AQE's initial plan follows each action's final one
-      val fins = actions.map(_._2.split("== Initial Plan ==").head)
-      val flags = Seq("CartesianProduct", "SinglePartition", "ScalaUDF")
-        .filter(f => fins.exists(_.contains(f)))
-      val exchanges = fins.map(_.linesIterator.count(_.contains("Exchange hashpartitioning"))).sum
-      println(s"AUDIT $spec exchanges=$exchanges flags=${flags.mkString(",")}")
+      // write) is a scan of its last checkpoint, its rounds ran before
+      val ops = actions.flatMap(a => finalNodes(a._3))
+      val flags = Seq[(String, SparkPlan => Boolean)](
+        "CartesianProduct" -> (_.isInstanceOf[CartesianProductExec]),
+        "SinglePartition" -> {
+          case e: ShuffleExchangeExec =>
+            e.outputPartitioning == SinglePartition && !keylessPartial(e.child)
+          case _ => false
+        },
+        "ScalaUDF" -> (_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))))
+        .collect { case (name, hit) if ops.exists(hit) => name }
+      println(s"AUDIT $spec exchanges=${ops.count(hashShuffle)} flags=${flags.mkString(",")}")
     }
+  }
+
+  /** Every operator of an executed plan as it finally ran: AQE's final
+    * plan (not its initial one), each query stage's plan, the plans of
+    * cached relations it scans and of its subqueries. */
+  private def finalNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan)
+    case s: QueryStageExec => finalNodes(s.plan)
+    case m: InMemoryTableScanExec => finalNodes(m.relation.cachedPlan)
+    case _ => (p.children ++ p.innerChildren.collect { case c: SparkPlan => c })
+      .flatMap(finalNodes)
+  })
+
+  /** A hash shuffle that runs (a reused exchange reads another's output). */
+  private def hashShuffle(p: SparkPlan): Boolean = p match {
+    case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[HashPartitioning]
+    case _ => false
+  }
+
+  /** A keyless partial aggregate (a global count's or sum's map side)
+    * sends at most one row per map partition, so the one-task shuffle
+    * after it is no bottleneck. */
+  private def keylessPartial(p: SparkPlan): Boolean = p match {
+    case w: WholeStageCodegenExec => keylessPartial(w.child)
+    case a: BaseAggregateExec =>
+      a.groupingExpressions.isEmpty && a.aggregateExpressions.forall(_.mode == Partial)
+    case _ => false
   }
 }

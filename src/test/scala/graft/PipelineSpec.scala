@@ -270,6 +270,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(pair.isDefined, s"near-dup pair not found in ${cands.mkString(",")}")
     assert(pair.get._3 > 0.5)
     assert(!cands.exists(c => c._2 == 2L || c._1 == 2L))
+    // a band count that does not divide the signature is refused: more
+    // bands than hashes would be empty bands (one bucket, all pairs)
+    Seq(32, 0).foreach { bands =>
+      val e = intercept[IllegalArgumentException](Dedup.minhashCandidates(docs, bands = bands))
+      assert(e.getMessage.contains(s"bands=$bands") && e.getMessage.contains("numHashes=16"),
+        e.getMessage)
+    }
   }
 
   test("fast (xxhash64) minhash finds the same planted near-duplicates as the md5 path") {

@@ -12,7 +12,7 @@ class ProbeSpec extends AnyFunSuite {
 
   test("Probe times, dumps and audits a sweep query and a dist: twin") {
     val out = Files.createTempDirectory("graft-probe").toString
-    val specs = Seq("q01_agg", "dist:q75_pagerank")
+    val specs = Seq("q01_agg", "dist:q75_pagerank", "q134_link_pred_auc")
     val log = new java.io.ByteArrayOutputStream()
     Console.withOut(log)(Probe.run(spark, Array("/root/testdata/sf0.001", out) ++ specs))
     val lines = log.toString.linesIterator.toSeq
@@ -34,5 +34,12 @@ class ProbeSpec extends AnyFunSuite {
     // scan of its last checkpoint
     val pr = lines.find(_.startsWith("AUDIT dist:q75_pagerank ")).get
     assert("""exchanges=(\d+)""".r.findFirstMatchIn(pr).get.group(1).toInt > 0, pr)
+    // PageRank's one-partition shuffles are its global count and
+    // dangling-mass sums (one row per map partition); the link-prediction
+    // AUC ranks every scored pair in one unpartitioned window
+    def flags(audit: String) = audit.split("flags=", -1)(1).split(",").toSet
+    assert(!flags(pr).contains("SinglePartition"), pr)
+    val lp = lines.find(_.startsWith("AUDIT q134_link_pred_auc ")).get
+    assert(flags(lp).contains("SinglePartition"), lp)
   }
 }

@@ -176,7 +176,7 @@ class StreamingSpec extends AnyFunSuite {
     val base = (1 to 40).map(i => s"w$i").mkString(" ")
     val corpus = Seq((1L, base + " a"), (2L, base + " ab"),
       (3L, "entirely different text here")).toDF("doc_id", "text")
-    val idx = EventStream.bandedIndex(
+    val idx = graft.pipeline.Dedup.bandedIndex(
       graft.pipeline.Dedup.minhashSignaturesOnePass(corpus))
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     def ts(s: Long) = new java.sql.Timestamp(t0.getTime + s * 1000)
@@ -211,7 +211,7 @@ class StreamingSpec extends AnyFunSuite {
     val base = (1 to 40).map(i => s"w$i").mkString(" ")
     val corpus = Seq((1L, base + " a"),
       (3L, "entirely different text here")).toDF("doc_id", "text")
-    val fastIdx = EventStream.bandedIndex(
+    val fastIdx = graft.pipeline.Dedup.bandedIndex(
       graft.pipeline.Dedup.minhashSignaturesFast(corpus))
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     def run(fast: Boolean, sink: String): Set[(Long, Long)] = {
@@ -247,7 +247,7 @@ class StreamingSpec extends AnyFunSuite {
       (i.toLong, base.map(_ + rnd.nextGaussian().toFloat * 0.1f))
     }
     val corpusDf = corpus.toDF("vec_id", "embedding")
-    val idx = EventStream.signLshIndex(corpusDf, bits = 4, bands = 4)
+    val idx = graft.pipeline.Similarity.signLshIndex(corpusDf, bits = 4, bands = 4)
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     val probeRows = Seq(
       (1000L, corpus(0)._2.map(_ + 0.01f), t0),
@@ -280,7 +280,7 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val vecs = (0 until 8).map(i => (i.toLong, Array.fill(8)(i.toFloat)))
       .toDF("vec_id", "embedding")
-    val foreign = EventStream.signLshIndex(vecs, bits = 4)
+    val foreign = graft.pipeline.Similarity.signLshIndex(vecs, bits = 4)
       .withColumn("_seed", lit(999L)) // an index built by another engine
     val e = intercept[IllegalArgumentException] {
       EventStream.annStream(vecs.withColumn("ts", current_timestamp()), foreign, 0.9)
@@ -355,7 +355,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(_.toString).sorted
     assert(batch.length <= graft.pipeline.Sketches.CmsDepth *
       graft.pipeline.Sketches.CmsWidth)
-    val q = EventStream.cmsRegistersStream(
+    val q = graft.pipeline.Sketches.cmsRegisters(
         EventStream.readEventStream(spark, sfDir), col("event_type"))
       .writeStream.outputMode("complete")
       .format("memory").queryName("cms_out").start()
@@ -374,7 +374,7 @@ class StreamingSpec extends AnyFunSuite {
     val batch = graft.pipeline.Sketches
       .hllRegisters(events, col("value").cast("string"), Seq("event_type"))
       .collect().map(_.toString).sorted
-    val q = EventStream.hllRegistersStream(
+    val q = graft.pipeline.Sketches.hllRegisters(
         EventStream.readEventStream(spark, sfDir),
         col("value").cast("string"), Seq("event_type"))
       .writeStream.outputMode("complete")
