@@ -544,12 +544,9 @@ object Dedup {
     val keyed = names
       .select(col("name"), explode(concat(array(col("name")), deletions)).as("kstr"))
       .distinct() // delete_i = delete_j for runs of equal chars
-      .select(keyOf(col("kstr")).as("k"), col("name"))
-    val a = keyed.select(col("k"), col("name").as("name_a"))
-    val b = keyed.select(col("k"), col("name").as("name_b"))
-    a.join(b, Seq("k"))
-      .filter(col("name_a") < col("name_b"))
-      .select(col("name_a"), col("name_b"))
+      .select(keyOf(col("kstr")).as("bucket"), col("name"))
+    bandPairs(keyed, "name", Nil, Nil)
+      .select(col("id_a").as("name_a"), col("id_b").as("name_b"))
       .distinct() // a pair can meet on several shared keys
       .filter(levenshtein(col("name_a"), col("name_b")) <= 1)
   }
@@ -883,16 +880,15 @@ object Dedup {
       maxDf: Int = 5): DataFrame = {
     require(maxDf >= 2, s"winnowingPairs: maxDf=$maxDf must be >= 2")
     val fps = winnowingFingerprints(docs, k, w)
-      .select(col("doc_id"), col("h")).distinct()
-    val rare = fps.groupBy(col("h"))
+      .select(col("doc_id"), col("h").as("bucket")).distinct()
+    // its own df cap, not capBuckets: counting rows instead of distinct
+    // docs gives the same df here but moves q125's aggregate plan
+    val rare = fps.groupBy(col("bucket"))
       .agg(countDistinct(col("doc_id")).as("df"))
       .filter(col("df") <= maxDf)
-      .select(col("h"))
-    val kept = fps.join(rare, Seq("h"))
-    kept.select(col("h"), col("doc_id").as("doc_a"))
-      .join(kept.select(col("h"), col("doc_id").as("doc_b")), Seq("h"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(countDistinct(col("h")).as("n_shared"))
+      .select(col("bucket"))
+    bandPairs(fps.join(rare, Seq("bucket")), "doc_id", Nil, Nil)
+      .groupBy(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
+      .agg(countDistinct(col("bucket")).as("n_shared"))
   }
 }

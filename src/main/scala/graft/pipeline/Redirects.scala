@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -50,22 +50,11 @@ object Redirects {
   def transitiveClosure(edges: DataFrame, maxDepth: Int = 16,
       localThreshold: Long = 2000000L): DataFrame = {
     val (e, nEdges, _) = Loop.materialize(edges.select(col("src"), col("dst")).distinct())
-    // Adaptive fast path: alias graphs are orders of magnitude smaller
-    // than the corpus; below the threshold, a FUNCTIONAL graph (at most
-    // one successor per node — what single-#ALIAS-declaration corpora
-    // produce) resolves on the driver in linear time with memoization.
-    // Memoization is only sound on functional graphs (on general graphs
-    // a node's reachable-terminal set depends on the path taken), so
-    // non-functional graphs fall through to the distributed loop. Same
-    // output contract incl. the maxDepth cap (equivalence tested).
-    if (nEdges <= localThreshold) {
-      resolveLocalFunctional(e, maxDepth.toLong) match {
-        case Some(out) =>
-          Loop.release(e) // collected; the local result reads no checkpoint
-          return out
-        case None => () // non-functional: fall through to the loop
-      }
-    }
+    // alias graphs are orders of magnitude smaller than the corpus:
+    // below the threshold a FUNCTIONAL graph resolves on the driver, with
+    // the same output contract incl. the maxDepth cap (equivalence
+    // tested); a non-functional one falls through to the loop
+    for (out <- DriverGraph.gate(e, nEdges, localThreshold)(_.resolveFunctional(maxDepth))) return out
     // Round 0 is every edge, live: a row (src, cur, path) stands on cur
     // with path = the nodes visited before it. Each round walks the
     // previous round's live rows one hop: a row whose cur has no
@@ -94,62 +83,6 @@ object Redirects {
   }
 
   /**
-   * Driver-side resolver for a small FUNCTIONAL alias graph (at most
-   * one successor per node — what single-#ALIAS-declaration corpora
-   * produce): linear time with memoization, cycles dropped, sources
-   * more than `maxHops` from their terminal unsettled. Memoization is
-   * only sound on functional graphs (on general graphs a node's
-   * reachable-terminal set depends on the path taken), so
-   * non-functional graphs return None and the caller runs its
-   * distributed loop. Shared by [[transitiveClosure]] (hop cap =
-   * maxDepth) and [[transitiveClosureDoubling]] (hop cap = 2^maxRounds).
-   */
-  private def resolveLocalFunctional(e: DataFrame, maxHops: Long): Option[DataFrame] = {
-    val rows = e.collect()
-    val srcs = rows.map(_.get(0))
-    if (srcs.distinct.length != srcs.length) return None
-    val succ = rows.map(r => r.get(0) -> r.get(1)).toMap
-    // memo: node -> Some((root, hops-to-root)) | None (cycle)
-    val memo = scala.collection.mutable.HashMap.empty[Any, Option[(Any, Long)]]
-    def resolve(start: Any): Option[(Any, Long)] = memo.get(start) match {
-      case Some(r) => r
-      case None =>
-        val path = scala.collection.mutable.ArrayBuffer[Any](start)
-        val onPath = scala.collection.mutable.HashSet[Any](start)
-        // res = Some((root, hops from START)) or None for a cycle
-        var res: Option[Option[(Any, Long)]] = None
-        while (res.isEmpty) {
-          val cur = path.last
-          succ.get(cur) match {
-            case None => res = Some(Some((cur, path.length - 1L)))
-            case Some(next) if onPath.contains(next) => res = Some(None)
-            case Some(next) => memo.get(next) match {
-              case Some(Some((r, d))) => res = Some(Some((r, d + path.length)))
-              case Some(None) => res = Some(None)
-              case None => path += next; onPath += next
-            }
-          }
-        }
-        val out = res.get
-        // memoize every node on the walked path: path(i) is i hops
-        // past START, so its distance to the root is d - i
-        path.indices.foreach { i =>
-          memo(path(i)) = out.map { case (r, d) => (r, d - i) }
-        }
-        out
-    }
-    val settled = srcs.flatMap { s =>
-      resolve(s) match {
-        case Some((root, h)) if h <= maxHops => Some((s, root))
-        case _ => None
-      }
-    }
-    val t = e.schema.fields(0).dataType
-    Some(TopicGraph.localFrame(e.sparkSession,
-      settled.toSeq.map { case (s, r) => Row(s, r) }, "src" -> t, "root" -> t))
-  }
-
-  /**
    * Pointer-doubling transitive closure — the SCALE PATH for deep
    * chains on a FUNCTIONAL alias graph (at most one outgoing edge per
    * src, which redirect/alias maps are by construction): after round k
@@ -163,15 +96,10 @@ object Redirects {
   def transitiveClosureDoubling(edges: DataFrame, maxRounds: Int = 16,
       localThreshold: Long = 2000000L): DataFrame = {
     val (e, nEdges, _) = Loop.materialize(edges.select(col("src"), col("dst")).distinct())
-    // same adaptive driver fast path as transitiveClosure (alias graphs
-    // are orders of magnitude under the corpus); hop cap = 2^maxRounds,
+    // same driver fast path as transitiveClosure; hop cap = 2^maxRounds,
     // matching what `maxRounds` doubling rounds can resolve
-    if (nEdges <= localThreshold) {
-      resolveLocalFunctional(e, 1L << math.min(maxRounds, 62)) match {
-        case Some(out) => Loop.release(e); return out
-        case None => ()
-      }
-    }
+    for (out <- DriverGraph.gate(e, nEdges, localThreshold)(
+        _.resolveFunctional(1L << math.min(maxRounds, 62)))) return out
     // f: one row per pointer, (src, cur, done) with done = cur is a
     // terminal (no outgoing edge). A done row never moves again, so
     // each round jumps only the live rows, and the round's
@@ -256,15 +184,10 @@ object Redirects {
       require(maxOut <= 1,
         s"cycleMembers requires a functional graph (max out-degree 1), found $maxOut")
     }
-    // adaptive driver fast path (the pageRank/hopDistance convention):
     // ⌈log₂n⌉ checkpointed self-joins are pure scheduling latency at
     // small n, and a functional graph's cycles fall out of one linear
-    // color walk over the collected edge list
-    if (n <= localThreshold) {
-      val out = cycleMembersLocal(e)
-      Loop.release(e)
-      return out
-    }
+    // walk over the collected edge list
+    for (out <- DriverGraph.gate(e, n, localThreshold)(_.cycleMembers)) return out
     var f = e
     var span = 1L
     var fCount = n
@@ -282,40 +205,5 @@ object Redirects {
       span *= 2
     }
     f.select(col("dst").as("node")).distinct()
-  }
-
-  /** Driver-side twin: three-color walk over the collected functional
-    * edge list — a gray-hit closes a cycle and marks exactly the
-    * segment from the hit back to the walk's tip; same (node) schema
-    * and semantics as the pointer-doubling loop. */
-  private def cycleMembersLocal(e: DataFrame): DataFrame = {
-    val spark = e.sparkSession
-    val succ = scala.collection.mutable.HashMap.empty[Any, Any]
-    e.collect().foreach(r => succ(r.get(0)) = r.get(1))
-    val color = scala.collection.mutable.HashMap.empty[Any, Int] // 1 gray 2 done
-    val onCycle = scala.collection.mutable.LinkedHashSet.empty[Any]
-    succ.keys.foreach { start =>
-      if (!color.contains(start)) {
-        val path = scala.collection.mutable.ArrayBuffer.empty[Any]
-        var cur: Any = start
-        var halted = false
-        while (!halted) {
-          color.get(cur) match {
-            case Some(1) => // gray: the path from cur's position is a cycle
-              onCycle ++= path.drop(path.indexOf(cur))
-              halted = true
-            case Some(_) => halted = true // done: joins a settled walk
-            case None =>
-              color(cur) = 1; path += cur
-              succ.get(cur) match {
-                case Some(nx) => cur = nx
-                case None => halted = true // exits the domain
-              }
-          }
-        }
-        path.foreach(v => color(v) = 2)
-      }
-    }
-    TopicGraph.localFrame(spark, onCycle.toSeq.map(Row(_)), "node" -> e.schema.fields(1).dataType)
   }
 }

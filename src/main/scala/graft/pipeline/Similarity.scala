@@ -734,20 +734,31 @@ object Similarity {
    * foreign seed refused loudly).
    */
   def incrementalAnnCandidates(newVecs: DataFrame, index: DataFrame,
-      tau: Double): DataFrame = {
+      tau: Double): DataFrame =
+    indexBandProbe(newVecs, index, tau)
+      .groupBy(col("vec_id"), col("cand_id"))
+      .agg(max(col("cos")).as("cos")) // identical across band matches
+
+  /** The band probe of a [[signLshIndex]], shared by
+    * [[incrementalAnnCandidates]] and `EventStream.annStream`: each
+    * (vec_id, embedding) probe is band-keyed map-side with the index's
+    * own family ([[signLshIndexMeta]]) and joined to the index on the
+    * bucket; every candidate other than the probe at exact cosine >=
+    * `tau` comes out as (vec_id, cand_id, cos, carry…), once per shared
+    * band. `carry` are probe columns passed through. */
+  private[graft] def indexBandProbe(probes: DataFrame, index: DataFrame, tau: Double,
+      carry: Column*): DataFrame = {
     val (bits, bands) = signLshIndexMeta(index)
-    val keyed = newVecs.select(col("vec_id"), col("embedding").as("pv"),
-      norm(col("embedding")).as("pn"),
-      explode(signBandKeys(col("embedding"), bits, bands)).as("bucket"))
+    val keyed = probes.select((Seq(col("vec_id"), col("embedding").as("pv"),
+      norm(col("embedding")).as("pn")) ++ carry :+
+      explode(signBandKeys(col("embedding"), bits, bands)).as("bucket")): _*)
     val idx = index.select(col("bucket"), col("vec_id").as("cand_id"),
       col("embedding").as("cv"), col("nrm").as("cn"))
     keyed.join(idx, Seq("bucket"))
       .filter(col("vec_id") =!= col("cand_id"))
-      .select(col("vec_id"), col("cand_id"),
-        cosFromNorms(col("pv"), col("pn"), col("cv"), col("cn")).as("cos"))
+      .select((Seq(col("vec_id"), col("cand_id"),
+        cosFromNorms(col("pv"), col("pn"), col("cv"), col("cn")).as("cos")) ++ carry): _*)
       .filter(col("cos") >= tau)
-      .groupBy(col("vec_id"), col("cand_id"))
-      .agg(max(col("cos")).as("cos")) // identical across band matches
   }
 
   /** Bounded PQ training sample: ≤ `trainN` vectors at id stride

@@ -1,8 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 
 /**
  * Topic-graph computations — re-realization of examples/topic-corpus/
@@ -116,13 +115,10 @@ object TopicGraph {
     val (sym, nEdges, _) = Loop.materialize(edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct())
-    // Adaptive: below the threshold the component graph is a DRIVER
-    // problem — the distributed loop pays seconds of scheduling per
-    // round for microseconds of union-find work (measured 16s for a
-    // 3,209-edge graph vs 0.1s collected); dedup-component graphs are
-    // tiny next to the corpus by construction. The contraction path
-    // handles the genuinely large case (tested with localThreshold = 0).
-    val out = if (nEdges <= localThreshold) ccLocal(sym) else ccContraction(sym, maxIter)
+    // dedup-component graphs are tiny next to the corpus by
+    // construction; the contraction path handles the genuinely large case
+    for (out <- DriverGraph.gate(sym, nEdges, localThreshold)(_.connectedComponents)) return out
+    val out = ccContraction(sym, maxIter)
     Loop.release(sym)
     out
   }
@@ -312,49 +308,13 @@ object TopicGraph {
     labels
   }
 
-  /** Driver-side union-find (path compression + min-root labeling) over
-    * a collected small edge list; returns the same (node, label) schema
-    * as the distributed loop. */
-  private def ccLocal(sym: DataFrame): DataFrame = {
-    val spark = sym.sparkSession
-    val rows = sym.collect()
-    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-    // iterative find (walk to root, second pass compresses): the
-    // recursive form builds O(chain) stack frames — a consecutive-id
-    // near-dup chain graph overflows the stack around ~10-50k depth
-    def find(x: Any): Any = {
-      var r = x
-      var p = parent.getOrElseUpdate(r, r)
-      while (p != r) { r = p; p = parent.getOrElseUpdate(r, r) }
-      var c = x
-      while (c != r) { val nxt = parent(c); parent(c) = r; c = nxt }
-      r
-    }
-    rows.foreach { r =>
-      val (ra, rb) = (find(r.get(0)), find(r.get(1)))
-      if (ra != rb) parent(rb) = ra
-    }
-    @inline def lt(a: Any, b: Any): Boolean =
-      a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
-    val minOfRoot = scala.collection.mutable.HashMap.empty[Any, Any]
-    val nodes = parent.keys.toVector
-    nodes.foreach { n =>
-      val r = find(n)
-      minOfRoot.get(r) match {
-        case Some(m) if !lt(n, m) => ()
-        case _ => minOfRoot(r) = n
-      }
-    }
-    val nodeType = sym.schema.fields(0).dataType
-    localFrame(spark, nodes.map(n => Row(n, minOfRoot(find(n)))),
-      "node" -> nodeType, "label" -> nodeType)
-  }
-
-  /** The driver fast-path twins compare collected ids as boxed Any —
-    * an Integer src never equals a Long dst (or Long seed) there,
-    * while the distributed joins cast silently; one id type across
-    * src/dst (and seeds) keeps the spec-pinned-equal paths honest by
-    * refusing the divergence loudly. */
+  /** The driver twins ([[DriverGraph]]) read the collected ids boxed,
+    * once: they sort them by the id type's own `compareTo`, which fails
+    * on an Integer against a Long, and intern them through one boxed
+    * map, which seeds are looked up in, while the distributed joins cast
+    * silently. One id type across src/dst (and seeds) keeps the
+    * spec-pinned-equal paths honest by refusing the divergence loudly,
+    * before any job runs. */
   private[pipeline] def requireOneIdType(op: String, e: DataFrame,
       seeds: Option[DataFrame] = None): Unit = {
     val st = e.schema.fields(0).dataType
@@ -366,15 +326,6 @@ object TopicGraph {
       require(kt == st,
         s"$op: seed type $kt differs from node type $st; cast the seeds")
     }
-  }
-
-  /** A driver twin's result rows as a one-partition frame with the
-    * given (name, type) columns. */
-  private[pipeline] def localFrame(spark: SparkSession, rows: Seq[Row],
-      cols: (String, DataType)*): DataFrame = {
-    import org.apache.spark.sql.types.{StructField, StructType}
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-      StructType(cols.map { case (n, t) => StructField(n, t) }))
   }
 
   /**
@@ -417,11 +368,7 @@ object TopicGraph {
     val sel = edges.select(col("src"), col("dst"))
     requireOneIdType("pageRank", sel)
     val (e, nEdges, _) = Loop.materialize(sel)
-    if (nEdges <= localThreshold) {
-      val out = pageRankLocal(e, iters, damping)
-      Loop.release(e)
-      return out
-    }
+    for (out <- DriverGraph.gate(e, nEdges, localThreshold)(_.pageRank(iters, damping))) return out
     // nodes tagged ONCE with has-outgoing: the per-iteration dangling
     // mass then comes from a filter+sum over the rank relation itself
     // (a V-vs-V anti-join per iteration otherwise — at billions of
@@ -530,39 +477,6 @@ object TopicGraph {
     (wedges.join(orient.select(col("a").as("b"), col("b").as("c")), Seq("b", "c")), orient)
   }
 
-  /** Driver-side power iteration over a collected small edge list —
-    * same math, same (node, rank) schema as the distributed loop. */
-  private def pageRankLocal(e: DataFrame, iters: Int, damping: Double): DataFrame = {
-    val spark = e.sparkSession
-    val rows = e.collect()
-    val adj = scala.collection.mutable.HashMap.empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
-    val nodeSet = scala.collection.mutable.LinkedHashSet.empty[Any]
-    rows.foreach { r =>
-      val (s, d) = (r.get(0), r.get(1))
-      nodeSet += s; nodeSet += d
-      adj.getOrElseUpdate(s, scala.collection.mutable.ArrayBuffer.empty) += d
-    }
-    val nodes = nodeSet.toVector
-    val n = nodes.size.toDouble
-    var rank = nodes.map(nd => nd -> 1.0 / n).toMap
-    var it = 0
-    while (it < iters) {
-      val in = scala.collection.mutable.HashMap.empty[Any, Double].withDefaultValue(0.0)
-      var dang = 0.0
-      nodes.foreach { nd =>
-        adj.get(nd) match {
-          case Some(ds) => val c = rank(nd) / ds.size; ds.foreach(d => in(d) += c)
-          case None => dang += rank(nd)
-        }
-      }
-      rank = nodes.map(nd =>
-        nd -> ((1 - damping) / n + damping * (in(nd) + dang / n))).toMap
-      it += 1
-    }
-    localFrame(spark, nodes.map(nd => Row(nd, rank(nd))),
-      "node" -> e.schema.fields(0).dataType, "rank" -> DoubleType)
-  }
-
   /**
    * Personalized PageRank (random walk with restart — Haveliwala 2002,
    * Jeh & Widom 2003): teleport mass restarts to a SEED distribution
@@ -594,11 +508,8 @@ object TopicGraph {
     val sd = seeds.select(seeds.columns.head).toDF("node").distinct()
     requireOneIdType("personalizedPageRank", sel, Some(sd))
     val (e, nEdges, _) = Loop.materialize(sel)
-    if (nEdges <= localThreshold) {
-      val out = pprLocal(e, sd, iters, damping)
-      Loop.release(e)
-      return out
-    }
+    for (out <- DriverGraph.gate(e, nEdges, localThreshold)(
+        _.personalizedPageRank(sd, iters, damping))) return out
     val nodes0 = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct()
@@ -641,43 +552,6 @@ object TopicGraph {
     ranks.select(col("node"), col("rank"))
   }
 
-  /** Driver-side PPR twin — same math, same schema as the distributed
-    * loop (the [[pageRankLocal]] pattern). */
-  private def pprLocal(e: DataFrame, seeds: DataFrame, iters: Int,
-      damping: Double): DataFrame = {
-    val spark = e.sparkSession
-    val rows = e.collect()
-    val adj = scala.collection.mutable.HashMap.empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
-    val nodeSet = scala.collection.mutable.LinkedHashSet.empty[Any]
-    rows.foreach { r =>
-      val (s, d) = (r.get(0), r.get(1))
-      nodeSet += s; nodeSet += d
-      adj.getOrElseUpdate(s, scala.collection.mutable.ArrayBuffer.empty) += d
-    }
-    val nodes = nodeSet.toVector
-    val seedSet = seeds.collect().map(_.get(0)).toSet.intersect(nodeSet.toSet)
-    require(seedSet.nonEmpty, "personalizedPageRank: no seed is a graph node")
-    val mass = 1.0 / seedSet.size
-    def m(nd: Any): Double = if (seedSet(nd)) mass else 0.0
-    var rank = nodes.map(nd => nd -> m(nd)).toMap
-    var it = 0
-    while (it < iters) {
-      val in = scala.collection.mutable.HashMap.empty[Any, Double].withDefaultValue(0.0)
-      var dang = 0.0
-      nodes.foreach { nd =>
-        adj.get(nd) match {
-          case Some(ds) => val c = rank(nd) / ds.size; ds.foreach(d => in(d) += c)
-          case None => dang += rank(nd)
-        }
-      }
-      rank = nodes.map(nd =>
-        nd -> ((1 - damping) * m(nd) + damping * (in(nd) + dang * m(nd)))).toMap
-      it += 1
-    }
-    localFrame(spark, nodes.map(nd => Row(nd, rank(nd))),
-      "node" -> e.schema.fields(0).dataType, "rank" -> DoubleType)
-  }
-
   /**
    * Multi-source BFS hop distance: min #edges from ANY seed to each
    * reachable node — the "how far is this entity from the document's
@@ -706,11 +580,7 @@ object TopicGraph {
     val sd = seeds.select(seeds.columns.head).toDF("node").distinct()
     requireOneIdType("hopDistance", sel, Some(sd))
     val (e, nEdges, _) = Loop.materialize(sel)
-    if (nEdges <= localThreshold) {
-      val out = hopDistanceLocal(e, sd)
-      Loop.release(e)
-      return out
-    }
+    for (out <- DriverGraph.gate(e, nEdges, localThreshold)(_.hopDistance(sd))) return out
     var (dist, frontierCount, _) = Loop.materialize(sd.select(col("node"), lit(0).as("dist")))
     var frontier = dist
     var layersSinceCompact = 0
@@ -1131,33 +1001,6 @@ object TopicGraph {
       .reduce(_ unionByName _)
   }
 
-  /** Driver-side BFS twin — same (node, dist) schema and semantics as
-    * the distributed frontier loop. */
-  private def hopDistanceLocal(e: DataFrame, seeds: DataFrame): DataFrame = {
-    val spark = e.sparkSession
-    val adj = scala.collection.mutable.HashMap.empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
-    e.collect().foreach { r =>
-      adj.getOrElseUpdate(r.get(0), scala.collection.mutable.ArrayBuffer.empty) += r.get(1)
-    }
-    val dist = scala.collection.mutable.LinkedHashMap.empty[Any, Int]
-    var frontier = seeds.collect().map(_.get(0)).toVector.distinct
-    frontier.foreach(s => dist(s) = 0)
-    var layer = 0
-    while (frontier.nonEmpty) {
-      layer += 1
-      val next = scala.collection.mutable.LinkedHashSet.empty[Any]
-      frontier.foreach { nd =>
-        adj.get(nd).foreach(_.foreach { d =>
-          if (!dist.contains(d)) next += d
-        })
-      }
-      next.foreach(d => dist(d) = layer)
-      frontier = next.toVector
-    }
-    localFrame(spark, dist.toSeq.map { case (nd, dd) => Row(nd, dd) },
-      "node" -> e.schema.fields(0).dataType, "dist" -> IntegerType)
-  }
-
   /**
    * k-core decomposition by iterative peeling (Seidman 1983; the
    * distributed peel is the standard Pregel-style formulation, cf.
@@ -1193,11 +1036,7 @@ object TopicGraph {
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))
         .filter(col("src") =!= col("dst")))
       .distinct())
-    if (nEdges <= localThreshold) {
-      val out = kCoreLocal(sym, k)
-      Loop.release(sym)
-      return out
-    }
+    for (out <- DriverGraph.gate(sym, nEdges, localThreshold)(_.kCore(k))) return out
     var e = sym
     var n = nEdges
     var it = 0
@@ -1220,40 +1059,6 @@ object TopicGraph {
       e.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg")))
     Loop.release(e)
     out
-  }
-
-  /** Driver-side peel over a collected small edge list — same
-    * fixpoint, same (node, core_deg) schema as the distributed loop. */
-  private def kCoreLocal(sym: DataFrame, k: Int): DataFrame = {
-    val spark = sym.sparkSession
-    val adj = scala.collection.mutable.HashMap
-      .empty[Any, scala.collection.mutable.HashSet[Any]]
-    sym.collect().foreach { r =>
-      adj.getOrElseUpdate(r.get(0), scala.collection.mutable.HashSet.empty) += r.get(1)
-    }
-    // queue-driven peel: removing a node decrements neighbors; any
-    // neighbor falling below k joins the queue (linear in |E|)
-    val queue = scala.collection.mutable.Queue.empty[Any]
-    adj.foreach { case (n, ns) => if (ns.size < k) queue += n }
-    val dead = scala.collection.mutable.HashSet.empty[Any]
-    while (queue.nonEmpty) {
-      val n = queue.dequeue()
-      if (!dead.contains(n)) {
-        dead += n
-        adj(n).foreach { m =>
-          if (!dead.contains(m)) {
-            val ms = adj(m)
-            ms -= n
-            if (ms.size < k) queue += m
-          }
-        }
-      }
-    }
-    val out = adj.iterator
-      .filter { case (n, ns) => !dead.contains(n) && ns.size >= k }
-      .map { case (n, ns) => Row(n, ns.size.toLong) }
-      .toVector
-    localFrame(spark, out, "node" -> sym.schema.fields(0).dataType, "core_deg" -> LongType)
   }
 
   /**
@@ -1287,11 +1092,7 @@ object TopicGraph {
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))
         .filter(col("src") =!= col("dst")))
       .distinct())
-    if (nEdges <= localThreshold) {
-      val out = lpaLocal(sym, iters)
-      Loop.release(sym)
-      return out
-    }
+    for (out <- DriverGraph.gate(sym, nEdges, localThreshold)(_.labelPropagation(iters))) return out
     val (labels0, _, _) = Loop.materialize(sym.select(col("src").as("node")).distinct()
       .withColumn("community", col("node")))
     val w = org.apache.spark.sql.expressions.Window
@@ -1307,39 +1108,6 @@ object TopicGraph {
     }
     (sym +: rounds.init).foreach(Loop.release)
     rounds.last
-  }
-
-  /** Driver-side synchronous LPA over a collected small edge list —
-    * same rounds, same tiebreak, same (node, community) schema. */
-  private def lpaLocal(sym: DataFrame, iters: Int): DataFrame = {
-    val spark = sym.sparkSession
-    val adj = scala.collection.mutable.HashMap
-      .empty[Any, scala.collection.mutable.ArrayBuffer[Any]]
-    sym.collect().foreach { r =>
-      adj.getOrElseUpdate(r.get(0), scala.collection.mutable.ArrayBuffer.empty) += r.get(1)
-    }
-    @inline def lt(a: Any, b: Any): Boolean =
-      a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
-    var labels: Map[Any, Any] = adj.keys.map(n => n -> n).toMap
-    var it = 0
-    while (it < iters) {
-      labels = adj.iterator.map { case (n, ns) =>
-        val counts = scala.collection.mutable.HashMap.empty[Any, Long]
-        ns.foreach { m => counts(labels(m)) = counts.getOrElse(labels(m), 0L) + 1L }
-        // max count, ties toward the smallest label — the window's
-        // (c DESC, community ASC) order exactly
-        var best: Any = null
-        var bestC = -1L
-        counts.foreach { case (l, c) =>
-          if (c > bestC || (c == bestC && lt(l, best))) { best = l; bestC = c }
-        }
-        n -> best
-      }.toMap
-      it += 1
-    }
-    val nodeType = sym.schema.fields(0).dataType
-    localFrame(spark, labels.iterator.map { case (n, l) => Row(n, l) }.toVector,
-      "node" -> nodeType, "community" -> nodeType)
   }
 
   /**
@@ -1380,11 +1148,7 @@ object TopicGraph {
     requireOneIdType("hits", sel)
     val (e, nEdges, _) = Loop.materialize(sel)
     require(nEdges > 0, "hits: empty edge relation")
-    if (nEdges <= localThreshold) {
-      val out = hitsLocal(e, iters)
-      Loop.release(e)
-      return out
-    }
+    for (out <- DriverGraph.gate(e, nEdges, localThreshold)(_.hits(iters))) return out
     val (nodes, _, _) = Loop.materialize(e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node")))
       .distinct())
@@ -1681,11 +1445,7 @@ object TopicGraph {
     require(rounds >= 1, s"kTrussPeel: rounds=$rounds must be >= 1")
     val und = simpleUndirected(edges)
     var (cur, n, _) = Loop.materialize(und)
-    if (n <= localThreshold) {
-      val out = kTrussLocal(cur, k, rounds)
-      Loop.release(cur)
-      return out
-    }
+    for (out <- DriverGraph.gate(cur, n, localThreshold)(_.kTrussPeel(k, rounds))) return out
     var r = 0
     var done = n == 0
     while (r < rounds && !done) {
@@ -1718,64 +1478,5 @@ object TopicGraph {
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("sup")))
     orient.unpersist(false)
     sup
-  }
-
-  /** Driver-side k-truss peel twin — same canonical (u, v) schema and
-    * round semantics as the distributed loop. */
-  private def kTrussLocal(und: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val spark = und.sparkSession
-    var es = und.collect().map(r => (r.get(0), r.get(1))).toSet
-    var r = 0
-    var done = es.isEmpty
-    while (r < rounds && !done) {
-      val adj = scala.collection.mutable.HashMap
-        .empty[Any, scala.collection.mutable.HashSet[Any]]
-      es.foreach { case (u, v) =>
-        adj.getOrElseUpdate(u, scala.collection.mutable.HashSet.empty) += v
-        adj.getOrElseUpdate(v, scala.collection.mutable.HashSet.empty) += u
-      }
-      val next = es.filter { case (u, v) =>
-        val (su, sv) = (adj(u), adj(v))
-        val (small, big) = if (su.size <= sv.size) (su, sv) else (sv, su)
-        small.count(big.contains) >= k - 2
-      }
-      done = next.size == es.size || next.isEmpty
-      es = next
-      r += 1
-    }
-    val tpe = und.schema.fields(0).dataType
-    localFrame(spark, es.toVector.map { case (u, v) => Row(u, v) }, "u" -> tpe, "v" -> tpe)
-  }
-
-  /** Driver-side HITS twin — same math, same (node, hub, auth) schema
-    * as the distributed loop. */
-  private def hitsLocal(e: DataFrame, iters: Int): DataFrame = {
-    val spark = e.sparkSession
-    val rows = e.collect()
-    val nodeSet = scala.collection.mutable.LinkedHashSet.empty[Any]
-    val edgeList = rows.map { r =>
-      val (s, d) = (r.get(0), r.get(1))
-      nodeSet += s; nodeSet += d
-      (s, d)
-    }
-    val nodes = nodeSet.toVector
-    var auth = nodes.map(nd => nd -> 1.0).toMap
-    var hub = Map.empty[Any, Double]
-    var it = 0
-    while (it < iters) {
-      val hRaw = scala.collection.mutable.HashMap.empty[Any, Double]
-        .withDefaultValue(0.0)
-      edgeList.foreach { case (s, d) => hRaw(s) += auth(d) }
-      val ht = hRaw.values.sum
-      hub = nodes.map(nd => nd -> hRaw(nd) / ht).toMap
-      val aRaw = scala.collection.mutable.HashMap.empty[Any, Double]
-        .withDefaultValue(0.0)
-      edgeList.foreach { case (s, d) => aRaw(d) += hub(s) }
-      val at = aRaw.values.sum
-      auth = nodes.map(nd => nd -> aRaw(nd) / at).toMap
-      it += 1
-    }
-    localFrame(spark, nodes.map(nd => Row(nd, hub(nd), auth(nd))),
-      "node" -> e.schema.fields(0).dataType, "hub" -> DoubleType, "auth" -> DoubleType)
   }
 }

@@ -250,22 +250,11 @@ object EventStream {
    */
   def annStream(probes: DataFrame, lshIndex: DataFrame, tau: Double,
       tsCol: String = "ts"): DataFrame = {
-    val sim = graft.pipeline.Similarity
-    val (bits, bands) = sim.signLshIndexMeta(lshIndex)
     val marked = probes
       .withColumn(tsCol, col(tsCol).cast("timestamp"))
       .withWatermark(tsCol, "10 minutes")
-    val keyed = marked.select(col("vec_id").as("probe_id"),
-      col("embedding").as("pv"), sim.norm(col("embedding")).as("pn"), col(tsCol),
-      explode(sim.signBandKeys(col("embedding"), bits, bands)).as("bucket"))
-    val idx = lshIndex.select(col("bucket"), col("vec_id").as("cand_id"),
-      col("embedding").as("cv"), col("nrm").as("cn"))
-    keyed.join(idx, Seq("bucket"))
-      .filter(col("probe_id") =!= col("cand_id"))
-      .select(col("probe_id"), col("cand_id"),
-        sim.cosFromNorms(col("pv"), col("pn"), col("cv"), col("cn")).as("cos"),
-        col(tsCol))
-      .filter(col("cos") >= tau)
+    graft.pipeline.Similarity.indexBandProbe(marked, lshIndex, tau, col(tsCol))
+      .withColumnRenamed("vec_id", "probe_id")
       .dropDuplicatesWithinWatermark("probe_id", "cand_id")
   }
 

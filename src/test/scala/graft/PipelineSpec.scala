@@ -743,12 +743,13 @@ class PipelineSpec extends AnyFunSuite {
     def settle(): Unit = { System.gc(); Thread.sleep(300) } // let ContextCleaner drain
     settle()
     // each distributed loop (threshold forced to 0) leaves at most ONE
-    // persisted RDD behind — its own output — however many rounds it ran
+    // persisted RDD behind — its own output — however many rounds it ran;
+    // a driver twin's output is a parallelized frame, so none
     var before = sc.getPersistentRDDs.size
-    def leavesAtMostItsOutput(op: String)(run: => Unit): Unit = {
+    def leavesAtMostItsOutput(op: String, outputs: Int = 1)(run: => Unit): Unit = {
       run
       val after = sc.getPersistentRDDs.size
-      assert(after - before <= 1, s"$op leaked ${after - before - 1} persisted RDDs")
+      assert(after - before <= outputs, s"$op leaked ${after - before - outputs} persisted RDDs")
       before = after
     }
     // a 20-level chain
@@ -779,6 +780,22 @@ class PipelineSpec extends AnyFunSuite {
     val hb = TopicGraph.hyperBall(ring, 3)
     leavesAtMostItsOutput("hyperBall")(hb.count())
     leavesAtMostItsOutput("effectiveDiameter")(TopicGraph.effectiveDiameter(edges))
+    // the same ops on their driver twins (default threshold): the one
+    // gate frees the edge checkpoint it collected
+    def onDriver(op: String)(out: => org.apache.spark.sql.DataFrame): Unit =
+      leavesAtMostItsOutput(s"$op (driver)", outputs = 0)(out.count())
+    val seeds = Seq(0L).toDF("node")
+    onDriver("transitiveClosure")(Redirects.transitiveClosure(chain))
+    onDriver("transitiveClosureDoubling")(Redirects.transitiveClosureDoubling(chain))
+    onDriver("connectedComponents")(TopicGraph.connectedComponents(edges))
+    onDriver("pageRank")(TopicGraph.pageRank(edges))
+    onDriver("personalizedPageRank")(TopicGraph.personalizedPageRank(edges, seeds))
+    onDriver("hopDistance")(TopicGraph.hopDistance(edges, seeds))
+    onDriver("kCore")(TopicGraph.kCore(ring, k = 3))
+    onDriver("labelPropagation")(TopicGraph.labelPropagation(ring, iters = 3))
+    onDriver("kTrussPeel")(TopicGraph.kTrussPeel(ring, k = 3, rounds = 4))
+    onDriver("hits")(TopicGraph.hits(ring))
+    onDriver("cycleMembers")(Redirects.cycleMembers(rho))
   }
 
   test("simhash: near-identical texts have small hamming distance") {
@@ -1010,6 +1027,15 @@ class PipelineSpec extends AnyFunSuite {
           localThreshold = if (trial % 2 == 0) 0L else 4000000L)
         .as[(Long, Long)].collect().toMap
       assert(got == want, s"trial $trial")
+      // the same graph on String ids, where "n10" < "n9": both paths
+      // label a component with its smallest id in String order
+      val named = edges.map { case (a, b) => (s"n$a", s"n$b") }.toDF("src", "dst")
+      val wantNamed = nodes.map(v => s"n$v" -> byRoot(find(v)).map(u => s"n$u").min).toMap
+      for (t <- Seq(0L, 4000000L)) {
+        val gotNamed = TopicGraph.connectedComponents(named, localThreshold = t)
+          .as[(String, String)].collect().toMap
+        assert(gotNamed == wantNamed, s"trial $trial String ids, localThreshold $t")
+      }
     }
   }
 
@@ -2308,6 +2334,14 @@ class PipelineSpec extends AnyFunSuite {
       val local = TopicGraph.labelPropagation(df, iters)
         .as[(Long, Long)].collect().toMap
       assert(dist == local, s"trial $trial iters=$iters")
+      // String ids, where "n10" < "n9": the smallest-label tie-break
+      // follows String order on both paths
+      val named = edges.map { case (a, b) => (s"n$a", s"n$b") }.toDF("src", "dst")
+      val distNamed = TopicGraph.labelPropagation(named, iters, localThreshold = 0)
+        .as[(String, String)].collect().toMap
+      val localNamed = TopicGraph.labelPropagation(named, iters)
+        .as[(String, String)].collect().toMap
+      assert(distNamed == localNamed, s"trial $trial iters=$iters String ids")
     }
   }
 
